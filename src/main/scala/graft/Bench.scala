@@ -508,11 +508,11 @@ object Bench {
 object BenchOne {
 
   /** One-row file-source stream through a stateful dropDuplicates on
-    * the replay backend (StreamTune scope), noop sink — compiles and
-    * runs the whole micro-batch + state-commit path once. Engine
-    * fixed cost, same class as the scan/shuffle/codegen warm-up; on a
-    * fresh JVM it otherwise dominates rep 1 AND leaks compile residue
-    * into rep 2 (r10 record: q157 rep 2 carried jit=8.7 s ≈ wall;
+    * the replay backend (Replay.withStatePartitions), noop sink —
+    * compiles and runs the whole micro-batch + state-commit path once.
+    * Engine fixed cost, same class as the scan/shuffle/codegen warm-up;
+    * on a fresh JVM it otherwise dominates rep 1 AND leaks compile
+    * residue into rep 2 (r10 record: q157 rep 2 carried jit=8.7 s ≈ wall;
     * idle rep 3 landed at 5.96 s — min-of-2 never reached steady
     * state). Per-query PLAN compilation still lands inside the
     * measurement; only the query-independent machinery is warmed. */
@@ -524,7 +524,7 @@ object BenchOne {
     stage.mkdirs()
     Seq((1L, "warm")).toDF("k", "v")
       .coalesce(1).write.mode("overwrite").parquet(stage.getAbsolutePath)
-    val q = graft.streaming.StreamTune.withStatePartitions(spark) {
+    val q = graft.streaming.Replay.withStatePartitions(spark) {
       spark.readStream.schema("k BIGINT, v STRING")
         .parquet(stage.getAbsolutePath)
         .dropDuplicates("k")

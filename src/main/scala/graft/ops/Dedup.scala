@@ -417,52 +417,4 @@ object Dedup {
       |WHERE bit_count(xor(sha, shb)) <= 6
       |ORDER BY a_id, b_id""".stripMargin
   }
-
-  // ---- 5. duplicated spans (substring-level dedup signal) -------
-
-  /** Top duplicated 8-token spans ACROSS documents — the
-    * substring-granularity signal behind suffix-array training-data
-    * dedup ("Deduplicating Training Data Makes Language Models
-    * Better", Lee et al. 2021): document-level dedup misses templates
-    * and boilerplate that recur inside otherwise-distinct pages.
-    *
-    * Shape: one scan explodes each doc's 8-gram windows; the shuffle
-    * carries `(gram_hash60, doc_id)` plus one bounded ≤8-token span
-    * string per partial-agg bucket (never full documents); a
-    * two-phase count/count-distinct per hash finds grams shared by
-    * ≥ 2 distinct docs. At 100 TB this is the q63-contamination join
-    * shape turned inward: hash-bucketed, length-independent. */
-  def dupSpans(spark: SparkSession, sfDir: String): DataFrame = {
-    val grams = Tables.documents(spark, sfDir)
-      .repartition(spark.sparkContext.defaultParallelism)
-      .withColumn("toks", TextOps.tokens(col("text")))
-      .select(col("doc_id"),
-        explode(TextOps.shinglesFromTokens(col("toks"), 8)).as("s"))
-    grams
-      .select(col("doc_id"), TextOps.hash60(col("s")).as("g"), col("s"))
-      .groupBy(col("g"))
-      .agg(countDistinct(col("doc_id")).as("n_docs"),
-        count(lit(1)).as("n_occ"),
-        min(col("s")).as("span"))
-      .filter(col("n_docs") >= 2)
-      .select(col("span"), col("n_docs"), col("n_occ"))
-      .orderBy(col("n_docs").desc, col("n_occ").desc, col("span"))
-      .limit(20)
-  }
-
-  val dupSpansSql: String = {
-    val grams8 =
-      s"""CASE WHEN len($tokSql) < 8 THEN [COALESCE(array_to_string($tokSql, ' '), '')]
-         |     ELSE list_transform(generate_series(1, len($tokSql) - 7),
-         |            i -> array_to_string(($tokSql)[i:i+7], ' ')) END""".stripMargin
-    s"""WITH grams AS (
-      |  SELECT doc_id, unnest($grams8) AS s FROM documents),
-      |g AS (
-      |  SELECT doc_id, ('0x' || substr(md5(s), 1, 15))::BIGINT AS g, s
-      |  FROM grams)
-      |SELECT MIN(s) AS span, COUNT(DISTINCT doc_id) AS n_docs,
-      |  COUNT(*) AS n_occ
-      |FROM g GROUP BY g.g HAVING COUNT(DISTINCT doc_id) >= 2
-      |ORDER BY n_docs DESC, n_occ DESC, span LIMIT 20""".stripMargin
-  }
 }

@@ -36,7 +36,8 @@ import org.apache.spark.sql.DataFrame
 object Materialize {
 
   /** Session conf selecting the mode: `local` (default) or
-    * `reliable`. Read per call so tests can flip it at runtime. */
+    * `reliable`. Read per call so tests can flip it at runtime; any
+    * other value fails fast rather than silently pinning locally. */
   val ModeKey = "spark.graft.materialize.mode"
 
   def pin(df: DataFrame, eager: Boolean = true): DataFrame =
@@ -46,7 +47,19 @@ object Materialize {
           s"$ModeKey=reliable needs sparkContext.setCheckpointDir on " +
             "durable storage")
         df.checkpoint(eager)
-      case _ => df.localCheckpoint(eager)
+      case Some("local") | None => df.localCheckpoint(eager)
+      case Some(other) =>
+        throw new IllegalArgumentException(
+          s"$ModeKey must be local or reliable, got '$other'")
+    }
+
+  /** Drop a [[pin]]'s blocks once nothing reads the pinned frame
+    * again. The frame is unusable afterwards: its lineage is
+    * truncated, so the blocks cannot be recomputed. */
+  def release(pinned: DataFrame): Unit =
+    pinned.queryExecution.logical.foreach {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist()
+      case _ =>
     }
 
   /** `df.pin()` syntax so call sites read like the

@@ -116,9 +116,4 @@ object Planted {
       s"[$site] planted-id offset $offset collides with the organic " +
         s"id range (max=$maxId at $where): range-derived origin " +
         "classification would misreport — re-key the carving")
-
-  /** [[assertIdHeadroom]] over the documents table's doc_id space. */
-  def assertHeadroom(spark: SparkSession, sfDir: String,
-      offset: Long, site: String): Unit =
-    assertIdHeadroom(maxDocId(spark, sfDir), offset, site, sfDir)
 }

@@ -71,19 +71,13 @@ object BlocklistScreen {
     * exercised the incremental-state path. */
   def streamedAudit(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val base = graft.Scratch.dir("stream_audit", sfDir)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(base), true)
+    val base = Replay.scratch(spark, "stream_audit", sfDir)
     val stage = s"$base/stage"
     Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
       .repartition(4).write.parquet(stage)
-    val src = spark.readStream
-      .schema("doc_id BIGINT, text STRING")
-      .option("maxFilesPerTrigger", 1)
-      .parquet(stage).as[Doc]
+    val src = Replay.source(spark, "doc_id BIGINT, text STRING", stage).as[Doc]
     val snap = s"$base/snapshot"
-    val q = StreamTune.withStatePartitions(spark) {
+    val q = Replay.withStatePartitions(spark) {
       runningAudit(src).writeStream
         .outputMode("complete")
         .option("checkpointLocation", s"$base/ckpt")
@@ -92,10 +86,7 @@ object BlocklistScreen {
         }
         .start()
     }
-    try q.processAllAvailable() finally q.stop()
-    val batches = q.recentProgress.count(_.numInputRows > 0)
-    require(batches >= 2,
-      s"streaming audit must run multiple micro-batches, saw $batches")
+    Replay.drain(q, 2, "streaming audit")
     spark.read.parquet(snap).orderBy(col("pattern"))
   }
 

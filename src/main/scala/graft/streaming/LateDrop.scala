@@ -52,12 +52,8 @@ object LateDrop {
 
   /** q197: append-mode windowed counts under planted late arrivals. */
   def streamedLateDrops(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = graft.Scratch.dir("stream_late", sfDir)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(base), true)
-    val stage = new java.io.File(base, "stage")
-    stage.mkdirs()
+    val base = Replay.scratch(spark, "stream_late", sfDir)
+    val stage = s"$base/stage"
     // materialized once (r16, guide §2.4): the max/min scalar probes
     // and three of the staged batch writes each re-scanned events —
     // five passes for one slim (ts, event_type) relation
@@ -93,38 +89,21 @@ object LateDrop {
     import spark.implicits._
     val advance = Seq((new java.sql.Timestamp(mx.getTime + 30 * 60 * 1000),
       "advance")).toDF("ts", "event_type")
-    val batches = Seq(
+    Replay.stage(stage, Seq(
       ev,
       ev.filter(col("ts") === mx),
       lateSlice,
-      advance)
-    batches.zipWithIndex.foreach { case (b, i) =>
-      val tmp = s"$base/tmp$i"
-      b.coalesce(1).write.parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.startsWith("part-")
-          && f.getName.endsWith(".parquet"))
-        .getOrElse(sys.error(s"no parquet part written under $tmp"))
-      val dst = new java.io.File(stage, f"b$i%02d.parquet")
-      java.nio.file.Files.move(part.toPath, dst.toPath)
-      require(dst.setLastModified(1400000000000L + i * 60000L),
-        s"cannot pin mtime on $dst")
-    }
-    val src = spark.readStream
-      .schema("ts TIMESTAMP, event_type STRING")
-      .option("maxFilesPerTrigger", 1)
-      .parquet(stage.getAbsolutePath)
-    val q = StreamTune.withStatePartitions(spark) {
+      advance))
+    graft.ops.Materialize.release(ev)
+    val src = Replay.source(spark, "ts TIMESTAMP, event_type STRING", stage)
+    val q = Replay.withStatePartitions(spark) {
       WindowedStats.windowedCounts(src).writeStream
         .outputMode("append").format("parquet")
         .option("path", s"$base/out")
         .option("checkpointLocation", s"$base/ckpt")
         .start()
     }
-    try q.processAllAvailable() finally q.stop()
-    val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-    require(dataBatches >= 4,
-      s"late-drop replay needs its 4 micro-batches, saw $dataBatches")
+    Replay.drain(q, 4, "late-drop replay")
     spark.read.parquet(s"$base/out")
       .orderBy(col("w_start"), col("event_type"))
   }

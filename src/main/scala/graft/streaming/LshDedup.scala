@@ -108,8 +108,8 @@ object LshDedup {
     * Determinism: the batch SPLIT is closed-form (`doc_id %
     * StreamBatches`) and the batch ORDER is pinned by staging each
     * batch as one file with strictly increasing modification times
-    * (the file source drains oldest-first under `maxFilesPerTrigger
-    * 1` — hard-asserted ≥ 2 data micro-batches). Within a batch the
+    * (the file source drains oldest-first, one file per trigger —
+    * hard-asserted ≥ 2 data micro-batches). Within a batch the
     * bucket canonical is a min — shuffle-order-insensitive — so the
     * assignment depends only on (split, order), both pinned. That
     * makes the inherently ORDER-DEPENDENT streaming answer (an early
@@ -125,36 +125,17 @@ object LshDedup {
     * parquet, not driver memory. */
   def streamedDedup(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val base = graft.Scratch.dir("stream_lsh", sfDir)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(base), true)
-    val stage = new java.io.File(base, "stage")
-    stage.mkdirs()
+    val base = Replay.scratch(spark, "stream_lsh", sfDir)
+    val stage = s"$base/stage"
     // materialize the corpus once (r16, guide §2.4): the four staged
     // writes below each re-ran the corpusNear union + text scan and
     // the coalesce(1) collapsed each of those scans to ONE task; off
     // the pin they are cheap block reads
     val docs = graft.ops.Materialize.pin(Dedup.corpusNear(spark, sfDir))
-    (0 until StreamBatches).foreach { b =>
-      val tmp = s"$base/tmp$b"
-      docs.filter(pmod(col("doc_id"), lit(StreamBatches.toLong)) === b)
-        .coalesce(1).write.parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.startsWith("part-")
-          && f.getName.endsWith(".parquet"))
-        .getOrElse(sys.error(s"no parquet part written under $tmp"))
-      val dst = new java.io.File(stage, f"b$b%02d.parquet")
-      java.nio.file.Files.move(part.toPath, dst.toPath)
-      // strictly increasing mtimes pin the drain order (fixed epoch
-      // base keeps reruns byte-identical)
-      require(dst.setLastModified(1400000000000L + b * 60000L),
-        s"cannot pin mtime on $dst")
-    }
-    val src = spark.readStream
-      .schema("doc_id BIGINT, text STRING")
-      .option("maxFilesPerTrigger", 1)
-      .parquet(stage.getAbsolutePath).as[Doc]
+    Replay.stage(stage, (0 until StreamBatches).map(b =>
+      docs.filter(pmod(col("doc_id"), lit(StreamBatches.toLong)) === b)))
+    graft.ops.Materialize.release(docs)
+    val src = Replay.source(spark, "doc_id BIGINT, text STRING", stage).as[Doc]
     // spread the CPU-bound signature pass (tokenize + 16 minhash
     // perms per doc in [[bandKeys]]) across the cores: each staged
     // file is ONE input split, so without this every micro-batch
@@ -163,17 +144,14 @@ object LshDedup {
     // per-bucket canonical is a min over the batch, so the batch
     // SPLIT alone fixes the answer; partitioning within it cannot.
     val par = src.repartition(spark.sparkContext.defaultParallelism)
-    val q = StreamTune.withStatePartitions(spark) {
+    val q = Replay.withStatePartitions(spark) {
       assignCanonical(par).writeStream
         .outputMode("append").format("parquet")
         .option("path", s"$base/assign")
         .option("checkpointLocation", s"$base/ckpt")
         .start()
     }
-    try q.processAllAvailable() finally q.stop()
-    val batches = q.recentProgress.count(_.numInputRows > 0)
-    require(batches >= 2,
-      s"streaming dedup must run multiple micro-batches, saw $batches")
+    Replay.drain(q, 2, "streaming dedup")
     spark.read.parquet(s"$base/assign")
       .groupBy(col("doc_id")).agg(min(col("canonical_id")).as("mc"))
       .withColumn("batch", pmod(col("doc_id"), lit(StreamBatches.toLong)))

@@ -150,44 +150,25 @@ object RateLimit {
     * COUNT is min(tokens, arrivals) whichever URLs win the tokens. */
   def ratedAdmission(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val base = graft.Scratch.dir("stream_ratelimit", sfDir)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(base), true)
-    val stage = new java.io.File(base, "stage")
-    stage.mkdirs()
+    val base = Replay.scratch(spark, "stream_ratelimit", sfDir)
+    val stage = s"$base/stage"
     // materialized once (r16, guide §2.4): the four per-tick staged
     // writes each re-ran the two-way documents union under a
     // coalesce(1) single task; off the pin they are block reads
     val cand = graft.ops.Materialize.pin(candidates(spark, sfDir))
-    (0 until VTicks).foreach { b =>
-      val tmp = s"$base/tmp$b"
-      cand.filter(col("vtime") === b.toLong)
-        .coalesce(1).write.parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.startsWith("part-")
-          && f.getName.endsWith(".parquet"))
-        .getOrElse(sys.error(s"no parquet part written under $tmp"))
-      val dst = new java.io.File(stage, f"b$b%02d.parquet")
-      java.nio.file.Files.move(part.toPath, dst.toPath)
-      require(dst.setLastModified(1400000000000L + b * 60000L),
-        s"cannot pin mtime on $dst")
-    }
-    val src = spark.readStream
-      .schema("domain STRING, url STRING, vtime BIGINT")
-      .option("maxFilesPerTrigger", 1)
-      .parquet(stage.getAbsolutePath).as[TimedCandidate]
-    val q = StreamTune.withStatePartitions(spark) {
+    Replay.stage(stage,
+      (0 until VTicks).map(b => cand.filter(col("vtime") === b.toLong)))
+    graft.ops.Materialize.release(cand)
+    val src = Replay.source(spark,
+      "domain STRING, url STRING, vtime BIGINT", stage).as[TimedCandidate]
+    val q = Replay.withStatePartitions(spark) {
       admitVirtual(src).writeStream
         .outputMode("append").format("parquet")
         .option("path", s"$base/verdicts")
         .option("checkpointLocation", s"$base/ckpt")
         .start()
     }
-    try q.processAllAvailable() finally q.stop()
-    val batches = q.recentProgress.count(_.numInputRows > 0)
-    require(batches >= VTicks,
-      s"rate-limit replay must drain all $VTicks staged ticks, saw $batches")
+    Replay.drain(q, VTicks, "rate-limit replay")
     spark.read.parquet(s"$base/verdicts")
       .groupBy(col("domain"), col("vtime"))
       .agg(count(lit(1)).as("n_arrivals"),

@@ -57,19 +57,14 @@ object StatefulCounts {
     * (tiny) user dimension, the same shape as the corpus upsert. */
   def streamedUserCounts(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val base = graft.Scratch.dir("stream_counts", sfDir)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(base), true)
+    val base = Replay.scratch(spark, "stream_counts", sfDir)
     val stage = s"$base/stage"
     Tables.events(spark, sfDir).select(col("user_id"), col("event_type"))
       .repartition(4).write.parquet(stage)
-    val src = spark.readStream
-      .schema("user_id BIGINT, event_type STRING")
-      .option("maxFilesPerTrigger", 1)
-      .parquet(stage).as[UserEvent]
+    val src = Replay.source(spark, "user_id BIGINT, event_type STRING", stage)
+      .as[UserEvent]
     val log = s"$base/changelog"
-    val q = StreamTune.withStatePartitions(spark) {
+    val q = Replay.withStatePartitions(spark) {
       runningCounts(src).toDF().writeStream
         .outputMode("update")
         .option("checkpointLocation", s"$base/ckpt")
@@ -79,10 +74,7 @@ object StatefulCounts {
         }
         .start()
     }
-    try q.processAllAvailable() finally q.stop()
-    val batches = q.recentProgress.count(_.numInputRows > 0)
-    require(batches >= 2,
-      s"stateful counts must run multiple micro-batches, saw $batches")
+    Replay.drain(q, 2, "stateful counts")
     import org.apache.spark.sql.expressions.Window
     val newest = Window.partitionBy(col("user_id"))
       .orderBy(col("batch_id").desc)

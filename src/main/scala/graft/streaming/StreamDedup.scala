@@ -85,50 +85,29 @@ object StreamDedup {
     * suppressed. */
   def streamedExactDedup(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val base = graft.Scratch.dir("stream_dedup", sfDir)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(base), true)
-    val stage = new java.io.File(base, "stage")
-    stage.mkdirs()
+    val base = Replay.scratch(spark, "stream_dedup", sfDir)
+    val stage = s"$base/stage"
     // materialize (doc_id, fp) once (r16, guide §2.4): the four
-    // staged writes AND the arrivals rollup below each re-ran the
-    // 4-way corpus union + tokenizing fingerprint — five full text
-    // passes for one slim relation; off the pin they are block reads
+    // staged writes each re-ran the 4-way corpus union + tokenizing
+    // fingerprint; off the pin they are block reads
     val docs = graft.ops.Materialize.pin(corpus(spark, sfDir)
       .select(col("doc_id"), TextOps.fingerprint(col("text")).as("fp")))
-    (0 until StreamBatches).foreach { b =>
-      val tmp = s"$base/tmp$b"
-      docs.filter(pmod(col("doc_id"), lit(StreamBatches.toLong)) === b)
-        .coalesce(1).write.parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.startsWith("part-")
-          && f.getName.endsWith(".parquet"))
-        .getOrElse(sys.error(s"no parquet part written under $tmp"))
-      val dst = new java.io.File(stage, f"b$b%02d.parquet")
-      java.nio.file.Files.move(part.toPath, dst.toPath)
-      require(dst.setLastModified(1400000000000L + b * 60000L),
-        s"cannot pin mtime on $dst")
-    }
-    val src = spark.readStream
-      .schema("doc_id BIGINT, fp BIGINT")
-      .option("maxFilesPerTrigger", 1)
-      .parquet(stage.getAbsolutePath)
-    val q = StreamTune.withStatePartitions(spark) {
+    Replay.stage(stage, (0 until StreamBatches).map(b =>
+      docs.filter(pmod(col("doc_id"), lit(StreamBatches.toLong)) === b)))
+    graft.ops.Materialize.release(docs)
+    val src = Replay.source(spark, "doc_id BIGINT, fp BIGINT", stage)
+    val q = Replay.withStatePartitions(spark) {
       src.dropDuplicates("fp").writeStream
         .outputMode("append").format("parquet")
         .option("path", s"$base/admitted")
         .option("checkpointLocation", s"$base/ckpt")
         .start()
     }
-    try q.processAllAvailable() finally q.stop()
-    val batches = q.recentProgress.count(_.numInputRows > 0)
-    require(batches >= 2,
-      s"streaming dedup must run multiple micro-batches, saw $batches")
+    Replay.drain(q, 2, "streaming dedup")
     val admitted = spark.read.parquet(s"$base/admitted")
       .groupBy(pmod(col("doc_id"), lit(StreamBatches.toLong)).as("batch"))
       .agg(count(lit(1)).as("n_admitted"))
-    val arrivals = docs
+    val arrivals = spark.read.parquet(stage)
       .groupBy(pmod(col("doc_id"), lit(StreamBatches.toLong)).as("batch"))
       .agg(count(lit(1)).as("n_arrivals"))
     arrivals.join(admitted, Seq("batch"), "left")
@@ -169,16 +148,11 @@ object StreamDedup {
     * time: the difference between a dedup store that fits in RocksDB
     * forever and one that cannot. */
   def streamedBoundedDedup(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = graft.Scratch.dir("stream_wdedup", sfDir)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(base), true)
-    val stage = new java.io.File(base, "stage")
-    stage.mkdirs()
-    // materialized once (r16, guide §2.4): three staged batches and
-    // the arrivals rollup all derive from `keys`, and each derivation
-    // re-ran the full tokenizing-fingerprint + distinct pipeline —
-    // six text passes for one slim key column before the pin
+    val base = Replay.scratch(spark, "stream_wdedup", sfDir)
+    val stage = s"$base/stage"
+    // materialized once (r16, guide §2.4): three staged batches
+    // derive from `keys`, and each derivation re-ran the full
+    // tokenizing-fingerprint + distinct pipeline before the pin
     val keys = graft.ops.Materialize.pin(Tables.documents(spark, sfDir)
       .select(TextOps.fingerprint(col("text")).as("key")).distinct())
     val t0 = lit(java.sql.Timestamp.valueOf("2024-06-01 00:00:00"))
@@ -188,7 +162,7 @@ object StreamDedup {
         (t0 + expr(s"interval $offsetMin minutes")).as("ts"),
         lit(bix).as("bix"))
     }
-    val batches = Seq(
+    Replay.stage(stage, Seq(
       keys.select(col("key"), t0.as("ts"), lit(0).as("bix")),
       keys.filter(pmod(col("key"), lit(3)) === 0)
         .select(col("key"), (t0 + expr("interval 1 minute")).as("ts"),
@@ -198,24 +172,10 @@ object StreamDedup {
       keys.filter(pmod(col("key"), lit(5)) === 0)
         .select(col("key"), (t0 + expr("interval 1440 minutes")).as("ts"),
           lit(3).as("bix"))
-        .unionByName(adv(-3L, 1500, 3)))
-    batches.zipWithIndex.foreach { case (df, b) =>
-      val tmp = s"$base/tmp$b"
-      df.coalesce(1).write.parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.startsWith("part-")
-          && f.getName.endsWith(".parquet"))
-        .getOrElse(sys.error(s"no parquet part written under $tmp"))
-      val dst = new java.io.File(stage, f"b$b%02d.parquet")
-      java.nio.file.Files.move(part.toPath, dst.toPath)
-      require(dst.setLastModified(1400000000000L + b * 60000L),
-        s"cannot pin mtime on $dst")
-    }
-    val src = spark.readStream
-      .schema("key BIGINT, ts TIMESTAMP, bix INT")
-      .option("maxFilesPerTrigger", 1)
-      .parquet(stage.getAbsolutePath)
-    val q = StreamTune.withStatePartitions(spark) {
+        .unionByName(adv(-3L, 1500, 3))))
+    graft.ops.Materialize.release(keys)
+    val src = Replay.source(spark, "key BIGINT, ts TIMESTAMP, bix INT", stage)
+    val q = Replay.withStatePartitions(spark) {
       src.withWatermark("ts", DedupDelay)
         .dropDuplicatesWithinWatermark("key")
         .writeStream
@@ -224,14 +184,11 @@ object StreamDedup {
         .option("checkpointLocation", s"$base/ckpt")
         .start()
     }
-    try q.processAllAvailable() finally q.stop()
-    val nBatches = q.recentProgress.count(_.numInputRows > 0)
-    require(nBatches >= 4,
-      s"bounded dedup must drain all four staged batches, saw $nBatches")
+    Replay.drain(q, 4, "bounded dedup")
     val admitted = spark.read.parquet(s"$base/admitted")
       .groupBy(col("bix").as("batch")).agg(count(lit(1)).as("n_admitted"))
-    val arrivals = batches.map(_.groupBy(col("bix").as("batch"))
-      .agg(count(lit(1)).as("n_arrivals"))).reduce(_ unionByName _)
+    val arrivals = spark.read.parquet(stage)
+      .groupBy(col("bix").as("batch")).agg(count(lit(1)).as("n_arrivals"))
     arrivals.join(admitted, Seq("batch"), "left")
       .na.fill(0L, Seq("n_admitted"))
       .withColumn("n_suppressed", col("n_arrivals") - col("n_admitted"))

@@ -27,37 +27,21 @@ object StreamEnrich {
   /** q198: events streamed in 4 micro-batches, enriched against the
     * static customer dim, per-segment rollup of the sink. */
   def streamedEnrichment(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = graft.Scratch.dir("stream_enrich", sfDir)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(base), true)
-    val stage = new java.io.File(base, "stage")
-    stage.mkdirs()
+    val base = Replay.scratch(spark, "stream_enrich", sfDir)
+    val stage = s"$base/stage"
     // materialized once (r16, guide §2.4): the four staged writes
     // each re-scanned the events table under a coalesce(1) single
     // task; off the pin they are block reads
     val ev = graft.ops.Materialize.pin(Tables.events(spark, sfDir)
       .select(col("event_id"), col("user_id"), col("value")))
-    (0 until StreamBatches).foreach { b =>
-      val tmp = s"$base/tmp$b"
-      ev.filter(pmod(col("event_id"), lit(StreamBatches.toLong)) === b)
-        .coalesce(1).write.parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.startsWith("part-")
-          && f.getName.endsWith(".parquet"))
-        .getOrElse(sys.error(s"no parquet part written under $tmp"))
-      val dst = new java.io.File(stage, f"b$b%02d.parquet")
-      java.nio.file.Files.move(part.toPath, dst.toPath)
-      require(dst.setLastModified(1400000000000L + b * 60000L),
-        s"cannot pin mtime on $dst")
-    }
+    Replay.stage(stage, (0 until StreamBatches).map(b =>
+      ev.filter(pmod(col("event_id"), lit(StreamBatches.toLong)) === b)))
+    graft.ops.Materialize.release(ev)
     val dim = Tables.customer(spark, sfDir)
       .select(col("c_custkey").as("user_id"),
         col("c_mktsegment").as("segment"))
-    val src = spark.readStream
-      .schema("event_id BIGINT, user_id BIGINT, value DOUBLE")
-      .option("maxFilesPerTrigger", 1)
-      .parquet(stage.getAbsolutePath)
+    val src = Replay.source(spark,
+      "event_id BIGINT, user_id BIGINT, value DOUBLE", stage)
     val q = src.join(dim, Seq("user_id")) // static side: per-batch re-join
       .select(col("event_id"), col("segment"), col("value"))
       .writeStream
@@ -65,10 +49,7 @@ object StreamEnrich {
       .option("path", s"$base/out")
       .option("checkpointLocation", s"$base/ckpt")
       .start()
-    try q.processAllAvailable() finally q.stop()
-    val batches = q.recentProgress.count(_.numInputRows > 0)
-    require(batches >= 2,
-      s"enrichment must run multiple micro-batches, saw $batches")
+    Replay.drain(q, 2, "enrichment")
     spark.read.parquet(s"$base/out")
       .groupBy(col("segment"))
       .agg(count(lit(1)).as("n_events"),

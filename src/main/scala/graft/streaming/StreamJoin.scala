@@ -28,24 +28,26 @@ object StreamJoin {
       joinType)
   }
 
-  /** Sort one side into 4 contiguous ts slices, one pinned-mtime file
-    * per slice, so the stream drains it oldest-first. */
-  private def stageSorted(df: DataFrame, tsCol: String, dir: String): Unit = {
-    val tmp = s"$dir.tmp"
-    df.repartitionByRange(4, col(tsCol)).sortWithinPartitions(col(tsCol))
-      .write.parquet(tmp)
-    val stage = new java.io.File(dir)
-    stage.mkdirs()
-    val parts = new java.io.File(tmp).listFiles()
-      .filter(f => f.getName.startsWith("part-")
-        && f.getName.endsWith(".parquet")).sortBy(_.getName)
-    require(parts.length >= 2, s"expected >=2 staged slices in $dir")
-    parts.zipWithIndex.foreach { case (p, i) =>
-      val dst = new java.io.File(stage, f"b$i%02d.parquet")
-      java.nio.file.Files.move(p.toPath, dst.toPath)
-      require(dst.setLastModified(1400000000000L + i * 60000L),
-        s"cannot pin mtime on $dst")
-    }
+  /** Stage the events' views and clicks as the two ts-ranged join
+    * sides under `base` (`more` stages further slices off the pinned
+    * events before they are released) and open both as streams. */
+  private def stageSides(spark: SparkSession, sfDir: String, base: String)(
+      more: DataFrame => Unit = _ => ()): (DataFrame, DataFrame) = {
+    // materialized once (r16, guide §2.4): each ranged side pays a
+    // range-sampling pass PLUS the shuffle-write pass — four events
+    // scans for two slim relations; off the pin they are block reads
+    val ev = graft.ops.Materialize.pin(Tables.events(spark, sfDir)
+      .select(col("user_id"), col("ts"), col("event_type")))
+    Replay.stageRanges(s"$base/imps", ev.filter(col("event_type") === "view")
+      .select(col("user_id").as("ad_id"), col("ts").as("imp_ts")), "imp_ts")
+    Replay.stageRanges(s"$base/clicks", ev.filter(col("event_type") === "click")
+      .select(col("user_id").as("c_ad_id"), col("ts").as("click_ts")),
+      "click_ts")
+    more(ev)
+    graft.ops.Materialize.release(ev)
+    (Replay.source(spark, "ad_id BIGINT, imp_ts TIMESTAMP", s"$base/imps"),
+      Replay.source(spark, "c_ad_id BIGINT, click_ts TIMESTAMP",
+        s"$base/clicks"))
   }
 
   /** q162: the stream-stream interval join as a DECLARED query —
@@ -68,57 +70,22 @@ object StreamJoin {
     * both sides (the property that lets this run forever); each
     * trigger shuffles only that batch's rows on ad_id. */
   def streamedAttribution(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = graft.Scratch.dir("stream_join", sfDir)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(base), true)
-    // materialized once (r16, guide §2.4): each stageSorted pays a
-    // range-sampling pass PLUS the shuffle-write pass over its side —
-    // four events scans for two slim relations; off the pin they are
-    // block reads
-    val ev = graft.ops.Materialize.pin(Tables.events(spark, sfDir)
-      .select(col("user_id"), col("ts"), col("event_type")))
-    stageSorted(ev.filter(col("event_type") === "view")
-      .select(col("user_id").as("ad_id"), col("ts").as("imp_ts")),
-      "imp_ts", s"$base/imps")
-    stageSorted(ev.filter(col("event_type") === "click")
-      .select(col("user_id").as("c_ad_id"), col("ts").as("click_ts")),
-      "click_ts", s"$base/clicks")
-    val imps = spark.readStream.schema("ad_id BIGINT, imp_ts TIMESTAMP")
-      .option("maxFilesPerTrigger", 1).parquet(s"$base/imps")
-    val clicks = spark.readStream.schema("c_ad_id BIGINT, click_ts TIMESTAMP")
-      .option("maxFilesPerTrigger", 1).parquet(s"$base/clicks")
-    val q = StreamTune.withStatePartitions(spark) {
+    val base = Replay.scratch(spark, "stream_join", sfDir)
+    val (imps, clicks) = stageSides(spark, sfDir, base)()
+    val q = Replay.withStatePartitions(spark) {
       attribution(imps, clicks, windowMinutes = 60).writeStream
         .outputMode("append").format("parquet")
         .option("path", s"$base/out")
         .option("checkpointLocation", s"$base/ckpt")
         .start()
     }
-    try q.processAllAvailable() finally q.stop()
-    val batches = q.recentProgress.count(_.numInputRows > 0)
-    require(batches >= 2,
-      s"attribution stream must run multiple micro-batches, saw $batches")
+    Replay.drain(q, 2, "attribution stream")
     spark.read.parquet(s"$base/out")
       .groupBy(col("ad_id")).agg(
         count(lit(1)).as("n_attrib"),
         sum(unix_micros(col("click_ts")) - unix_micros(col("imp_ts")))
           .as("gap_us_sum"))
       .orderBy(col("ad_id"))
-  }
-
-  /** Append a single pinned-mtime slice to a staged stream dir (the
-    * watermark-advance batches of the outer join). */
-  private def stageSlice(df: DataFrame, dir: String, idx: Int): Unit = {
-    val tmp = s"$dir.adv$idx"
-    df.coalesce(1).write.parquet(tmp)
-    val part = new java.io.File(tmp).listFiles()
-      .filter(f => f.getName.startsWith("part-")
-        && f.getName.endsWith(".parquet")).head
-    val dst = new java.io.File(new java.io.File(dir), f"b$idx%02d.parquet")
-    java.nio.file.Files.move(part.toPath, dst.toPath)
-    require(dst.setLastModified(1400000000000L + idx * 60000L),
-      s"cannot pin mtime on $dst")
   }
 
   /** q210: the LEFT OUTER stream-stream interval join — the state
@@ -154,35 +121,18 @@ object StreamJoin {
     * sides, per-batch shuffles on ad_id; the outer flush adds no
     * retained state (eviction emits instead of discarding). */
   def streamedOuterAttribution(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = graft.Scratch.dir("stream_outer", sfDir)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(base), true)
-    // materialized once (r16, guide §2.4): two range-sampled staged
-    // writes plus the maxTs scalar probe re-scanned events five ways
-    val ev = graft.ops.Materialize.pin(Tables.events(spark, sfDir)
-      .select(col("user_id"), col("ts"), col("event_type")))
-    stageSorted(ev.filter(col("event_type") === "view")
-      .select(col("user_id").as("ad_id"), col("ts").as("imp_ts")),
-      "imp_ts", s"$base/imps")
-    stageSorted(ev.filter(col("event_type") === "click")
-      .select(col("user_id").as("c_ad_id"), col("ts").as("click_ts")),
-      "click_ts", s"$base/clicks")
-    // two advance slices per side: maxTs is a 1-row bounded aggregate
-    val maxTs = ev.agg(max(col("ts"))).head().getTimestamp(0)
-    for (k <- 1 to 2) {
-      val advTs = new java.sql.Timestamp(maxTs.getTime + k * 3L * 3600 * 1000)
-      val one = spark.range(1).select(lit(-1L).as("ad_id"),
-        lit(advTs).as("imp_ts"))
-      stageSlice(one, s"$base/imps", 3 + k)
-      stageSlice(one.select(col("ad_id").as("c_ad_id"),
-        col("imp_ts").as("click_ts")), s"$base/clicks", 3 + k)
+    val base = Replay.scratch(spark, "stream_outer", sfDir)
+    val (imps, clicks) = stageSides(spark, sfDir, base) { ev =>
+      // two advance slices per side: maxTs is a 1-row bounded aggregate
+      val maxTs = ev.agg(max(col("ts"))).head().getTimestamp(0)
+      val adv = (1 to 2).map(k => spark.range(1).select(lit(-1L).as("ad_id"),
+        lit(new java.sql.Timestamp(maxTs.getTime + k * 3L * 3600 * 1000))
+          .as("imp_ts")))
+      Replay.stage(s"$base/imps", adv)
+      Replay.stage(s"$base/clicks", adv.map(_.select(
+        col("ad_id").as("c_ad_id"), col("imp_ts").as("click_ts"))))
     }
-    val imps = spark.readStream.schema("ad_id BIGINT, imp_ts TIMESTAMP")
-      .option("maxFilesPerTrigger", 1).parquet(s"$base/imps")
-    val clicks = spark.readStream.schema("c_ad_id BIGINT, click_ts TIMESTAMP")
-      .option("maxFilesPerTrigger", 1).parquet(s"$base/clicks")
-    val q = StreamTune.withStatePartitions(spark) {
+    val q = Replay.withStatePartitions(spark) {
       attribution(imps, clicks, windowMinutes = 60, joinType = "left_outer")
         .writeStream
         .outputMode("append").format("parquet")
@@ -190,10 +140,7 @@ object StreamJoin {
         .option("checkpointLocation", s"$base/ckpt")
         .start()
     }
-    try q.processAllAvailable() finally q.stop()
-    val batches = q.recentProgress.count(_.numInputRows > 0)
-    require(batches >= 2,
-      s"outer attribution stream must run multiple micro-batches, saw $batches")
+    Replay.drain(q, 2, "outer attribution stream")
     spark.read.parquet(s"$base/out")
       .filter(col("ad_id") >= 0)
       .groupBy(col("ad_id")).agg(

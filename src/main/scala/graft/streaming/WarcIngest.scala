@@ -40,9 +40,9 @@ object WarcIngest {
     * DuckDB oracle can certify the corpus the STREAM built.
     *
     * Shape: the WARC frames are staged as parquet and consumed by a
-    * file-source stream with `maxFilesPerTrigger 1` — one micro-batch
-    * per staged file, which the query HARD-ASSERTS (≥ 2 batches), so
-    * a regression to single-batch batch-mode execution fails the row
+    * file-source stream ([[Replay.source]]) — one micro-batch per
+    * staged file, which the query HARD-ASSERTS (≥ 2 batches), so a
+    * regression to single-batch batch-mode execution fails the row
     * rather than silently passing. This is the production shape (an
     * object-store .warc.gz backlog drained as a stream); nothing is
     * collected to the driver. A fixed per-process scratch dir is
@@ -57,18 +57,13 @@ object WarcIngest {
     * post-stream corpus parquet, so the upsert ran too. */
   def streamedCorpusHealth(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val base = graft.Scratch.dir("stream_e2e", sfDir)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(base), true)
+    val base = Replay.scratch(spark, "stream_e2e", sfDir)
     val stage = s"$base/stage"
     // 4 staged files → 4 data micro-batches through the real stream
     Warc.warcTable(spark, sfDir).toDF().repartition(4)
       .write.parquet(stage)
-    val src = spark.readStream
-      .schema("file_id BIGINT, content BINARY")
-      .option("maxFilesPerTrigger", 1)
-      .parquet(stage).as[Warc.WarcFile]
+    val src = Replay.source(spark, "file_id BIGINT, content BINARY", stage)
+      .as[Warc.WarcFile]
     // NOT repartitioned before the per-batch work (r16 probe): the
     // q157-style within-batch repartition was tried in BOTH
     // placements — on the container stream (payload bytes cross the
@@ -76,14 +71,12 @@ object WarcIngest {
     // SLOWER than the single-split scan: this pipeline's per-batch
     // cost is the upsert's corpus rewrite, not the decode/embed, so
     // the extra exchange buys parallelism nothing here (§2.3).
-    // NOT StreamTune-scoped: this pipeline is stateless (file source +
-    // foreachBatch embed/upsert) — fewer shuffle partitions would cut
-    // the embedding stage's parallelism with no state commits to save
+    // NOT in Replay.withStatePartitions: this pipeline is stateless
+    // (file source + foreachBatch embed/upsert) — fewer shuffle
+    // partitions would cut the embedding stage's parallelism with no
+    // state commits to save
     val q = run(spark, src, s"$base/corpus", s"$base/ckpt")
-    try q.processAllAvailable() finally q.stop()
-    val batches = q.recentProgress.count(_.numInputRows > 0)
-    require(batches >= 2,
-      s"streaming e2e must run multiple micro-batches, saw $batches")
+    Replay.drain(q, 2, "streaming e2e")
     spark.read.parquet(s"$base/corpus")
       .groupBy(col("domain")).agg(
         count(lit(1)).as("n_urls"),

@@ -45,44 +45,19 @@ object WindowedStats {
     * micro-batch shuffles partial counts only. The sink is parquet
     * append; nothing driver-side. */
   def streamedWindowCounts(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = graft.Scratch.dir("stream_win", sfDir)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(base), true)
-    val stage = new java.io.File(base, "stage")
-    stage.mkdirs()
-    val tmp = s"$base/tmp"
-    Tables.events(spark, sfDir).select(col("ts"), col("event_type"))
-      .repartitionByRange(4, col("ts"))
-      .sortWithinPartitions(col("ts"))
-      .write.parquet(tmp)
-    // part-NNNNN order IS ts-range order under repartitionByRange;
-    // pin the drain order with strictly increasing mtimes
-    val parts = new java.io.File(tmp).listFiles()
-      .filter(f => f.getName.startsWith("part-")
-        && f.getName.endsWith(".parquet")).sortBy(_.getName)
-    require(parts.length >= 2, s"expected >=2 staged slices, got ${parts.length}")
-    parts.zipWithIndex.foreach { case (p, i) =>
-      val dst = new java.io.File(stage, f"b$i%02d.parquet")
-      java.nio.file.Files.move(p.toPath, dst.toPath)
-      require(dst.setLastModified(1400000000000L + i * 60000L),
-        s"cannot pin mtime on $dst")
-    }
-    val src = spark.readStream
-      .schema("ts TIMESTAMP, event_type STRING")
-      .option("maxFilesPerTrigger", 1)
-      .parquet(stage.getAbsolutePath)
-    val q = StreamTune.withStatePartitions(spark) {
+    val base = Replay.scratch(spark, "stream_win", sfDir)
+    val stage = s"$base/stage"
+    Replay.stageRanges(stage,
+      Tables.events(spark, sfDir).select(col("ts"), col("event_type")), "ts")
+    val src = Replay.source(spark, "ts TIMESTAMP, event_type STRING", stage)
+    val q = Replay.withStatePartitions(spark) {
       windowedCounts(src).writeStream
         .outputMode("append").format("parquet")
         .option("path", s"$base/out")
         .option("checkpointLocation", s"$base/ckpt")
         .start()
     }
-    try q.processAllAvailable() finally q.stop()
-    val batches = q.recentProgress.count(_.numInputRows > 0)
-    require(batches >= 2,
-      s"windowed stream must run multiple micro-batches, saw $batches")
+    Replay.drain(q, 2, "windowed stream")
     spark.read.parquet(s"$base/out")
       .orderBy(col("w_start"), col("event_type"))
   }
@@ -106,18 +81,13 @@ object WindowedStats {
     * full final answer); per batch the shuffle is session-key
     * partial rows. */
   def streamedSessions(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = graft.Scratch.dir("stream_sess", sfDir)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(base), true)
+    val base = Replay.scratch(spark, "stream_sess", sfDir)
     val stage = s"$base/stage"
     Tables.events(spark, sfDir).filter(col("user_id") < 10)
       .select(col("user_id"), col("ts"), col("value"))
       .repartition(4).write.parquet(stage)
-    val src = spark.readStream
-      .schema("user_id BIGINT, ts TIMESTAMP, value DOUBLE")
-      .option("maxFilesPerTrigger", 1)
-      .parquet(stage)
+    val src = Replay.source(spark, "user_id BIGINT, ts TIMESTAMP, value DOUBLE",
+      stage)
     val sessions = src
       .groupBy(col("user_id"),
         session_window(col("ts"), "30 minutes").as("w"))
@@ -129,7 +99,7 @@ object WindowedStats {
         unix_timestamp(col("w.end")).as("s_end"),
         col("n_events"), col("total_value"))
     val snap = s"$base/snapshot"
-    val q = StreamTune.withStatePartitions(spark) {
+    val q = Replay.withStatePartitions(spark) {
       sessions.writeStream
         .outputMode("complete")
         .option("checkpointLocation", s"$base/ckpt")
@@ -138,10 +108,7 @@ object WindowedStats {
         }
         .start()
     }
-    try q.processAllAvailable() finally q.stop()
-    val batches = q.recentProgress.count(_.numInputRows > 0)
-    require(batches >= 2,
-      s"session stream must run multiple micro-batches, saw $batches")
+    Replay.drain(q, 2, "session stream")
     spark.read.parquet(snap).orderBy(col("user_id"), col("s_start"))
   }
 

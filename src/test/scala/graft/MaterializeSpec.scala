@@ -56,4 +56,21 @@ class MaterializeSpec extends SparkSpec {
       finally spark.conf.unset(Materialize.ModeKey)
     }
   }
+
+  test("an unknown mode fails fast, naming the conf") {
+    spark.conf.set(Materialize.ModeKey, "Reliable")
+    try {
+      val e = intercept[IllegalArgumentException](Materialize.pin(sample))
+      assert(e.getMessage.contains(Materialize.ModeKey), e.getMessage)
+    } finally spark.conf.unset(Materialize.ModeKey)
+  }
+
+  test("release drops the pin's blocks") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val pinned = Materialize.pin(sample)
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).nonEmpty,
+      "a local pin registers a persistent RDD")
+    Materialize.release(pinned)
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty)
+  }
 }

@@ -78,15 +78,15 @@ class RocksDbStateSpec extends SparkSpec {
     // iterate the operator's OWN scoped-conf list (the AqeSkew
     // discipline) — a restore regression in ANY key it touches,
     // including the r10 backend confs, must land here
-    val keys = graft.streaming.StreamTune.ScopedConfs.map(_._1)
+    val keys = graft.streaming.Replay.ScopedConfs.map(_._1)
     val before = keys.map(k => k -> spark.conf.getOption(k))
-    val inside = graft.streaming.StreamTune.withStatePartitions(spark) {
+    val inside = graft.streaming.Replay.withStatePartitions(spark) {
       keys.map(k => k -> spark.conf.getOption(k))
     }
     assert(inside.toMap.apply(ProviderConf) === Some(RocksDb),
       "replays must run on the RocksDB backend")
     assert(inside.toMap.apply("spark.sql.shuffle.partitions") ===
-      Some(graft.streaming.StreamTune.ReplayPartitions.toString))
+      Some(graft.streaming.Replay.ReplayPartitions.toString))
     val after = keys.map(k => k -> spark.conf.getOption(k))
     assert(after === before, "scoped streaming confs leaked")
   }

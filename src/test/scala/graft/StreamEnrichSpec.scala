@@ -36,4 +36,11 @@ class StreamEnrichSpec extends SparkSpec {
     assert(sink.select($"event_id").distinct().count() == matched,
       "each event must be enriched exactly once")
   }
+
+  test("the staging pin is released once the stage is written") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    StreamEnrich.streamedEnrichment(spark, sfDir).collect()
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"q198 left persistent RDDs $leaked")
+  }
 }
