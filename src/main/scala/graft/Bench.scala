@@ -57,8 +57,6 @@ package graft
   *     wall), which is engine cost a production streaming job pays
   *     once per process lifetime, not per query.
   *
-  * `SPARK_GRAFT_BENCH_FORK=0` restores the shared-JVM path (fast dev
-  * loop; numbers from it are NOT publishable per the round-5 rule).
   * `SPARK_GRAFT_BENCH_GROUP=0` forces every query onto the SOLO
   * protocol (the round-6 behavior, used for probes and for
   * re-certifying the tier table).
@@ -186,7 +184,6 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt.max(1)
-    val fork = sys.env.getOrElse("SPARK_GRAFT_BENCH_FORK", "1") != "0"
     val group = sys.env.getOrElse("SPARK_GRAFT_BENCH_GROUP", "1") != "0"
     // dev filter: SPARK_GRAFT_BENCH_ONLY=q23,q53 limits the run to
     // queries whose qNN prefix is listed (full suite when unset)
@@ -194,9 +191,7 @@ object Bench {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(shortName(n))))
-    val (results, regrouped, sharedNames) =
-      if (fork) runTiered(names, sfDir, reps, group)
-      else (runShared(names, sfDir, reps), Nil, Set.empty[String])
+    val (results, regrouped, sharedNames) = runTiered(names, sfDir, reps, group)
     val byName = results.map(r => r.name -> r).toMap
     val ordered = names.map(byName)
     val qs = ordered.map(r => "\"" + shortName(r.name) + "\":" + r.best)
@@ -468,35 +463,6 @@ object Bench {
       QResult(name, ms3(best), ok, env, times, cid)
     }
   }
-
-  /** Legacy shared-JVM path (dev only): all queries in this process,
-    * scrub between runs, measured window excludes the scrub. */
-  private def runShared(names: Seq[String], sfDir: String, reps: Int)
-      : Seq[QResult] = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder(cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    Tables.nation(spark, sfDir).groupBy("n_regionkey").count().count()
-    val env = Some((calibrate(spark), loadAvg()))
-    val results = names.map { name =>
-      val fn = SparkEntry.queries(name)
-      val runs = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        val ok =
-          try { fn(spark, sfDir).count(); true }
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] $name FAILED: ${e.getMessage}"); false }
-        val dt = (System.nanoTime() - t0) / 1e9 // clock stops before scrub
-        GraftSession.scrub(spark)
-        System.err.println(s"[bench] $name ${ms3(dt)} ok=$ok")
-        (dt, ok)
-      }
-      QResult(name, ms3(runs.map(_._1).min), runs.forall(_._2), env,
-        runs.map(_._1))
-    }
-    spark.stop()
-    results
-  }
 }
 
 /** Child process for the forked bench: own SparkSession, one warm-up
@@ -541,7 +507,7 @@ object BenchOne {
     * the r9 CC-variance finding: a rep can run 2-3× slow purely
     * because earlier codegen classes are still compiling on the
     * background C2 threads. Runs OUTSIDE every measured window. */
-  private def drainJit(jitBean: java.lang.management.CompilationMXBean,
+  private[graft] def drainJit(jitBean: java.lang.management.CompilationMXBean,
       maxSec: Long): Unit = {
     val deadline = System.nanoTime() + maxSec * 1000 * 1000 * 1000
     var last = jitBean.getTotalCompilationTime
@@ -553,6 +519,24 @@ object BenchOne {
     }
   }
 
+  /** Warm-up: exercise scan + shuffle + codegen machinery once so
+    * session startup isn't attributed to the query (per-query
+    * expression compilation stays in the measurement — it's part of
+    * the engine's real cost), plus the streaming machinery when a
+    * streaming replay is among `names`. */
+  private[graft] def warm(spark: org.apache.spark.sql.SparkSession,
+      sfDir: String, names: Seq[String]): Unit = {
+    Tables.nation(spark, sfDir).groupBy("n_regionkey").count().count()
+    if (names.exists(Bench.StreamingQueries)) warmStreamingMachinery(spark)
+  }
+
+  /** Accumulated GC time over every collector, in ms. */
+  private[graft] def gcMs: Long = {
+    import scala.jdk.CollectionConverters._
+    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
+      .asScala.map(_.getCollectionTime).sum
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val reps = args(1).toInt
@@ -560,12 +544,7 @@ object BenchOne {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    // warm-up: exercise scan + shuffle + codegen machinery once so
-    // session startup isn't attributed to the query; per-query
-    // expression compilation stays in the measurement (it's part of
-    // the engine's real cost)
-    Tables.nation(spark, sfDir).groupBy("n_regionkey").count().count()
-    if (names.exists(Bench.StreamingQueries)) warmStreamingMachinery(spark)
+    warm(spark, sfDir, names)
     // contention markers: fixed CPU-bound calib + host load average,
     // reported on their own protocol line so a contended record is
     // self-identifying (round-6 lesson: driver host was 2-5× loaded)
@@ -578,11 +557,6 @@ object BenchOne {
     // when the compile queue is backlogged). These lines are what
     // adjudicate a slow rep as cold-compile vs real regression.
     val jitBean = java.lang.management.ManagementFactory.getCompilationMXBean
-    def gcMs: Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(_.getCollectionTime).sum
-    }
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
       val runs = (1 to reps).zipWithIndex.map { case (_, i) =>

@@ -59,7 +59,7 @@ object GraftSession {
   private var scrubCount = 0
 
   /** Drop per-query session state so back-to-back query runs (Bench,
-    * Verify, TimeQuery) can't poison each other. `clearCache()` only
+    * Verify, Profile) can't poison each other. `clearCache()` only
     * covers `cache()`/`persist()` on tables; `localCheckpoint` blocks
     * stay pinned in the block manager until the driver GCs the RDD
     * object and the async ContextCleaner gets around to them — over a

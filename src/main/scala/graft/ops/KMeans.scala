@@ -187,8 +187,8 @@ object KMeans {
     * from the eager-checkpoint materialization job itself — the
     * adaptive-K rule needs |corpus|, and a separate count() was an
     * extra job on the suite's hottest shared subtree (r13 VERDICT
-    * #3; ProbeObserve confirmed the metric fires from the
-    * localCheckpoint action alone). */
+    * #3; MaterializeSpec pins that the metric fires from the eager
+    * pin's own job). */
   private[graft] def docVectorsWithCount(spark: SparkSession,
       sfDir: String): (DataFrame, Long) = {
     val obs = org.apache.spark.sql.Observation()

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -103,7 +103,7 @@ object Segment {
     * bench SF the relation is small either way; at 100 TB only this
     * shape finishes. */
   private[graft] def distributedNtile(df: DataFrame, n: Int,
-      sortCols: Seq[org.apache.spark.sql.Column], out: String): DataFrame = {
+      sortCols: Seq[Column], out: String): DataFrame = {
     val p = df.sparkSession.sparkContext.defaultParallelism
     // the pid capture is MATERIALIZED: the local-rank branch and the
     // offsets branch below both consume it, and two separate
@@ -129,14 +129,17 @@ object Segment {
           Window.partitionBy().rowsBetween(
             Window.unboundedPreceding, Window.unboundedFollowing))
           .as("__n"))
-    val q = (col("__n") / n).cast("long")
+    // integral `div` throughout: exact for any N, with no double
+    // quotient truncated back to a long
+    def div(a: Column, b: Column): Column = call_function("div", a, b)
+    val q = div(col("__n"), lit(n.toLong))
     val rem = col("__n") % n
     val thr = (q + 1L) * rem
     val r = col("__off") + col("__lr")
     local.join(broadcast(offs), Seq("__pid"))
       .withColumn(out,
-        when(r <= thr, (r - 1L) / (q + 1L) + 1L)
-          .otherwise(rem + (r - thr - 1L) / greatest(q, lit(1L)) + 1L)
+        when(r <= thr, div(r - 1L, q + 1L) + 1L)
+          .otherwise(rem + div(r - thr - 1L, greatest(q, lit(1L))) + 1L)
           .cast("int"))
       .drop("__pid", "__lr", "__off", "__n")
   }

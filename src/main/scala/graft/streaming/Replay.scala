@@ -49,12 +49,14 @@ object Replay {
     * commit then appends only the batch's changelog instead of
     * snapshotting the full store (snapshots move to background
     * maintenance), which is where the bounded replays' fixed cost
-    * lives — probed idle at sf0.1, min-of-3 per backend
-    * (tools/ProbeStateBackend): q157 6.52→5.03 s (−23%),
-    * q162 5.42→5.34 s, q191 2.99→2.87 s; never slower on any
-    * family member. At production scale the same choice is forced
-    * by memory: HDFS-backed state lives entirely on the JVM heap,
-    * RocksDB spills to executor-local disk. Answers are
+    * lives — probed idle at sf0.1, min-of-3 per backend: q157
+    * 6.52→5.03 s (−23%), q162 5.42→5.34 s, q191 2.99→2.87 s; never
+    * slower on any family member. (That backend probe was removed:
+    * these confs are set inside every stateful `start()`, so a
+    * session-level backend choice no longer reaches the replays.)
+    * At production scale the same choice is forced by memory:
+    * HDFS-backed state lives entirely on the JVM heap, RocksDB
+    * spills to executor-local disk. Answers are
     * backend-independent (RocksDbStateSpec pins parity; every
     * streaming query stays oracle-gated). */
   val ScopedConfs: Seq[(String, String)] = Seq(

@@ -1,7 +1,5 @@
 package graft.tools
 
-import java.nio.file.{Files, Paths}
-
 /** The ×10 answer-verification harness (VERDICT r14 #1): every scale
   * ladder to date measured WALL TIME above sf0.1; this runs the
   * Verify dump for named queries against a STAGED scaled corpus
@@ -31,43 +29,16 @@ object VerifyScaled {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val outDir = args(1)
-    val names = args.drop(2).toSeq
     val spark = graft.GraftSession.builder("32").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
     val n = graft.Corpus.docEmbeddings(spark, sfDir).count()
     val k = graft.ops.KMeans.adaptiveDocKOf(n)
     System.err.println(s"[verify-scaled] corpus=$n adaptiveDocK=$k " +
       (if (k == graft.ops.KMeans.DocK) "(gate constant — declared oracles)"
        else "(tree path — q79/q100/q229 oracles re-rendered)"))
-    names.foreach { name =>
-      val t0 = System.nanoTime()
-      try {
-        graft.SparkEntry.queries(name)(spark, sfDir).coalesce(1)
-          .write.mode("overwrite").parquet(s"$outDir/$name")
-        System.err.println(f"[verify-scaled] $name ok " +
-          f"${(System.nanoTime() - t0) / 1e9}%.1f s")
-      } catch { case e: Throwable =>
-        System.err.println(s"[verify-scaled] $name failed: ${e.getMessage}")
-      }
-      finally spark.catalog.clearCache()
-    }
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val oracles = graft.SparkEntry.oracleSql ++
-      (if (k == graft.ops.KMeans.DocK) Map.empty else scaledOracles(k))
-    val json = oracles
-      .filter { case (nm, _) => names.contains(nm) }
-      .map { case (nm, v) => s"${q(nm)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    graft.Verify.dump(spark, sfDir, args(1), args.drop(2).toSeq,
+      graft.SparkEntry.oracleSql ++
+        (if (k == graft.ops.KMeans.DocK) Map.empty else scaledOracles(k)))
     spark.stop()
   }
 }

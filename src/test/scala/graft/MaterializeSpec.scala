@@ -1,7 +1,10 @@
 package graft
 
 import graft.ops.Materialize
+import org.apache.spark.sql.Observation
 import org.apache.spark.sql.functions._
+import scala.concurrent.Await
+import scala.concurrent.duration._
 
 /** Contract gate for the materialization switch (VERDICT r15 #1/#3):
   * the default mode must be byte-for-byte the `localCheckpoint` the
@@ -26,13 +29,32 @@ class MaterializeSpec extends SparkSpec {
       viaLocal.collect().map(_.toSeq).toSet)
   }
 
-  test("reliable mode checkpoints to the configured dir, same rows") {
+  /** Run `body` in reliable mode on a fresh checkpoint dir. */
+  private def reliably[T](body: String => T): T = {
     val dir = java.nio.file.Files
       .createTempDirectory("graft_reliable_ckpt").toFile.getAbsolutePath
     val prevDir = spark.sparkContext.getCheckpointDir
     spark.sparkContext.setCheckpointDir(dir)
     spark.conf.set(Materialize.ModeKey, "reliable")
-    try {
+    try body(dir)
+    finally {
+      spark.conf.unset(Materialize.ModeKey)
+      prevDir.foreach(spark.sparkContext.setCheckpointDir)
+    }
+  }
+
+  test("reliable mode without a checkpoint dir fails fast") {
+    // declared before every test that sets a dir: a SparkContext's
+    // checkpoint dir cannot be unset, and only this suite sets one
+    assert(spark.sparkContext.getCheckpointDir.isEmpty,
+      "a checkpoint dir is already set, so this guard cannot be tested")
+    spark.conf.set(Materialize.ModeKey, "reliable")
+    try intercept[IllegalArgumentException](Materialize.pin(sample))
+    finally spark.conf.unset(Materialize.ModeKey)
+  }
+
+  test("reliable mode checkpoints to the configured dir, same rows") {
+    reliably { dir =>
       val pinned = Materialize.pin(sample)
       assert(pinned.collect().map(_.toSeq).toSet ===
         sample.collect().map(_.toSeq).toSet)
@@ -40,21 +62,21 @@ class MaterializeSpec extends SparkSpec {
       val wrote = new java.io.File(dir).listFiles()
       assert(wrote != null && wrote.nonEmpty,
         "reliable mode wrote nothing under the checkpoint dir")
-    } finally {
-      spark.conf.unset(Materialize.ModeKey)
-      prevDir.foreach(spark.sparkContext.setCheckpointDir)
     }
   }
 
-  test("reliable mode without a checkpoint dir fails fast") {
-    // a fresh context state cannot be simulated here (the shared
-    // session may already carry a dir from the previous test), so
-    // assert the guard's message path only when no dir is set
-    if (spark.sparkContext.getCheckpointDir.isEmpty) {
-      spark.conf.set(Materialize.ModeKey, "reliable")
-      try intercept[IllegalArgumentException](Materialize.pin(sample))
-      finally spark.conf.unset(Materialize.ModeKey)
+  test("an eager pin fires an observe metric from its own job") {
+    // KMeans.docVectorsWithCount, Components and Graph read counts
+    // observed below a pin without running any other action
+    import spark.implicits._
+    def observedCount(): Long = {
+      val obs = Observation()
+      Materialize.pin((0 until 1000).toDF("x")
+        .observe(obs, count(lit(1)).as("cnt")))
+      Await.result(obs.future, 30.seconds).getAs[Long]("cnt")
     }
+    assert(observedCount() === 1000L, "local mode")
+    assert(reliably(_ => observedCount()) === 1000L, "reliable mode")
   }
 
   test("an unknown mode fails fast, naming the conf") {

@@ -1,0 +1,48 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** The dev mains stay few and documented: every main the docs tell a
+  * reader to run exists, the oracle dump has one writer, and JIT
+  * timing lives only in the bench child and the one profiler. */
+class ToolsSpec extends AnyFunSuite {
+
+  private def sources: Seq[java.io.File] = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk)
+      else Seq(f)
+    val files = walk(new java.io.File("src/main/scala")).filter(_.getName.endsWith(".scala"))
+    assert(files.exists(_.getName == "Verify.scala"), "src/main sources not found")
+    files
+  }
+
+  private def read(f: java.io.File): String = java.nio.file.Files.readString(f.toPath)
+
+  /** Source files containing `token`, by path below src/main/scala/graft. */
+  private def holders(token: String): Set[String] =
+    sources.filter(f => read(f).contains(token))
+      .map(_.getPath.stripPrefix("src/main/scala/graft/")).toSet
+
+  test("every documented graft main resolves to an object with a main") {
+    val docs = Seq(new java.io.File("README.md"),
+      new java.io.File(".claude/skills/verify/SKILL.md")) ++ sources
+    val named = """(?:runMain|run_graft\.sh) (graft(?:\.\w+)+)""".r
+    val mains = docs.flatMap(f => named.findAllMatchIn(read(f)).map(_.group(1))).distinct
+    assert(mains.contains("graft.Verify"), s"no documented mains found: $mains")
+    val missing = mains.filterNot { m =>
+      scala.util.Try(Class.forName(m, false, getClass.getClassLoader)
+        .getMethod("main", classOf[Array[String]])).isSuccess
+    }
+    assert(missing.isEmpty, s"documented but not runnable: ${missing.mkString(", ")}")
+  }
+
+  test("only Verify.scala writes oracle_sql.json") {
+    assert(holders("oracle_sql.json") === Set("Verify.scala"),
+      "dump through Verify.dump instead of another copy")
+  }
+
+  test("only Bench.scala and tools/Profile.scala read the JIT compile clock") {
+    assert(holders("getCompilationMXBean") === Set("Bench.scala", "tools/Profile.scala"),
+      "time queries with graft.tools.Profile instead of another probe")
+  }
+}
