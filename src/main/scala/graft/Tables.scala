@@ -1,12 +1,24 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Readers for the driver-generated parquet testdata (TESTDATA.md).
   *
   * All engine queries take `(SparkSession, sfDir)` and resolve tables
   * through here so the scan always goes through the columnar parquet
   * reader with pushdown/pruning intact (no caching layer in the way).
+  *
+  * Each file's schema is inferred once and every later read passes it
+  * to `spark.read.schema(s)`, so building a DataFrame launches no
+  * Spark job (inference is one job per read, which a serving request
+  * paid on every table it touched). The memo is keyed on everything
+  * the inferred schema depends on — the qualified path, the length and
+  * modification time of every leaf file under it, and the session
+  * confs parquet schema conversion reads — so a regenerated file or a
+  * toggled conf infers afresh. Rows are never cached: only the schema.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -15,7 +27,52 @@ object Tables {
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
     if (name == "events") events(spark, sfDir)
-    else spark.read.parquet(s"$sfDir/$name.parquet")
+    else read(spark, s"$sfDir/$name.parquet")
+
+  /** Session confs that change the schema parquet inference yields. */
+  private val SchemaConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive")
+
+  /** What an inferred schema was derived from: (path, length, mtime)
+    * of every leaf file, and the [[SchemaConfs]] values. */
+  private final case class Source(files: Seq[(String, Long, Long)],
+      confs: Seq[Option[String]])
+
+  /** Qualified path → the source its schema was inferred from, and the
+    * schema. One entry per path; a changed source replaces it. Serving
+    * builds DataFrames on many threads at once. */
+  private val schemas = new ConcurrentHashMap[String, (Source, StructType)]()
+
+  private def read(spark: SparkSession, path: String): DataFrame = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // a missing path keeps Spark's own PATH_NOT_FOUND analysis error
+    if (!fs.exists(p)) spark.read.parquet(path)
+    else {
+      val source = Source(
+        leafFiles(fs, fs.getFileStatus(p))
+          .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+          .sorted,
+        SchemaConfs.map(spark.conf.getOption))
+      val (_, schema) = schemas.compute(fs.makeQualified(p).toString,
+        (_, memo) =>
+          if (memo != null && memo._1 == source) memo
+          else (source, spark.read.parquet(path).schema))
+      spark.read.schema(schema).parquet(path)
+    }
+  }
+
+  /** Plain statuses, not `listFiles`' located ones: building a located
+    * status reads the file's permissions, which on the local file
+    * system without native IO forks a process per file. */
+  private def leafFiles(fs: FileSystem, st: FileStatus): Seq[FileStatus] =
+    if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(leafFiles(fs, _))
+    else Seq(st)
 
   /** events.ts has shipped in two physical layouts across testdata
     * generations: parquet INT64 TIMESTAMP(NANOS) — which Spark's vector
@@ -27,7 +84,7 @@ object Tables {
     * microsecond timestamps (matching what DuckDB reads natively, so
     * the oracle sees the same values either way). */
   private def eventsRaw(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"$sfDir/events.parquet")
+    read(spark, s"$sfDir/events.parquet")
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")

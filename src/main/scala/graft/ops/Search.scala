@@ -1,8 +1,8 @@
 package graft.ops
 
 import graft.{Corpus, Tables}
-import graft.functions.{TextOps, VectorOps}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.functions.{Embeddings, TextOps, VectorOps}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The reference's serving layer re-expressed Spark-first:
@@ -11,11 +11,15 @@ import org.apache.spark.sql.functions._
   * FTS + pagination (`search.py:47-74`), snippet extraction
   * (`search.py:102-112`), RAG context assembly (`search.py:127-138`).
   *
-  * Scale notes: the KNN query is a 1×N broadcast theta-join — the
-  * corpus side streams through a single projection + filter +
-  * TakeOrderedAndProject, no shuffle of the corpus, no global sort;
-  * at 100 TB this is the plan you want (embarrassingly parallel scan,
-  * k-sized heap per partition, k·P-row driver merge).
+  * Scale notes: the KNN queries (semantic, RAG, q57) share one plan
+  * shape, [[nearest]]: the embedded query is a literal vector folded
+  * into the corpus projection (no join, no broadcast), the corpus
+  * streams through that single projection into a
+  * TakeOrderedAndProject, and the range filter applies to the k
+  * survivors — no shuffle of the corpus, no global sort, one
+  * featurize per row; at 100 TB this is the plan you want
+  * (embarrassingly parallel scan, k-sized heap per partition, one
+  * k·P-row final merge).
   */
 object Search {
 
@@ -23,40 +27,50 @@ object Search {
     * the corpus vocabulary so the match is real). */
   val QueryText = "red widget bolt"
 
-  /** The embedded query: featurize at model width, normalize-then-
-    * truncate to reference width (quirk Q1) — the "embed the query
-    * string" step that is an Ollama call in the reference, as a 1-row
-    * broadcast side. */
-  private def queryVector(spark: SparkSession): DataFrame = {
-    import graft.functions.Embeddings
-    spark.range(1).select(VectorOps.truncateKnown(
-      Embeddings.featurize(lit(QueryText), Embeddings.ModelDims),
-      Embeddings.RefDims).as("q_emb"))
+  /** The 5 nearest rows of `rows` to the embedded `query` string,
+    * with their `distance` column.
+    *
+    * The query is featurized at model width and normalized-then-
+    * truncated to reference width (quirk Q1) — the "embed the query
+    * string" step that is an Ollama call in the reference. That
+    * expression is constant, so Catalyst folds it into a literal vector
+    * inside the corpus projection. Each row scores the reference's
+    * negative-inner-product distance (quirk Q2) against `vector`, then
+    * maps it through `score`. The top 5 are taken by
+    * `(distance asc NULLS LAST, id)`, and only then does the optional
+    * `distance <= maxDistance` range filter apply. That is the same
+    * answer as filtering first: the rows that pass are a prefix of the
+    * order, since NULL and NaN sort after every number and fail the
+    * filter (NearestSpec checks this algebra). Filtering after the
+    * limit leaves Catalyst no filter to push below the projection, so
+    * the featurizer runs once per row. */
+  private def nearest(rows: DataFrame, vector: Column, query: String,
+      id: String, maxDistance: Option[Double],
+      score: Column => Column = identity): DataFrame = {
+    val q = VectorOps.truncateKnown(Embeddings.featurize(lit(query),
+      Embeddings.ModelDims), Embeddings.RefDims)
+    val top = rows.withColumn("distance", score(VectorOps.negDot(vector, q)))
+      .orderBy(col("distance").asc_nulls_last, col(id))
+      .limit(5)
+    maxDistance.fold(top)(t => top.filter(col("distance") <= t))
   }
 
-  private[ops] val queryVectorSql: String = {
-    import graft.functions.Embeddings
+  private[ops] val queryVectorSql: String =
     Embeddings.featurizeCtes(s"(SELECT 0 AS qid, '$QueryText' AS qt)",
       "qid", "qt", dims = Embeddings.ModelDims, prefix = "q") + ",\n" +
       s"qv AS (SELECT v[1:${Embeddings.RefDims}] AS q_emb FROM qfeat)"
-  }
 
   /** Semantic search (E2) at reference dimensionality: featurize the
     * query string, score the 1024-d corpus with the reference's
     * negative-inner-product distance (quirk Q2), range-filter at
     * 0.05, top-5 ascending. The corpus side is one codegen'd scan —
     * featurize + dot are native expressions — with a per-partition
-    * top-k heap; no corpus shuffle.
+    * top-k heap; no corpus shuffle ([[nearest]]).
     */
-  def semanticSearch(spark: SparkSession, sfDir: String): DataFrame = {
-    val corpus = Corpus.webPagesWithEmbeddings(spark, sfDir)
-    corpus.crossJoin(broadcast(queryVector(spark)))
-      .withColumn("distance", VectorOps.negDot(col("embedding"), col("q_emb")))
-      .filter(col("distance") <= 0.05)
-      .orderBy(col("distance"), col("id"))
-      .limit(5)
+  def semanticSearch(spark: SparkSession, sfDir: String): DataFrame =
+    nearest(Corpus.webPagesWithEmbeddings(spark, sfDir), col("embedding"),
+      QueryText, "id", Some(0.05))
       .select(col("id"), col("url"), round(col("distance"), 6).as("distance"))
-  }
 
   val semanticSearchSql: String =
     s"""WITH ${Corpus.webPagesEmbCte},
@@ -86,27 +100,18 @@ object Search {
     * [[RefDims]] (quirk Q1 order — the stored vectors are not unit
     * norm), same for the query literal, then the negative-inner-
     * product range + top-k chain. The corpus side is a single
-    * codegen'd scan (native featurizer + native dot product, 1024-d);
-    * the query side is a broadcast 1-row cross join. */
+    * codegen'd scan (native featurizer + native dot product, 1024-d)
+    * against the literal query vector ([[nearest]]). */
   def knn1024(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.functions.Embeddings
     val docs = Tables.documents(spark, sfDir)
       .filter(col("doc_id") < 100)
       .select(col("doc_id"), VectorOps.truncateKnown(
         Embeddings.featurize(col("text"), ModelDims), RefDims).as("v"))
-    val q = spark.range(1).select(VectorOps.truncateKnown(
-      Embeddings.featurize(lit("fast merge window"), ModelDims), RefDims)
-      .as("qv"))
-    docs.crossJoin(broadcast(q))
-      .withColumn("distance", VectorOps.negDot(col("v"), col("qv")))
-      .filter(col("distance") <= 0.05)
-      .orderBy(col("distance"), col("doc_id"))
-      .limit(5)
+    nearest(docs, col("v"), "fast merge window", "doc_id", Some(0.05))
       .select(col("doc_id"), round(col("distance"), 6).as("distance"))
   }
 
   val knn1024Sql: String = {
-    import graft.functions.Embeddings
     val docCtes = Embeddings.featurizeCtes(
       "(SELECT doc_id, text FROM documents WHERE doc_id < 100)",
       "doc_id", "text", dims = 1280)
@@ -293,14 +298,11 @@ object Search {
 
   /** RAG context assembly (P12): top-5 semantic hits formatted
     * "URL: {url}\nContent: {content}" and joined with blank lines —
-    * one ordered string aggregation. */
+    * one ordered string aggregation. The hits rank by the rounded
+    * distance, as the oracle does. */
   def ragContext(spark: SparkSession, sfDir: String): DataFrame = {
-    val corpus = Corpus.webPagesWithEmbeddings(spark, sfDir)
-    val top = corpus.crossJoin(broadcast(queryVector(spark)))
-      .withColumn("distance",
-        round(VectorOps.negDot(col("embedding"), col("q_emb")), 6))
-      .orderBy(col("distance"), col("id"))
-      .limit(5)
+    val top = nearest(Corpus.webPagesWithEmbeddings(spark, sfDir),
+      col("embedding"), QueryText, "id", None, round(_, 6))
       .select(col("id"), col("distance"),
         concat(lit("URL: "), col("url"), lit("\nContent: "), col("content"))
           .as("chunk"))

@@ -33,9 +33,11 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("TakeOrderedAndProject"))
   }
 
-  test("semantic search: query broadcast, corpus not shuffled, top-k heap") {
+  test("semantic search: literal query vector, corpus not shuffled, top-k heap") {
     val p = plan(ops.Search.semanticSearch(spark, sfDir))
-    assert(p.contains("BroadcastNestedLoopJoin"))
+    assert(!p.contains("BroadcastNestedLoopJoin"),
+      s"query vector joined instead of folded into the scan:\n$p")
+    assert(!p.contains("Exchange"), s"corpus shuffled:\n$p")
     assert(p.contains("TakeOrderedAndProject"))
   }
 

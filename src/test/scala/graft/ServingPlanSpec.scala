@@ -1,0 +1,86 @@
+package graft
+
+import java.util.concurrent.atomic.AtomicInteger
+import graft.expressions.HashFeaturize
+import graft.ops.Search
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+
+/** The serving path's fixed Spark work. Building a response DataFrame
+  * launches no job once its tables' schemas are known ([[Tables]]),
+  * the KNN answers (semantic, RAG, q57) run as one job with one
+  * featurize per row and no join against the query vector, and snippet
+  * search stays one job. */
+class ServingPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
+
+  private val builds: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
+    "dashboard" -> Search.dashboard,
+    "listingPage" -> ((s, d) => Search.listingPage(s, d, "widget")),
+    "semanticSearch" -> Search.semanticSearch,
+    "ragContext" -> Search.ragContext,
+    "snippetSearch" -> Search.snippetSearch,
+    "knn1024" -> Search.knn1024)
+
+  private val oneJob = Set("semanticSearch", "ragContext", "snippetSearch",
+    "knn1024")
+  private val knn = Set("semanticSearch", "ragContext", "knn1024")
+
+  /** `body`'s result and the number of jobs it launched from this
+    * thread, counted once the listener bus has drained. */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"serving-plan-${System.nanoTime()}"
+    val n = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (Option(js.properties).exists(
+            _.getProperty("spark.jobGroup.id") == group)) n.incrementAndGet()
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, group)
+    try {
+      val r = body
+      ListenerBusDrain(sc)
+      (r, n.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  for ((name, build) <- builds) {
+    test(s"$name: a second build launches no job") {
+      build(spark, sfDir)
+      val (_, jobs) = jobsOf(build(spark, sfDir))
+      assert(jobs == 0, s"building $name launched $jobs job(s)")
+    }
+  }
+
+  for ((name, build) <- builds if oneJob(name)) {
+    test(s"$name: collect runs exactly one job") {
+      val df = build(spark, sfDir)
+      val (rows, jobs) = jobsOf(df.collect())
+      assert(rows.nonEmpty, s"$name returned no rows")
+      assert(jobs == 1, s"collecting $name ran $jobs jobs")
+    }
+  }
+
+  for ((name, build) <- builds if knn(name)) {
+    test(s"$name: one featurize per row, no join against the query") {
+      val df = build(spark, sfDir)
+      df.collect()
+      // the final adaptive plan, query stages included
+      val plan = df.queryExecution.executedPlan
+      val featurizers = flatMap(plan)(
+        _.expressions.flatMap(_.collect { case h: HashFeaturize => h }))
+      assert(featurizers.size == 1,
+        s"$name featurizes ${featurizers.size} times:\n$plan")
+      assert(collect(plan) { case j: BroadcastNestedLoopJoinExec => j }.isEmpty,
+        s"$name still joins against a broadcast relation:\n$plan")
+    }
+  }
+}

@@ -105,6 +105,61 @@ class TablesSpec extends SparkSpec {
     }
   }
 
+  /** A fresh scratch directory for a table the test writes itself. */
+  private def scratchDir(): String =
+    java.nio.file.Files.createTempDirectory("graft-tables").toString
+
+  test("a rewritten file resolves its new schema") {
+    // the loader memoizes each file's schema; testdata is regenerated
+    // in place, so a rewritten file must infer afresh
+    import spark.implicits._
+    val dir = scratchDir()
+    Seq((1, "AFRICA")).toDF("r_regionkey", "r_name")
+      .write.parquet(s"$dir/region.parquet")
+    assert(Tables.region(spark, dir).schema.fieldNames.toSeq ==
+      Seq("r_regionkey", "r_name"))
+    Seq((1L, "AFRICA", 0.5)).toDF("r_key", "r_label", "r_weight")
+      .write.mode("overwrite").parquet(s"$dir/region.parquet")
+    val rewritten = Tables.region(spark, dir)
+    assert(rewritten.schema.map(f => f.name -> f.dataType.simpleString) ==
+      Seq("r_key" -> "bigint", "r_label" -> "string", "r_weight" -> "double"),
+      "Tables kept the schema of the file before the rewrite")
+    assert(rewritten.collect().toSeq.map(_.toSeq) == Seq(Seq(1L, "AFRICA", 0.5)))
+  }
+
+  test("spark.sql.parquet.binaryAsString is part of the resolved schema") {
+    val dir = scratchDir()
+    // an unannotated parquet BINARY column, as non-Spark writers emit
+    // it: Spark's own writer stores its schema in the footer, and that
+    // schema overrides binaryAsString
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.io.api.Binary
+    import org.apache.parquet.schema.MessageTypeParser
+    val schema = MessageTypeParser.parseMessageType(
+      "message region { required binary r_name; }")
+    val writer = ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(s"$dir/region.parquet"))
+      .withConf(spark.sparkContext.hadoopConfiguration)
+      .withType(schema).build()
+    try writer.write(new SimpleGroupFactory(schema).newGroup()
+      .append("r_name", Binary.fromString("AFRICA")))
+    finally writer.close()
+    val key = "spark.sql.parquet.binaryAsString"
+    val before = spark.conf.getOption(key)
+    def resolved(): String =
+      Tables.region(spark, dir).schema("r_name").dataType.simpleString
+    try {
+      spark.conf.set(key, "false")
+      assert(resolved() == "binary")
+      spark.conf.set(key, "true")
+      assert(resolved() == "string",
+        s"Tables kept the schema resolved before $key changed")
+      spark.conf.set(key, "false")
+      assert(resolved() == "binary")
+    } finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("events.ts normalizes to TimestampType under both raw layouts") {
     // Post-adapter type must be the TZ-aware TimestampType so
     // date_trunc/window/unix_micros all behave identically across
