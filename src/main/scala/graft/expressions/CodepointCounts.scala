@@ -73,7 +73,7 @@ object CodepointCounts {
       i += n
     }
     val keys = new Array[Any](m.size)
-    val vals = new Array[Any](m.size)
+    val vals = new Array[Long](m.size)
     val it = m.entrySet().iterator()
     var j = 0
     while (it.hasNext) {
@@ -82,7 +82,8 @@ object CodepointCounts {
       vals(j) = e.getValue.longValue()
       j += 1
     }
-    new ArrayBasedMapData(new GenericArrayData(keys), new GenericArrayData(vals))
+    new ArrayBasedMapData(new GenericArrayData(keys),
+      UnsafeArrayData.fromPrimitiveArray(vals))
   }
 
   /** Column API: per-codepoint counts of a string column. */

@@ -6,7 +6,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen._
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
 /** Native banded hyperplane-LSH signature: project a vector onto
@@ -141,7 +141,7 @@ object HyperplaneBands {
       if (acc >= 0) keys(j / bandBits) |= 1 << (j % bandBits)
       j += 1
     }
-    new GenericArrayData(keys)
+    UnsafeArrayData.fromPrimitiveArray(keys)
   }
 
   /** Column API: banded sign-bit keys of the fixed hyperplane

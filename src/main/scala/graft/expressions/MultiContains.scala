@@ -4,7 +4,6 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen._
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -122,7 +121,7 @@ case class MultiContains(child: Expression, patterns: Seq[String])
   }
 
   override def nullSafeEval(input: Any): Any =
-    new GenericArrayData(
+    UnsafeArrayData.fromPrimitiveArray(
       AhoCorasick.countHits(input.asInstanceOf[UTF8String].toString,
         patternArr))
 
@@ -131,8 +130,9 @@ case class MultiContains(child: Expression, patterns: Seq[String])
     val pats = ctx.addReferenceObj("patterns", patternArr,
       "java.lang.String[]")
     nullSafeCodeGen(ctx, ev, in => s"""
-      |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      |  graft.expressions.AhoCorasick.countHits($in.toString(), $pats));
+      |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+      |  .fromPrimitiveArray(
+      |    graft.expressions.AhoCorasick.countHits($in.toString(), $pats));
       |""".stripMargin)
   }
 

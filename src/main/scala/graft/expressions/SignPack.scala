@@ -3,7 +3,7 @@ package graft.expressions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen._
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 
@@ -64,7 +64,7 @@ case class SignPack(child: Expression) extends UnaryExpression {
       if (v >= 0 || v.isNaN) words(i / 64) |= 1L << (63 - (i % 64))
       i += 1
     }
-    new GenericArrayData(words)
+    UnsafeArrayData.fromPrimitiveArray(words)
   }
 
   override protected def doGenCode(ctx: CodegenContext,
@@ -93,8 +93,8 @@ case class SignPack(child: Expression) extends UnaryExpression {
          |    }
          |  }
          |  if (!${ev.isNull}) {
-         |    ${ev.value} =
-         |      new org.apache.spark.sql.catalyst.util.GenericArrayData($words);
+         |    ${ev.value} = org.apache.spark.sql.catalyst.expressions
+         |      .UnsafeArrayData.fromPrimitiveArray($words);
          |  }
          |}
        """.stripMargin

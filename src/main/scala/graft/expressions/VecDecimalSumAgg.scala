@@ -6,9 +6,9 @@ import java.nio.ByteBuffer
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
 /** Exact-decimal element-wise vector sum, cast to double — the native
@@ -116,7 +116,7 @@ case class VecDecimalSumAgg(
     val out = new Array[Double](d)
     var i = 0
     while (i < d) { out(i) = b.valueAt(i); i += 1 }
-    new GenericArrayData(out)
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
 
   override def serialize(b: Buf): Array[Byte] = b.toBytes

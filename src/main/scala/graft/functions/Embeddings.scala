@@ -59,6 +59,14 @@ object Embeddings {
   def embedStored(text: Column): Column =
     VectorOps.truncateKnown(featurize(text, ModelDims), RefDims)
 
+  /** `vec_dot(embedStored(text), query)` for a constant RefDims-wide
+    * `query`, without building the stored vector: one fused
+    * tokenize → hash → norm → dot kernel
+    * ([[graft.expressions.HashQueryDot]]), bit-identical to the
+    * unfused chain (HashFeaturizeSpec). */
+  def queryDot(text: Column, query: Column): Column =
+    graft.expressions.HashFeaturize.queryDot(text, query, ModelDims)
+
   /** [[embedStored]] for the vision path: over the base64 of the
     * image BYTES, like [[embedVision]]. */
   def embedVisionStored(bytes: Column): Column =

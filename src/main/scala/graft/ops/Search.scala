@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.{Corpus, Tables}
-import graft.functions.{Embeddings, TextOps, VectorOps}
+import graft.functions.{Embeddings, TextOps}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -13,13 +13,16 @@ import org.apache.spark.sql.functions._
   *
   * Scale notes: the KNN queries (semantic, RAG, q57) share one plan
   * shape, [[nearest]]: the embedded query is a literal vector folded
-  * into the corpus projection (no join, no broadcast), the corpus
-  * streams through that single projection into a
-  * TakeOrderedAndProject, and the range filter applies to the k
-  * survivors — no shuffle of the corpus, no global sort, one
-  * featurize per row; at 100 TB this is the plan you want
-  * (embarrassingly parallel scan, k-sized heap per partition, one
-  * k·P-row final merge).
+  * into the corpus projection (no join, no broadcast), and each row's
+  * text is scored against it by one fused kernel
+  * ([[graft.expressions.HashQueryDot]]: tokenize, hash, norm, then a
+  * dot over the query's few non-zero slots), so no 1024-d vector is
+  * built per row. The corpus streams through that single projection
+  * into a TakeOrderedAndProject, and the range filter applies to the k
+  * survivors — no shuffle of the corpus, no global sort, one hash pass
+  * per row; at 100 TB this is the plan you want (embarrassingly
+  * parallel scan, k-sized heap per partition, one k·P-row final
+  * merge).
   */
 object Search {
 
@@ -35,21 +38,23 @@ object Search {
     * string" step that is an Ollama call in the reference. That
     * expression is constant, so Catalyst folds it into a literal vector
     * inside the corpus projection. Each row scores the reference's
-    * negative-inner-product distance (quirk Q2) against `vector`, then
-    * maps it through `score`. The top 5 are taken by
+    * negative-inner-product distance (quirk Q2) between the stored
+    * embedding of its `text` and the query, through the fused
+    * [[graft.functions.Embeddings.queryDot]] (bit-identical to
+    * `vec_dot` over the stored vector), then maps it through `score`.
+    * The top 5 are taken by
     * `(distance asc NULLS LAST, id)`, and only then does the optional
     * `distance <= maxDistance` range filter apply. That is the same
     * answer as filtering first: the rows that pass are a prefix of the
     * order, since NULL and NaN sort after every number and fail the
     * filter (NearestSpec checks this algebra). Filtering after the
     * limit leaves Catalyst no filter to push below the projection, so
-    * the featurizer runs once per row. */
-  private def nearest(rows: DataFrame, vector: Column, query: String,
+    * each row's text is hashed once. */
+  private def nearest(rows: DataFrame, text: Column, query: String,
       id: String, maxDistance: Option[Double],
       score: Column => Column = identity): DataFrame = {
-    val q = VectorOps.truncateKnown(Embeddings.featurize(lit(query),
-      Embeddings.ModelDims), Embeddings.RefDims)
-    val top = rows.withColumn("distance", score(VectorOps.negDot(vector, q)))
+    val q = Embeddings.embedStored(lit(query))
+    val top = rows.withColumn("distance", score(-Embeddings.queryDot(text, q)))
       .orderBy(col("distance").asc_nulls_last, col(id))
       .limit(5)
     maxDistance.fold(top)(t => top.filter(col("distance") <= t))
@@ -61,14 +66,15 @@ object Search {
       s"qv AS (SELECT v[1:${Embeddings.RefDims}] AS q_emb FROM qfeat)"
 
   /** Semantic search (E2) at reference dimensionality: featurize the
-    * query string, score the 1024-d corpus with the reference's
+    * query string, score the 1024-d corpus embeddings
+    * ([[Corpus.webPagesWithEmbeddings]]) with the reference's
     * negative-inner-product distance (quirk Q2), range-filter at
-    * 0.05, top-5 ascending. The corpus side is one codegen'd scan —
-    * featurize + dot are native expressions — with a per-partition
-    * top-k heap; no corpus shuffle ([[nearest]]).
+    * 0.05, top-5 ascending. The corpus side is one codegen'd scan that
+    * scores each page's content with the fused kernel, with a
+    * per-partition top-k heap; no corpus shuffle ([[nearest]]).
     */
   def semanticSearch(spark: SparkSession, sfDir: String): DataFrame =
-    nearest(Corpus.webPagesWithEmbeddings(spark, sfDir), col("embedding"),
+    nearest(Corpus.webPages(spark, sfDir), col("content"),
       QueryText, "id", Some(0.05))
       .select(col("id"), col("url"), round(col("distance"), 6).as("distance"))
 
@@ -85,29 +91,19 @@ object Search {
       |  LIMIT 5)
       |ORDER BY d_raw, id""".stripMargin
 
-  /** The reference's true embedding dimensionality: pgvector
-    * `Vector(1024)` (`models.py:32`); the embedding model emits more
-    * dims, and the pipeline normalizes THEN truncates to 1024 (quirk
-    * Q1 — stored vectors are intentionally not unit-norm). */
-  val RefDims: Int = graft.functions.Embeddings.RefDims
-  /** Stand-in "model output" width (> RefDims so the truncation is
-    * honest, like Ollama's 3072-d llama3.2 output vs the 1024 column). */
-  val ModelDims: Int = graft.functions.Embeddings.ModelDims
-
   /** Semantic search at REFERENCE dimensionality (E2 at 1024-d):
-    * featurize document text at [[ModelDims]] (the featurizer output
-    * is unit-norm, i.e. already L2-normalized), truncate to
-    * [[RefDims]] (quirk Q1 order — the stored vectors are not unit
-    * norm), same for the query literal, then the negative-inner-
-    * product range + top-k chain. The corpus side is a single
-    * codegen'd scan (native featurizer + native dot product, 1024-d)
-    * against the literal query vector ([[nearest]]). */
+    * featurize document text at [[Embeddings.ModelDims]] (the
+    * featurizer output is unit-norm, i.e. already L2-normalized),
+    * truncate to [[Embeddings.RefDims]] (quirk Q1 order — the stored
+    * vectors are not unit norm), same for the query literal, then the
+    * negative-inner-product range + top-k chain. The corpus side is a
+    * single codegen'd scan that scores each document's text against
+    * the literal query vector with the fused kernel ([[nearest]]). */
   def knn1024(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables.documents(spark, sfDir)
       .filter(col("doc_id") < 100)
-      .select(col("doc_id"), VectorOps.truncateKnown(
-        Embeddings.featurize(col("text"), ModelDims), RefDims).as("v"))
-    nearest(docs, col("v"), "fast merge window", "doc_id", Some(0.05))
+      .select(col("doc_id"), col("text"))
+    nearest(docs, col("text"), "fast merge window", "doc_id", Some(0.05))
       .select(col("doc_id"), round(col("distance"), 6).as("distance"))
   }
 
@@ -301,8 +297,8 @@ object Search {
     * one ordered string aggregation. The hits rank by the rounded
     * distance, as the oracle does. */
   def ragContext(spark: SparkSession, sfDir: String): DataFrame = {
-    val top = nearest(Corpus.webPagesWithEmbeddings(spark, sfDir),
-      col("embedding"), QueryText, "id", None, round(_, 6))
+    val top = nearest(Corpus.webPages(spark, sfDir),
+      col("content"), QueryText, "id", None, round(_, 6))
       .select(col("id"), col("distance"),
         concat(lit("URL: "), col("url"), lit("\nContent: "), col("content"))
           .as("chunk"))

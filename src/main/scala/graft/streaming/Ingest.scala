@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.functions.{Embeddings, TextOps, VectorOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.RowOrdering
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -43,13 +44,27 @@ object Ingest {
     * union + keep newest per url. Partitioned by the merge key —
     * the only shuffle — and idempotent (re-applying a batch is a
     * no-op), which is what makes retry-based delivery exactly-once
-    * in effect. */
+    * in effect.
+    *
+    * The winner per url is the row with the greatest `last_crawled`.
+    * Every row of a batch carries the same stamp and a crawl can
+    * deliver a url more than once in one batch, so a tie is broken on
+    * the rows' own values: the least by every other orderable column,
+    * in schema order, ascending with nulls first. Map columns cannot
+    * be ordered and take no part, so rows that differ only in a map
+    * still tie. Without the tie-break the winner would depend on the
+    * physical row order, and a batch re-delivered after a crash or
+    * staged with another partitioning could keep a different row. */
   def upsertInto(state: DataFrame, batch: DataFrame): DataFrame = {
     val cols = state.columns
+    val ties = state.schema.fields.toSeq.collect {
+      case f if f.name != "url" && f.name != "last_crawled" &&
+          RowOrdering.isOrderable(f.dataType) => col(f.name).asc_nulls_first
+    }
     state.unionByName(batch.select(cols.map(col): _*))
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("url"))
-          .orderBy(col("last_crawled").desc)))
+          .orderBy(col("last_crawled").desc +: ties: _*)))
       .filter(col("rn") === 1).drop("rn")
   }
 

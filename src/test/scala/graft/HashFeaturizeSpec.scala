@@ -1,6 +1,8 @@
 package graft
 
-import graft.functions.Embeddings
+import graft.expressions.HashFeaturize
+import graft.functions.{Embeddings, VectorOps}
+import org.apache.spark.sql.catalyst.expressions.{Literal, UnsafeArrayData}
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -56,6 +58,58 @@ class HashFeaturizeSpec extends SparkSpec {
     val bucket = (h % Embeddings.Dims).toInt
     val sign = if (((h >> 6) & 1L) == 0L) 1.0 else -1.0
     assert(v(bucket) === sign) // single token -> unit vector on its bucket
+  }
+
+  test("vec_featurize returns unboxed UnsafeArrayData") {
+    val v = HashFeaturize(Literal("hello world"), 64).eval()
+    assert(v.isInstanceOf[UnsafeArrayData], v.getClass.getName)
+  }
+
+  test("vec_query_dot is bit-identical to vec_dot over the stored vector") {
+    val word = Gen.oneOf(
+      Gen.alphaNumStr.map(_.take(8)),
+      Gen.oneOf("Fast", "merge", "WINDOW", "red", "widget", "bolt", "café",
+        "naïve", "日本語", "a_b", "42", "x!y", "...", "—"))
+    val text: Gen[Option[String]] = Gen.frequency(
+      1 -> Gen.const(None),
+      1 -> Gen.const(Some("")),
+      1 -> Gen.oneOf("!!!", "... ??? ---", "   ").map(Some(_)),
+      4 -> Gen.choose(1, 12).flatMap(Gen.listOfN(_, word))
+        .map(w => Some(w.mkString(" "))),
+      3 -> Gen.listOfN(100, word).map(w => Some(w.mkString(" "))))
+    val texts = (1 to 30).flatMap(i =>
+      text.apply(Gen.Parameters.default, Seed(i.toLong)))
+    assert(texts.size === 30)
+    // repartitioned so the projection runs in the plan, not folded
+    // into a local relation at optimization time
+    val df = texts.toDF("t").repartition(2)
+    val queries = Seq("red widget bolt", "fast merge window",
+      "Merge merge MERGE the window", "!!!")
+    val modes = Seq("CODEGEN_ONLY" -> "true", "NO_CODEGEN" -> "false")
+    val prev = Seq("spark.sql.codegen.factoryMode", "spark.sql.codegen.wholeStage")
+      .map(k => k -> spark.conf.getOption(k))
+    var nonZero = 0
+    try for ((factory, wholeStage) <- modes; query <- queries) {
+      spark.conf.set("spark.sql.codegen.factoryMode", factory)
+      spark.conf.set("spark.sql.codegen.wholeStage", wholeStage)
+      val q = Embeddings.embedStored(lit(query))
+      val rows = df.select($"t", Embeddings.queryDot($"t", q),
+        VectorOps.dot(Embeddings.embedStored($"t"), q)).collect()
+      assert(rows.length === texts.size)
+      rows.foreach { r =>
+        val ctx = s"$factory, query '$query', text '${r.get(0)}'"
+        assert(r.isNullAt(1) === r.isNullAt(2), ctx)
+        if (!r.isNullAt(2)) {
+          assert(java.lang.Double.doubleToRawLongBits(r.getDouble(1)) ===
+            java.lang.Double.doubleToRawLongBits(r.getDouble(2)), ctx)
+          if (r.getDouble(2) != 0.0) nonZero += 1
+        }
+      }
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+    assert(nonZero > 0, "every generated case scored zero")
   }
 
   test("vec_featurize registers through GraftExtensions for SQL") {

@@ -62,6 +62,38 @@ class IngestSpec extends SparkSpec {
       merged.orderBy("url").collect().toSeq)
   }
 
+  test("upsertInto: a url repeated in one batch keeps the same row on any layout") {
+    val state = Ingest.transformBatch(items(
+      PageItem("https://a.test/1", None, None, Some("old"), "html", "text")), t0)
+    val rows = Seq(
+      PageItem("https://a.test/1", None, None, Some("zeta"), "html", "text"),
+      PageItem("https://a.test/2", None, None, Some("other"), "html", "text"),
+      PageItem("https://a.test/1", None, None, Some("alpha"), "html", "text"))
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    val layouts = for {
+      order <- Seq(rows, rows.reverse)
+      parts <- Seq(1, 4)
+      shuffle <- Seq(1, 7)
+    } yield (order, parts, shuffle)
+    val merges = layouts.map { case (order, parts, shuffle) =>
+      spark.conf.set("spark.sql.shuffle.partitions", shuffle.toString)
+      try {
+        val batch = Ingest.transformBatch(items(order: _*).repartition(parts), t1)
+          .localCheckpoint()
+        val merged = Ingest.upsertInto(state, batch).localCheckpoint()
+        val again = Ingest.upsertInto(merged, batch)
+        val got = merged.orderBy("url").collect().toSeq
+        // re-delivering the batch changes nothing
+        assert(again.orderBy("url").collect().toSeq === got,
+          s"re-applying the batch changed the corpus ($parts parts, $shuffle shuffle)")
+        got
+      } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    }
+    assert(merges.distinct.size === 1, s"winners differ by layout: $merges")
+    // the tie breaks on the row's values: the least content wins
+    assert(merges.head.map(_.getAs[String]("content")) === Seq("alpha", "other"))
+  }
+
   test("ledger transition drives the Q3 state machine") {
     val ledger = Seq(("job-1", "queued", t0), ("job-2", "queued", t0))
       .toDF("id", "status", "updated_at")

@@ -1,19 +1,23 @@
 package graft
 
 import java.util.concurrent.atomic.AtomicInteger
-import graft.expressions.HashFeaturize
+import graft.expressions.{HashFeaturize, HashQueryDot}
 import graft.ops.Search
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.TakeOrderedAndProjectExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
 /** The serving path's fixed Spark work. Building a response DataFrame
   * launches no job once its tables' schemas are known ([[Tables]]),
-  * the KNN answers (semantic, RAG, q57) run as one job with one
-  * featurize per row and no join against the query vector, and snippet
-  * search stays one job. */
+  * the KNN answers (semantic, RAG, q57) run as one job that scores each
+  * row's text with one fused kernel, builds no vector column and joins
+  * nothing against the query vector, and snippet search stays one
+  * job. */
 class ServingPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private val builds: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
@@ -75,10 +79,23 @@ class ServingPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       df.collect()
       // the final adaptive plan, query stages included
       val plan = df.queryExecution.executedPlan
-      val featurizers = flatMap(plan)(
-        _.expressions.flatMap(_.collect { case h: HashFeaturize => h }))
-      assert(featurizers.size == 1,
-        s"$name featurizes ${featurizers.size} times:\n$plan")
+      def holding[T](pick: PartialFunction[Expression, T]) =
+        flatMap(plan)(_.expressions.flatMap(_.collect(pick)))
+      val scorers = holding { case d: HashQueryDot => d }
+      assert(scorers.size == 1,
+        s"$name scores ${scorers.size} times:\n$plan")
+      assert(holding { case h: HashFeaturize => h }.isEmpty,
+        s"$name still builds a featurized vector:\n$plan")
+      val topK = collect(plan) { case t: TakeOrderedAndProjectExec => t }
+      assert(topK.size == 1, s"$name has no single top-k:\n$plan")
+      val vectors = collect(topK.head.child) {
+        case p if p.output.exists(_.dataType match {
+          case ArrayType(DoubleType, _) => true
+          case _ => false
+        }) => p
+      }
+      assert(vectors.isEmpty,
+        s"$name carries a vector column below the top-k:\n$plan")
       assert(collect(plan) { case j: BroadcastNestedLoopJoinExec => j }.isEmpty,
         s"$name still joins against a broadcast relation:\n$plan")
     }

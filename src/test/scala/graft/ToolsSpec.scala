@@ -3,8 +3,9 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The dev mains stay few and documented: every main the docs tell a
-  * reader to run exists, the oracle dump has one writer, and JIT
-  * timing lives only in the bench child and the one profiler. */
+  * reader to run exists, the oracle dump has one writer, JIT timing
+  * lives only in the bench child and the one profiler, and no kernel
+  * boxes a primitive array result. */
 class ToolsSpec extends AnyFunSuite {
 
   private def sources: Seq[java.io.File] = {
@@ -39,6 +40,13 @@ class ToolsSpec extends AnyFunSuite {
   test("only Verify.scala writes oracle_sql.json") {
     assert(holders("oracle_sql.json") === Set("Verify.scala"),
       "dump through Verify.dump instead of another copy")
+  }
+
+  test("only expressions/CodepointCounts.scala holds GenericArrayData") {
+    // its string keys need an object array; every primitive result is
+    // UnsafeArrayData.fromPrimitiveArray, which boxes nothing
+    assert(holders("GenericArrayData") === Set("expressions/CodepointCounts.scala"),
+      "return primitive arrays with UnsafeArrayData.fromPrimitiveArray")
   }
 
   test("only Bench.scala and tools/Profile.scala read the JIT compile clock") {
