@@ -43,9 +43,13 @@ object Corpus {
   }
 
   /** web_pages ← part. Purely scalar derivation → identical rows in
-    * Spark and DuckDB; scales with the part table. */
-  def webPages(spark: SparkSession, sfDir: String): DataFrame = {
-    val p = Tables.part(spark, sfDir)
+    * Spark and DuckDB; scales with the part table. The analyzed frame
+    * is built once per session, `part` files and session confs
+    * ([[Tables.derived]]): every serving request starts from it. */
+  def webPages(spark: SparkSession, sfDir: String): DataFrame =
+    Tables.derived(spark, sfDir, "part", "web_pages")(webPagesOf)
+
+  private def webPagesOf(p: DataFrame): DataFrame = {
     val id = col("p_partkey")
     p.select(
       id.as("id"),

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal, UnaryMinus}
-import graft.expressions.{DotProduct, HashFeaturize, NfcNormalize, SignPack}
+import graft.expressions.{DotProduct, FtsMatch, HashFeaturize, HashQueryDot, NfcNormalize, SignPack, Tokens}
 
 /** Session extension point — registers the engine's native SQL
   * functions so `spark.sql("SELECT vec_dot(a, b) ...")` works:
@@ -35,16 +35,45 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new FunctionIdentifier("vec_featurize"),
       new ExpressionInfo(classOf[HashFeaturize].getName, "vec_featurize"),
       (args: Seq[Expression]) => {
-        if (args.isEmpty || args.size > 2)
-          throw new IllegalArgumentException(
-            s"vec_featurize expects (text[, dims]), got ${args.size} arguments")
-        val dims = args.lift(1) match {
-          case None => graft.functions.Embeddings.Dims
-          case Some(Literal(v: Int, _)) => v
-          case Some(other) => throw new IllegalArgumentException(
-            s"vec_featurize dims must be an integer literal, got $other")
-        }
-        HashFeaturize(args.head, dims)
+        arity("vec_featurize", "(text[, dims])", args, 1, 2)
+        HashFeaturize(args.head, dims("vec_featurize", args.lift(1)))
       }))
+    ext.injectFunction((
+      new FunctionIdentifier("vec_query_dot"),
+      new ExpressionInfo(classOf[HashQueryDot].getName, "vec_query_dot"),
+      (args: Seq[Expression]) => {
+        arity("vec_query_dot", "(text, query[, dims])", args, 2, 3)
+        HashQueryDot(args(0), args(1), dims("vec_query_dot", args.lift(2)))
+      }))
+    ext.injectFunction((
+      new FunctionIdentifier("text_tokens"),
+      new ExpressionInfo(classOf[Tokens].getName, "text_tokens"),
+      (args: Seq[Expression]) => {
+        arity("text_tokens", "(text)", args, 1, 1)
+        Tokens(args.head)
+      }))
+    for ((name, stemmed) <- Seq("fts_match" -> false, "fts_match_stemmed" -> true))
+      ext.injectFunction((
+        new FunctionIdentifier(name),
+        new ExpressionInfo(classOf[FtsMatch].getName, name),
+        (args: Seq[Expression]) => {
+          arity(name, "(text, query)", args, 2, 2)
+          FtsMatch(args(0), args(1), stemmed)
+        }))
+  }
+
+  private def arity(fn: String, shape: String, args: Seq[Expression],
+      min: Int, max: Int): Unit =
+    if (args.size < min || args.size > max)
+      throw new IllegalArgumentException(
+        s"$fn expects $shape, got ${args.size} arguments")
+
+  /** An optional featurizer width argument: an integer literal, by
+    * default [[graft.functions.Embeddings.Dims]]. */
+  private def dims(fn: String, arg: Option[Expression]): Int = arg match {
+    case None => graft.functions.Embeddings.Dims
+    case Some(Literal(v: Int, _)) => v
+    case Some(other) => throw new IllegalArgumentException(
+      s"$fn dims must be an integer literal, got $other")
   }
 }

@@ -18,7 +18,9 @@ import org.apache.spark.sql.types.StructType
   * the inferred schema depends on — the qualified path, the length and
   * modification time of every leaf file under it, and the session
   * confs parquet schema conversion reads — so a regenerated file or a
-  * toggled conf infers afresh. Rows are never cached: only the schema.
+  * toggled conf infers afresh. Rows are never cached: only the schema,
+  * and through [[derived]] an analyzed derivation (no data) on the same
+  * key.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -48,22 +50,63 @@ object Tables {
     * builds DataFrames on many threads at once. */
   private val schemas = new ConcurrentHashMap[String, (Source, StructType)]()
 
-  private def read(spark: SparkSession, path: String): DataFrame = {
+  private def read(spark: SparkSession, path: String): DataFrame =
+    resolve(spark, path).fold(spark.read.parquet(path))(r =>
+      spark.read.schema(r.schema).parquet(path))
+
+  /** A present path: its qualified name, [[Source]] and schema. */
+  private final case class Resolved(qualified: String, source: Source,
+      schema: StructType)
+
+  /** The path's memoized schema, inferred afresh when its source
+    * changed; None for a missing path, which keeps Spark's own
+    * PATH_NOT_FOUND analysis error. */
+  private def resolve(spark: SparkSession, path: String): Option[Resolved] = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a missing path keeps Spark's own PATH_NOT_FOUND analysis error
-    if (!fs.exists(p)) spark.read.parquet(path)
+    if (!fs.exists(p)) None
     else {
       val source = Source(
         leafFiles(fs, fs.getFileStatus(p))
           .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
           .sorted,
         SchemaConfs.map(spark.conf.getOption))
-      val (_, schema) = schemas.compute(fs.makeQualified(p).toString,
+      val qualified = fs.makeQualified(p).toString
+      val (_, schema) = schemas.compute(qualified,
         (_, memo) =>
           if (memo != null && memo._1 == source) memo
           else (source, spark.read.parquet(path).schema))
-      spark.read.schema(schema).parquet(path)
+      Some(Resolved(qualified, source, schema))
+    }
+  }
+
+  /** What a [[derived]] frame was built from: the session, the table's
+    * [[Source]], and every session conf (analysis reads some of them,
+    * e.g. the time zone a timestamp literal parses in). */
+  private final case class DerivedKey(session: SparkSession, source: Source,
+      confs: Map[String, String])
+
+  /** (derivation name, qualified path) → the key its frame was built
+    * from, and the frame. A changed key replaces the entry. */
+  private val derivedFrames =
+    new ConcurrentHashMap[(String, String), (DerivedKey, DataFrame)]()
+
+  /** `derive(load(spark, sfDir, name))`, analyzed once and reused while
+    * the session, the table's files and the session confs stay the
+    * same: a rewritten file or a changed conf builds afresh. `tag`
+    * names the derivation. Not for `events`, whose adapter this
+    * would skip. */
+  def derived(spark: SparkSession, sfDir: String, name: String, tag: String)(
+      derive: DataFrame => DataFrame): DataFrame = {
+    require(name != "events", "events needs its adapter: use Tables.events")
+    val path = s"$sfDir/$name.parquet"
+    resolve(spark, path) match {
+      case None => derive(spark.read.parquet(path))
+      case Some(r) =>
+        val key = DerivedKey(spark, r.source, spark.conf.getAll)
+        derivedFrames.compute((tag, r.qualified), (_, memo) =>
+          if (memo != null && memo._1 == key) memo
+          else (key, derive(spark.read.schema(r.schema).parquet(path))))._2
     }
   }
 

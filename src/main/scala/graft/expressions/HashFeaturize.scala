@@ -20,7 +20,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Semantically identical to the HOF formulation
   * ([[graft.functions.Embeddings.featurizeHof]]) — same tokenizer
-  * (maximal `[a-z0-9_]` runs of the lowercased text), same 60-bit
+  * (the shared [[Tokenizer]] scan: maximal `[a-z0-9_]` runs of the
+  * lowercased text, no token array built), same 60-bit
   * md5-prefix hash, same bucket/sign rule, same left-to-right double
   * accumulation for the norm — but it walks the token stream ONCE
   * into a dims-slot local array instead of unrolling one `aggregate`
@@ -52,15 +53,17 @@ case class HashFeaturize(child: Expression, dims: Int)
       s"vec_featurize requires a string input and positive dims, " +
         s"got ${child.dataType.simpleString}, dims=$dims")
 
+  private lazy val icu = Tokenizer.useICU
+
   override def nullSafeEval(input: Any): Any =
-    HashFeaturize.compute(input.asInstanceOf[UTF8String], dims)
+    HashFeaturize.compute(input.asInstanceOf[UTF8String], dims, icu)
 
   override protected def doGenCode(ctx: CodegenContext,
       ev: ExprCode): ExprCode =
     // the heavy loop lives in a static helper; generated code stays a
     // one-line call, so the surrounding stage remains codegen'd
     defineCodeGen(ctx, ev, c =>
-      s"graft.expressions.HashFeaturize.compute($c, $dims)")
+      s"graft.expressions.HashFeaturize.compute($c, $dims, $icu)")
 
   override protected def withNewChildInternal(
       newChild: Expression): HashFeaturize = copy(child = newChild)
@@ -116,12 +119,15 @@ case class HashQueryDot(text: Expression, query: Expression, dims: Int)
   @transient private lazy val slots: Option[(Array[Int], Array[Double])] =
     HashFeaturize.querySlots(query.eval().asInstanceOf[ArrayData], dims)
 
+  private lazy val icu = Tokenizer.useICU
+
   override def eval(input: InternalRow): Any = slots match {
     case None => null
     case Some((idx, w)) =>
       val t = text.eval(input)
       if (t == null) null
-      else HashFeaturize.queryDot(t.asInstanceOf[UTF8String], dims, idx, w)
+      else HashFeaturize.queryDot(t.asInstanceOf[UTF8String], dims, idx, w,
+        icu)
   }
 
   override protected def doGenCode(ctx: CodegenContext,
@@ -139,7 +145,7 @@ case class HashQueryDot(text: Expression, query: Expression, dims: Int)
         |double ${ev.value} = 0.0;
         |if (!${ev.isNull}) {
         |  ${ev.value} = graft.expressions.HashFeaturize.queryDot(
-        |    ${t.value}, $dims, $idxRef, $wRef);
+        |    ${t.value}, $dims, $idxRef, $wRef, $icu);
         |}""".stripMargin)
   }
 
@@ -169,35 +175,36 @@ object HashFeaturize {
     else { val n = new Array[Double](dims); scratch.set(n); n }
   }
 
-  @inline private def isTokByte(b: Byte): Boolean =
-    (b >= 'a' && b <= 'z') || (b >= '0' && b <= '9') || b == '_'
+  /** Per-thread copy of one token's lowercased bytes, for the digest. */
+  private val tokenBytes = new ThreadLocal[Array[Byte]] {
+    override def initialValue(): Array[Byte] = new Array[Byte](64)
+  }
 
-  /** The hash rule, once: tokenize the lowercased text, hash each
-    * token, add its sign into its bucket of `raw(0 until dims)`. */
-  private def accumulate(s: UTF8String, raw: Array[Double],
-      dims: Int): Unit = {
-    val bytes = s.toLowerCase.getBytes
+  /** The hash rule, once: hash each [[Tokenizer]] token of the text,
+    * add its sign into its bucket of `raw(0 until dims)`. */
+  private def accumulate(s: UTF8String, raw: Array[Double], dims: Int,
+      icu: Boolean): Unit = {
     val digest = md5.get()
-    val n = bytes.length
-    var i = 0
-    while (i < n) {
-      if (isTokByte(bytes(i))) {
-        var j = i + 1
-        while (j < n && isTokByte(bytes(j))) j += 1
-        digest.reset()
-        digest.update(bytes, i, j - i)
-        val d = digest.digest()
-        // first 15 hex chars of md5 as a 60-bit non-negative long —
-        // identical to TextOps.hash60 / the oracle's
-        // ('0x'||substr(md5(t),1,15))::BIGINT
-        var h = 0L
-        var k = 0
-        while (k < 7) { h = (h << 8) | (d(k) & 0xffL); k += 1 }
-        h = (h << 4) | ((d(7) & 0xffL) >> 4)
-        val bucket = (h % dims).toInt
-        raw(bucket) += (if (((h >> 6) & 1L) == 0L) 1.0 else -1.0)
-        i = j
-      } else i += 1
+    var tok = tokenBytes.get()
+    val scan = new TokenScan(s, icu)
+    while (scan.next()) {
+      if (tok.length < scan.length) {
+        tok = new Array[Byte](scan.length)
+        tokenBytes.set(tok)
+      }
+      scan.copyTo(tok, 0)
+      digest.reset()
+      digest.update(tok, 0, scan.length)
+      val d = digest.digest()
+      // first 15 hex chars of md5 as a 60-bit non-negative long —
+      // identical to TextOps.hash60 / the oracle's
+      // ('0x'||substr(md5(t),1,15))::BIGINT
+      var h = 0L
+      var k = 0
+      while (k < 7) { h = (h << 8) | (d(k) & 0xffL); k += 1 }
+      h = (h << 4) | ((d(7) & 0xffL) >> 4)
+      val bucket = (h % dims).toInt
+      raw(bucket) += (if (((h >> 6) & 1L) == 0L) 1.0 else -1.0)
     }
   }
 
@@ -212,9 +219,9 @@ object HashFeaturize {
   /** One pass: tokenize → hash → signed bucket counts → L2 normalize.
     * Called from generated code (static forwarder on the companion
     * class), so it must stay a plain public method. */
-  def compute(s: UTF8String, dims: Int): ArrayData = {
+  def compute(s: UTF8String, dims: Int, icu: Boolean): ArrayData = {
     val raw = buffer(dims)
-    accumulate(s, raw, dims)
+    accumulate(s, raw, dims, icu)
     val nrm = norm(raw, dims)
     if (nrm != 0.0) {
       var k = 0
@@ -228,9 +235,9 @@ object HashFeaturize {
     * query slots `idx` (ascending) of values `w`. Called from generated
     * code, so it must stay a plain public method. */
   def queryDot(s: UTF8String, dims: Int, idx: Array[Int],
-      w: Array[Double]): Double = {
+      w: Array[Double], icu: Boolean): Double = {
     val raw = buffer(dims)
-    accumulate(s, raw, dims)
+    accumulate(s, raw, dims, icu)
     val nrm = norm(raw, dims)
     var acc = 0.0
     var k = 0

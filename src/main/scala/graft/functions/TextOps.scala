@@ -10,17 +10,21 @@ import org.apache.spark.sql.functions._
   * full-text predicate (`search.py:60-63`), snippet windows
   * (`search.py:102-112`) — plus the training-data-pipeline text
   * analysis suite (language ID, quality scoring, token counting,
-  * fingerprinting). Everything is built from codegen'd builtins
-  * (regexp / split / md5 / aggregate HOFs), no UDFs, so the whole text
-  * pipeline stays inside WholeStageCodegen and is expressible in the
-  * DuckDB oracle.
+  * fingerprinting). No UDFs: the tokenizer and the full-text match are
+  * native codegen'd expressions ([[graft.expressions.Tokens]],
+  * [[graft.expressions.FtsMatch]]), the rest are Spark builtins, and
+  * every rule has a DuckDB rendering for the oracle. The lambda HOFs
+  * (`aggregate`, `transform`, `filter` over token arrays) are not
+  * whole-stage codegen'd: Spark evaluates them interpreted inside the
+  * generated stage.
   */
 object TextOps {
 
   /** `\w+`-style lowercase tokenizer (reference `search.py:104`:
-    * `re.findall(r"\w+", query.lower())`). Keeps [a-z0-9_] runs. */
-  def tokens(c: Column): Column =
-    filter(split(lower(c), "[^a-z0-9_]+"), t => t =!= "")
+    * `re.findall(r"\w+", query.lower())`). Keeps [a-z0-9_] runs: the
+    * native [[graft.expressions.Tokens]] scan, the same array as
+    * [[tokSql]]'s split of the lowercased text with empties dropped. */
+  def tokens(c: Column): Column = graft.expressions.Tokenizer.tokens(c)
 
   /** The DuckDB rendering of [[tokens]] over source expression `src`
     * — every oracle restatement of the tokenizer MUST come from here
@@ -52,10 +56,12 @@ object TextOps {
     * set. The reference delegates to Postgres tsvector/tsquery over
     * `title || ' ' || domain || ' ' || url` (`search.py:60-63`,
     * null-strict — quirk Q5); we replicate the null-strictness by NOT
-    * coalescing the concat inputs.
+    * coalescing the concat inputs. One fused scan per row
+    * ([[graft.expressions.FtsMatch]]), the same answer as
+    * `arrays_overlap(tokens(text), tokens(query))`.
     */
   def ftsMatch(text: Column, query: Column): Column =
-    arrays_overlap(tokens(text), tokens(query))
+    graft.expressions.Tokenizer.ftsMatch(text, query, stemmed = false)
 
   /** Token normalizer behind q52's vocabulary and the stemmed FTS
     * variant: the Snowball English (Porter2) stemmer — the SAME
@@ -76,10 +82,11 @@ object TextOps {
   /** Stemmed full-text match: both haystack and query tokens pass
     * through [[stem]] before the overlap test, so inflected forms
     * match their root ("frost" finds "frosted"). Same null-strict
-    * concat discipline as [[ftsMatch]]. */
+    * concat discipline and fused scan as [[ftsMatch]]: the answer of
+    * `arrays_overlap(transform(tokens(text), stem),
+    * transform(tokens(query), stem))`. */
   def ftsMatchStemmed(text: Column, query: Column): Column =
-    arrays_overlap(transform(tokens(text), stem _),
-      transform(tokens(query), stem _))
+    graft.expressions.Tokenizer.ftsMatch(text, query, stemmed = true)
 
   /** Domain from url: authority host (reference `urlparse(url).netloc`,
     * `db.py:61`). parse_url is codegen'd in Spark; oracle uses an

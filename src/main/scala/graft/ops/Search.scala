@@ -174,10 +174,14 @@ object Search {
     * separate aggregate (the reference also runs a separate COUNT
     * query, `search.py:65-66`).
     *
-    * Scale shape: the page is TakeOrderedAndProject with offset —
+    * Scale shape: the predicate is one fused byte scan per row
+    * ([[graft.expressions.FtsMatch]]: no token array, stops at the
+    * first hit); the page is TakeOrderedAndProject with offset —
     * per-partition (offset+limit)-row heaps, no single-partition
     * global window; the total is a partial-agg count; the two meet in
-    * a 1-row broadcast cross join. */
+    * a 1-row broadcast cross join. The page and the total each scan
+    * the predicate: a one-pass `count(*) over ()` window would move
+    * every match into one task, the shape this note rules out. */
   def listingPage(spark: SparkSession, sfDir: String, query: String,
       sortBy: String = "last_crawled", asc: Boolean = false,
       offset: Int = 0, limit: Int = 10): DataFrame = {
@@ -225,7 +229,9 @@ object Search {
     * entirely — the query-side normalization Postgres to_tsquery
     * performs. First page, default recency sort.
     *
-    * Scale shape: same as q9 — codegen'd scan-local predicate,
+    * Scale shape: same as q9 — a scan-local predicate (the fused
+    * [[graft.expressions.FtsMatch]] scan, which stems each haystack
+    * token with Porter2 and builds no token array),
     * TakeOrderedAndProject page, partial-agg total, 1-row broadcast
     * cross join. Stemming adds zero exchanges. */
   def listingStemmed(spark: SparkSession, sfDir: String): DataFrame = {

@@ -1,9 +1,11 @@
 package graft.streaming
 
+import graft.expressions.Tokenizer
 import graft.ops.Dedup
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Streaming near-duplicate detection — the MinHash-LSH banding of
   * q24 applied to a LIVE ingest stream: each arriving document's
@@ -38,9 +40,10 @@ object LshDedup {
   case class BandRow(bkey: String, doc_id: Long)
   case class Assignment(doc_id: Long, bkey: String, canonical_id: Long)
 
-  /** Scala mirror of `TextOps.tokens` (\\w+-ish lowercase runs). */
+  /** `TextOps.tokens` on the JVM side: the same [[Tokenizer]] scan. */
   def tokens(text: String): Seq[String] =
-    text.toLowerCase.split("[^a-z0-9_]+").toSeq.filter(_.nonEmpty)
+    Tokenizer.tokenStrings(UTF8String.fromString(text), Tokenizer.useICU)
+      .toSeq
 
   /** Scala mirror of `TextOps.hash60` (first 15 md5 hex digits). */
   def hash60(s: String): Long = {

@@ -57,20 +57,7 @@ class DotProductSpec extends SparkSpec {
   }
 
   test("vec_dot / vec_negdot register through GraftExtensions for SQL") {
-    // builder extensions only apply to newly-built sessions; the
-    // shared test session already exists, so route the injected
-    // functions into its registry the same way session init does
-    // (SparkSessionExtensions.registerFunctions).
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new GraftExtensions().apply(ext)
-    val sessionState = spark.getClass.getMethod("sessionState")
-      .invoke(spark)
-    val registry = sessionState.getClass.getMethod("functionRegistry")
-      .invoke(sessionState)
-      .asInstanceOf[org.apache.spark.sql.catalyst.analysis.FunctionRegistry]
-    ext.getClass.getMethod("registerFunctions",
-        classOf[org.apache.spark.sql.catalyst.analysis.FunctionRegistry])
-      .invoke(ext, registry)
+    installGraftFunctions()
     val out = spark.sql(
       "SELECT vec_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d, " +
         "vec_negdot(array(1.0D, 0.0D), array(1.0D, 0.0D)) AS nd")

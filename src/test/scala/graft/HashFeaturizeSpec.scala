@@ -113,20 +113,37 @@ class HashFeaturizeSpec extends SparkSpec {
   }
 
   test("vec_featurize registers through GraftExtensions for SQL") {
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new GraftExtensions().apply(ext)
-    val sessionState = spark.getClass.getMethod("sessionState").invoke(spark)
-    val registry = sessionState.getClass.getMethod("functionRegistry")
-      .invoke(sessionState)
-      .asInstanceOf[org.apache.spark.sql.catalyst.analysis.FunctionRegistry]
-    ext.getClass.getMethod("registerFunctions",
-        classOf[org.apache.spark.sql.catalyst.analysis.FunctionRegistry])
-      .invoke(ext, registry)
+    installGraftFunctions()
     val out = spark.sql(
       "SELECT size(vec_featurize('hello world')) AS d64, " +
         "size(vec_featurize('hello world', 16)) AS d16")
       .collect().head
     assert(out.getInt(0) === 64)
     assert(out.getInt(1) === 16)
+  }
+
+  test("vec_query_dot registers through GraftExtensions for SQL") {
+    installGraftFunctions()
+    Seq(Some("Fast merge window"), Some("red widget"), None).toDF("t")
+      .repartition(2).createOrReplaceTempView("query_dot_probe")
+    val rows = spark.sql(
+      """SELECT t,
+        |  vec_query_dot(t, slice(vec_featurize('merge window', 32), 1, 8), 32),
+        |  vec_dot(slice(vec_featurize(t, 32), 1, 8),
+        |    slice(vec_featurize('merge window', 32), 1, 8)),
+        |  vec_query_dot(t, slice(vec_featurize('merge window'), 1, 8)),
+        |  vec_dot(slice(vec_featurize(t), 1, 8),
+        |    slice(vec_featurize('merge window'), 1, 8))
+        |FROM query_dot_probe""".stripMargin).collect()
+    assert(rows.length === 3)
+    rows.foreach { r =>
+      for (k <- Seq(1, 3)) {
+        assert(r.isNullAt(k) === r.isNullAt(k + 1), r)
+        if (!r.isNullAt(k))
+          assert(java.lang.Double.doubleToRawLongBits(r.getDouble(k)) ===
+            java.lang.Double.doubleToRawLongBits(r.getDouble(k + 1)), r)
+      }
+    }
+    assert(rows.exists(r => !r.isNullAt(1) && r.getDouble(1) != 0.0))
   }
 }

@@ -1,12 +1,12 @@
 package graft
 
 import java.util.concurrent.atomic.AtomicInteger
-import graft.expressions.{HashFeaturize, HashQueryDot}
+import graft.expressions.{FtsMatch, HashFeaturize, HashQueryDot}
 import graft.ops.Search
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{ArrayFilter, ArraysOverlap, Expression, StringSplit}
 import org.apache.spark.sql.execution.TakeOrderedAndProjectExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
@@ -16,8 +16,9 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType}
   * launches no job once its tables' schemas are known ([[Tables]]),
   * the KNN answers (semantic, RAG, q57) run as one job that scores each
   * row's text with one fused kernel, builds no vector column and joins
-  * nothing against the query vector, and snippet search stays one
-  * job. */
+  * nothing against the query vector, snippet search stays one job, and
+  * the full-text predicates of listing and snippet search scan each
+  * text once without building a token array. */
 class ServingPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private val builds: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
@@ -70,6 +71,27 @@ class ServingPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       val (rows, jobs) = jobsOf(df.collect())
       assert(rows.nonEmpty, s"$name returned no rows")
       assert(jobs == 1, s"collecting $name ran $jobs jobs")
+    }
+  }
+
+  private val fts: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
+    "listingPage" -> ((s, d) => Search.listingPage(s, d, "widget")),
+    "listingStemmed" -> Search.listingStemmed,
+    "snippetSearch" -> Search.snippetSearch)
+
+  for ((name, build) <- fts) {
+    test(s"$name: the FTS predicate is one fused scan, no token array") {
+      val df = build(spark, sfDir)
+      assert(df.collect().nonEmpty, s"$name returned no rows")
+      val plan = df.queryExecution.executedPlan
+      val exprs = flatMap(plan)(_.expressions.flatMap(_.collect {
+        case e => e
+      }))
+      assert(exprs.exists(_.isInstanceOf[FtsMatch]), s"$name has no FtsMatch:\n$plan")
+      val hofs = exprs.filter(e => e.isInstanceOf[ArrayFilter] ||
+        e.isInstanceOf[StringSplit] || e.isInstanceOf[ArraysOverlap])
+      assert(hofs.isEmpty,
+        s"$name still tokenizes into arrays (${hofs.map(_.prettyName).distinct}):\n$plan")
     }
   }
 

@@ -7,20 +7,8 @@ import org.apache.spark.sql.functions._
   * (`spark.sql("...")`) equivalent to the DataFrame API. */
 class SqlApiSpec extends SparkSpec {
 
-  private def installFunctions(): Unit = {
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new GraftExtensions().apply(ext)
-    val sessionState = spark.getClass.getMethod("sessionState").invoke(spark)
-    val registry = sessionState.getClass.getMethod("functionRegistry")
-      .invoke(sessionState)
-      .asInstanceOf[org.apache.spark.sql.catalyst.analysis.FunctionRegistry]
-    ext.getClass.getMethod("registerFunctions",
-        classOf[org.apache.spark.sql.catalyst.analysis.FunctionRegistry])
-      .invoke(ext, registry)
-  }
-
   test("semantic search expressed entirely in SQL matches the DataFrame API") {
-    installFunctions()
+    installGraftFunctions()
     Corpus.webPagesWithEmbeddings(spark, sfDir)
       .createOrReplaceTempView("wp_emb")
     val viaSql = spark.sql(
@@ -37,7 +25,7 @@ class SqlApiSpec extends SparkSpec {
   }
 
   test("vec_signpack in pure SQL matches the Column API") {
-    installFunctions()
+    installGraftFunctions()
     Tables.documents(spark, sfDir).createOrReplaceTempView("docs_sp")
     val viaSql = spark.sql(
       """SELECT doc_id,
@@ -53,7 +41,7 @@ class SqlApiSpec extends SparkSpec {
   }
 
   test("featurize + score pipeline in pure SQL") {
-    installFunctions()
+    installGraftFunctions()
     Tables.documents(spark, sfDir).createOrReplaceTempView("docs")
     val rows = spark.sql(
       """SELECT doc_id,

@@ -127,6 +127,27 @@ class TablesSpec extends SparkSpec {
     assert(rewritten.collect().toSeq.map(_.toSeq) == Seq(Seq(1L, "AFRICA", 0.5)))
   }
 
+  test("a rewritten part file rebuilds the cached web_pages frame") {
+    // Corpus.webPages keeps its analyzed frame per session and part
+    // files; a rewrite must show the new rows on the next build
+    import spark.implicits._
+    val dir = scratchDir()
+    def writePart(keys: Seq[Long], mode: String): Unit =
+      keys.map(k => (k, s"name $k", "TYPE", "Brand#1"))
+        .toDF("p_partkey", "p_name", "p_type", "p_brand")
+        .write.mode(mode).parquet(s"$dir/part.parquet")
+    def ids(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+      df.select("id").as[Long].collect().toSeq.sorted
+    writePart(Seq(1L, 2L), "errorifexists")
+    val first = Corpus.webPages(spark, dir)
+    assert(ids(first) == Seq(1L, 2L))
+    assert(Corpus.webPages(spark, dir) eq first,
+      "an unchanged part file built the frame again")
+    writePart(Seq(3L, 4L, 5L), "overwrite")
+    assert(ids(Corpus.webPages(spark, dir)) == Seq(3L, 4L, 5L),
+      "Corpus.webPages kept the frame of the part file before the rewrite")
+  }
+
   test("spark.sql.parquet.binaryAsString is part of the resolved schema") {
     val dir = scratchDir()
     // an unannotated parquet BINARY column, as non-Spark writers emit

@@ -4,8 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The dev mains stay few and documented: every main the docs tell a
   * reader to run exists, the oracle dump has one writer, JIT timing
-  * lives only in the bench child and the one profiler, and no kernel
-  * boxes a primitive array result. */
+  * lives only in the bench child and the one profiler, no kernel
+  * boxes a primitive array result, and there is one tokenizer. */
 class ToolsSpec extends AnyFunSuite {
 
   private def sources: Seq[java.io.File] = {
@@ -47,6 +47,16 @@ class ToolsSpec extends AnyFunSuite {
     // UnsafeArrayData.fromPrimitiveArray, which boxes nothing
     assert(holders("GenericArrayData") === Set("expressions/CodepointCounts.scala"),
       "return primitive arrays with UnsafeArrayData.fromPrimitiveArray")
+  }
+
+  test("no Scala code re-implements the tokenizer with a regex split") {
+    // tokens come from expressions.Tokenizer; the DuckDB oracle strings
+    // (string_split_regex in single quotes) are the other engine's copy
+    val split = """\bsplit\([^\n]*"\[\^a-z0-9_\]\+"""".r
+    val copies = sources.filter(f => split.findFirstIn(read(f)).isDefined)
+      .map(_.getPath.stripPrefix("src/main/scala/graft/"))
+    assert(copies.isEmpty,
+      s"tokenize with expressions.Tokenizer instead: ${copies.mkString(", ")}")
   }
 
   test("only Bench.scala and tools/Profile.scala read the JIT compile clock") {

@@ -39,15 +39,7 @@ class UnicodeSpec extends SparkSpec {
   }
 
   test("nfc_normalize as an injected SQL function matches the Column API") {
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new GraftExtensions().apply(ext)
-    val sessionState = spark.getClass.getMethod("sessionState").invoke(spark)
-    val registry = sessionState.getClass.getMethod("functionRegistry")
-      .invoke(sessionState)
-      .asInstanceOf[org.apache.spark.sql.catalyst.analysis.FunctionRegistry]
-    ext.getClass.getMethod("registerFunctions",
-        classOf[org.apache.spark.sql.catalyst.analysis.FunctionRegistry])
-      .invoke(ext, registry)
+    installGraftFunctions()
     Seq(nfd, nfc, "plain").toDF("s").createOrReplaceTempView("nfc_probe")
     val viaSql = spark.sql(
       "SELECT nfc_normalize(s) FROM nfc_probe").as[String].collect().toSeq
