@@ -56,18 +56,40 @@ object GraftSession {
     scratchDir.fold(b)(d => b.config("spark.local.dir", d))
   }
 
+  /** Run `body` with `confs` set on the session, then put each key
+    * back as it was, also when `body` throws: a key that was set gets
+    * its old value, and a key that was absent is unset. Setting an
+    * absent key to its default instead would leave it in
+    * `spark.conf.getAll`, which keys `Tables.derived`. */
+  def withConfs[T](spark: SparkSession, confs: Seq[(String, String)])(body: => T): T = {
+    val set = spark.conf.getAll // explicit keys only, unlike getOption
+    val prev = confs.map { case (k, _) => k -> set.get(k) }
+    try {
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      body
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   private var scrubCount = 0
 
   /** Drop per-query session state so back-to-back query runs (Bench,
     * Verify, Profile) can't poison each other. `clearCache()` only
-    * covers `cache()`/`persist()` on tables; `localCheckpoint` blocks
-    * stay pinned in the block manager until the driver GCs the RDD
-    * object and the async ContextCleaner gets around to them — over a
+    * covers `cache()`/`persist()` on tables. A query's
+    * [[graft.ops.Materialize]] pins that no `using` or `release`
+    * dropped (most of them: a query's answer reads its pins lazily)
+    * stay in the block manager until the driver GCs the RDD object
+    * and the async ContextCleaner gets around to them — over a
     * 134-query × 2-rep run that lag accumulates into storage-memory
     * eviction churn. Unpersisting every still-registered RDD is
     * synchronous and safe between queries (nothing references them
     * across query boundaries); a periodic System.gc() lets the
-    * ContextCleaner reclaim shuffle files and broadcasts too. */
+    * ContextCleaner reclaim shuffle files and broadcasts too. In
+    * reliable mode the checkpoint files stay in the checkpoint dir:
+    * Spark deletes them only under
+    * `spark.cleaner.referenceTracking.cleanCheckpoints`. */
   def scrub(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values

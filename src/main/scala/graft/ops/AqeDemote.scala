@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -48,10 +48,7 @@ object AqeDemote {
     "spark.sql.adaptive.localShuffleReader.enabled" -> "true")
 
   def demotedJoinRollup(spark: SparkSession, sfDir: String): DataFrame = {
-    val confs = ScopedConfs
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    try {
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    GraftSession.withConfs(spark, ScopedConfs) {
       val low = Tables.orders(spark, sfDir)
         .filter(col("o_orderpriority") === Priority)
         .select(col("o_orderkey"), col("o_orderstatus"))
@@ -63,7 +60,7 @@ object AqeDemote {
           round(sum((col("l_extendedprice") * (lit(1) - col("l_discount")))
             .cast("decimal(28,10)")).cast("double"), 2).as("revenue"))
         .orderBy(col("o_orderstatus"))
-      val out = joined.localCheckpoint(true) // executes under scoped confs
+      val out = joined.pin() // executes under scoped confs
       val plan = joined.queryExecution.executedPlan.toString
       val split = plan.indexOf("== Initial Plan ==")
       require(split > 0, s"expected an adaptive plan with both halves:\n$plan")
@@ -74,9 +71,6 @@ object AqeDemote {
       require(finalPlan.contains("BroadcastHashJoin"),
         s"runtime must demote to a broadcast join:\n$plan")
       out
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -70,10 +70,7 @@ object AqeSkew {
     "spark.sql.autoBroadcastJoinThreshold" -> "-1")
 
   def skewJoinRollup(spark: SparkSession, sfDir: String): DataFrame = {
-    val confs = ScopedConfs
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    try {
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    GraftSession.withConfs(spark, ScopedConfs) {
       val e = Tables.events(spark, sfDir)
         .select(when(pmod(col("user_id"), lit(3)) === 0, lit(0L))
           .otherwise(col("user_id")).as("k"), col("value"))
@@ -86,14 +83,11 @@ object AqeSkew {
           round(sum(col("value").cast("decimal(28,10)")).cast("double"), 2)
             .as("value_sum"))
         .orderBy(col("segment"))
-      val out = joined.localCheckpoint(true) // executes under scoped confs
+      val out = joined.pin() // executes under scoped confs
       val plan = joined.queryExecution.executedPlan.toString
       require(plan.contains("skew=true"),
         s"AQE skew-join must engage on the hot partition, got:\n$plan")
       out
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 

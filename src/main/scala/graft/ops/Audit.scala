@@ -25,7 +25,7 @@ object Audit {
     * audit is two left joins over ≤9-row relations — every scan and
     * shuffle lives inside the audited rankers themselves. */
   def annRecall(spark: SparkSession, sfDir: String): DataFrame = {
-    // each ranker materializes ONCE (localCheckpoint): the audit then
+    // each ranker materializes ONCE (pin): the audit then
     // joins three ≤k·queries-row tables — without the barrier, the
     // composed plan re-inlines three broadcast-KNN pipelines (plus the
     // k-means training subtree) into one tree and re-executes shared
@@ -35,13 +35,13 @@ object Audit {
     // scheduling-independent, only the interleaving changes.
     val Seq(exact, ivf, livf) = Par.run(
       () => Similarity.knnBruteForce(spark, sfDir)
-        .select(col("q_id"), col("n_id")).localCheckpoint(),
+        .select(col("q_id"), col("n_id")).pin(),
       () => Similarity.knnIvf(spark, sfDir)
         .select(col("q_id"), col("n_id"), lit(1L).as("hit_ivf"))
-        .localCheckpoint(),
+        .pin(),
       () => KMeans.knnIvfKmeans(spark, sfDir)
         .select(col("q_id"), col("n_id"), lit(1L).as("hit_livf"))
-        .localCheckpoint())
+        .pin())
     exact
       .join(ivf, Seq("q_id", "n_id"), "left")
       .join(livf, Seq("q_id", "n_id"), "left")
@@ -93,7 +93,7 @@ object Audit {
   def skewAudit(spark: SparkSession, sfDir: String): DataFrame = {
     val counts = Tables.events(spark, sfDir)
       .groupBy(col("user_id")).agg(count(lit(1)).as("cnt"))
-      .localCheckpoint() // feeds the stats row and the top-10 cut
+      .pin() // feeds the stats row and the top-10 cut
     val stats = counts.agg(
       count(lit(1)).as("n_keys"), sum(col("cnt")).as("n_rows"),
       max(col("cnt")).as("max_cnt"))
@@ -299,7 +299,7 @@ object Audit {
       .groupBy(col("o_orderkey").as("k")).agg(count(lit(1)).as("cb"))
     val contrib = la.join(ob, Seq("k"))
       .select(col("k"), (col("ca") * col("cb")).as("rows_out"))
-      .localCheckpoint() // feeds the total and the argmax
+      .pin() // feeds the total and the argmax
     val predicted = contrib.agg(
       sum(col("rows_out")).as("predicted_rows"),
       max(col("rows_out")).as("hottest_key_rows"))

@@ -29,7 +29,7 @@ object Behavior {
     val e = Tables.events(spark, sfDir)
       .select(col("user_id"), col("event_type"),
         unix_micros(col("ts")).as("us"))
-      .localCheckpoint() // feeds three stage aggregates
+      .pin() // feeds three stage aggregates
     val t1 = e.filter(col("event_type") === "view")
       .groupBy(col("user_id")).agg(min(col("us")).as("t1"))
     // merge hints on the checkpoint-fed stage joins: the events
@@ -95,7 +95,7 @@ object Behavior {
   def cohortRetention(spark: SparkSession, sfDir: String): DataFrame = {
     val e = Tables.events(spark, sfDir)
       .select(col("user_id"), to_date(col("ts")).as("day"))
-      .localCheckpoint() // feeds cohorting + activity join
+      .pin() // feeds cohorting + activity join
     val cohorts = e.groupBy(col("user_id")).agg(min(col("day")).as("c_day"))
     val sizes = cohorts.groupBy(col("c_day"))
       .agg(count(lit(1)).as("cohort_n"))
@@ -127,7 +127,7 @@ object Behavior {
     val items = Tables.lineitem(spark, sfDir)
       .select(col("l_orderkey").as("okey"), col("l_partkey").as("part"))
       .distinct()
-      .localCheckpoint()
+      .pin()
     val nBaskets = items.agg(countDistinct(col("okey")).as("n_baskets"))
     val marg = items.groupBy(col("part")).agg(count(lit(1)).as("n_part"))
     val a = items.select(col("okey"), col("part").as("pa"))

@@ -59,7 +59,7 @@ object Bootstrap {
     // relation feeds the point estimate AND the replicate explode
     val base = Curation.scoreDocs(Tables.documents(spark, sfDir))
       .select(col("doc_id"), col("source"), col("score"))
-      .localCheckpoint()
+      .pin()
     val point = base.groupBy(col("source")).agg(
       count(lit(1)).as("n_docs"),
       round(sum(col("score").cast("decimal(28,6)")).cast("double")

@@ -49,7 +49,7 @@ object Bpe {
           array_join(transform(sequence(lit(1), length(col("word"))),
             i => col("word").substr(i, lit(1))), " "),
           lit(" ")))
-      .localCheckpoint()
+      .pin()
 
     var words = vocab
     val roundRows = (1 to Rounds).map { r =>
@@ -68,7 +68,7 @@ object Bpe {
       words = words
         .withColumn("seg",
           replace(col("seg"), lit(s" $a $b "), lit(s" $a$b ")))
-        .localCheckpoint()
+        .pin()
       val tokensAfter = words
         .select(sum(col("freq") * size(split(trim(col("seg")), " "))).as("t"))
         .collect().head.getLong(0)
@@ -120,7 +120,7 @@ object Bpe {
           array_join(transform(sequence(lit(1), length(col("word"))),
             i => col("word").substr(i, lit(1))), " "),
           lit(" ")))
-      .localCheckpoint()
+      .pin()
 
     var words = vocab
     val merges =
@@ -167,7 +167,7 @@ object Bpe {
           case (c, i) =>
             sum(col("freq") * size(split(trim(c), " "))).as(s"t$i")
         }.toSeq: _*).collect().head
-        words = words.withColumn("seg", segAfter.last).localCheckpoint()
+        words = words.withColumn("seg", segAfter.last).pin()
         merges ++= accepted.zipWithIndex.map { case ((a, b, n), i) =>
           (a, b, n, statsRow.getLong(i))
         }

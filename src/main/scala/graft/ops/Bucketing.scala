@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -90,8 +90,8 @@ object Bucketing {
     * the bucketed layout is exactly what deletes the two shuffles the
     * SortMergeJoin would otherwise need.
     *
-    * The join executes exactly ONCE: an eager `localCheckpoint`
-    * materializes it (executor-local blocks, never the driver), the
+    * The join executes exactly ONCE: an eager `pin`
+    * materializes it (executor blocks, never the driver), the
     * zero-Exchange assertion reads that same execution's finalized
     * adaptive plan, and the rollup — the answer the caller collects —
     * scans the checkpointed blocks, so the asserted plan IS the plan
@@ -101,19 +101,17 @@ object Bucketing {
     * mutate session state). */
   def bucketedRollup(spark: SparkSession, sfDir: String): DataFrame = {
     writeBucketed(spark, sfDir, layoutBase(sfDir))
-    val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    GraftSession.withConfs(spark,
+        Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1")) {
       val joined = bucketedJoined(spark)
-      val pinned = joined.localCheckpoint() // eager: the one execution
+      val pinned = joined.pin() // eager: the one execution
       val plan = joined.queryExecution.executedPlan.toString
       require(!plan.contains("Exchange"),
         s"bucketed join must plan zero Exchange operators, got:\n$plan")
       require(plan.contains("SortMergeJoin"),
         s"bucketed join must be a per-bucket SMJ, got:\n$plan")
       rollup(pinned)
-    } finally
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+    }
   }
 
   /** DuckDB oracle for q153 — the same rollup off the plain tables

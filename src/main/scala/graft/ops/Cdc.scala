@@ -97,7 +97,7 @@ object Cdc {
       .select(col("doc_id"), explode(expr(chunksFromBounds)).as("chunk"))
       .select(col("doc_id"), md5(col("chunk")).as("h"),
         length(col("chunk")).as("clen"))
-      .localCheckpoint()
+      .pin()
     val volume = chunks.agg(
       countDistinct(col("doc_id")).as("n_docs"),
       count(lit(1)).as("n_chunks"),

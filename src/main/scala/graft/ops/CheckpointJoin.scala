@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * q192-family treatment (runtime plan assertions inside a declared,
   * oracle-checked query) applied to the r11 audit's mechanism.
   *
-  * The mechanism (PERF.md r11): a `localCheckpoint` LogicalRDD
+  * The mechanism (PERF.md r11): a pinned LogicalRDD
   * inherits its ORIGIN plan's estimated statistics, which badly
   * under-report exploded relations — here the (doc_id, token)
   * relation estimates far below `autoBroadcastJoinThreshold` even
@@ -41,7 +41,7 @@ object CheckpointJoin {
     // exploded token relation), joined back to an aggregate of itself
     val toks = Tables.documents(spark, sfDir)
       .select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("tok"))
-      .localCheckpoint()
+      .pin()
     val dfreq = toks.groupBy(col("tok")).agg(count(lit(1)).as("df"))
     def rollup(joined: DataFrame): DataFrame = joined
       .groupBy(pmod(col("doc_id"), lit(8)).as("bucket"))
@@ -81,7 +81,7 @@ object CheckpointJoin {
     }
     // (2) the guarded shape: merge hint, executed, no broadcast
     val guarded = rollup(toks.hint("merge").join(dfreq, Seq("tok")))
-    val out = guarded.localCheckpoint(true)
+    val out = guarded.pin()
     val plan = guarded.queryExecution.executedPlan.toString
     require(plan.contains("SortMergeJoin"),
       s"guarded join must execute as a partitioned merge join:\n$plan")

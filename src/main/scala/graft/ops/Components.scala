@@ -44,10 +44,8 @@ object Components {
     * block-read) checkpoint to land on one partition. Exposed for the
     * plan spec. */
   private[graft] def pinPairs(pairs: DataFrame): DataFrame = {
-    val obs = org.apache.spark.sql.Observation()
-    val ck = pairs.observe(obs, count(lit(1)).as("n")).localCheckpoint()
-    val n = obs.get("n").asInstanceOf[Long]
-    if (n < SmallPairs) ck.coalesce(1).localCheckpoint() else ck
+    val (ck, n) = Materialize.pinCounted(pairs)
+    if (n < SmallPairs) ck.coalesce(1).pin() else ck
   }
 
   /** Canonical (a < b) near-dup pairs, materialized once — shared by
@@ -71,7 +69,7 @@ object Components {
     *
     * The pair pipeline (the full q23 plan: shingling, inverted index,
     * prefix-filtered self-join, exact verification, global sort) is
-    * materialized EXACTLY ONCE by an eager localCheckpoint BEFORE the
+    * materialized EXACTLY ONCE by an eager pin BEFORE the
     * symmetric union. The previous version unioned two references to
     * the lazy plan under a lazy `.cache()`, so the first loop action
     * could pay the pipeline (and the sort's range-sampling pass) per
@@ -105,14 +103,13 @@ object Components {
     // huge one keeps the shuffle path. As in [[pinPairs]], the row
     // count rides the checkpoint job via an observe metric — no
     // separate count() action.
-    val obs = org.apache.spark.sql.Observation()
-    var labels = es.select(col("src").as("node")).distinct()
-      .withColumn("lbl", col("node"))
-      .observe(obs, count(lit(1)).as("n"))
-      .localCheckpoint()
-    val small = obs.get("n").asInstanceOf[Long] < 1000000L
+    val (labels0, nLabels) = Materialize.pinCounted(
+      es.select(col("src").as("node")).distinct()
+        .withColumn("lbl", col("node")))
+    var labels = labels0
+    val small = nLabels < 1000000L
     def pin(df: DataFrame): DataFrame =
-      (if (small) df.coalesce(1) else df).localCheckpoint()
+      (if (small) df.coalesce(1) else df).pin()
     def maybeBroadcast(df: DataFrame): DataFrame =
       if (small) broadcast(df) else df
     var converged = false
@@ -229,20 +226,14 @@ object Components {
     * count is carried forward so each round pays exactly one extra
     * shuffle job for the probe. */
   private[graft] def starLoop(edges0: DataFrame, rounds: Int): DataFrame = {
-    // row counts ride the checkpoint jobs as observe metrics (the
-    // pinPairs trick, applied here in r15): the separate count()
+    // row counts ride the pin jobs (pinCounted): the separate count()
     // actions were one extra job per round on metadata-scale data
-    val obs0 = org.apache.spark.sql.Observation()
-    var es = edges0.observe(obs0, count(lit(1)).as("n")).localCheckpoint()
-    var nEs = obs0.get("n").asInstanceOf[Long]
+    var (es, nEs) = Materialize.pinCounted(edges0)
     var converged = false
     var round = 0
     while (round < rounds && !converged) {
       val t0 = System.nanoTime()
-      val obs = org.apache.spark.sql.Observation()
-      val next = starRound(es).observe(obs, count(lit(1)).as("n"))
-        .localCheckpoint()
-      val nNext = obs.get("n").asInstanceOf[Long]
+      val (next, nNext) = Materialize.pinCounted(starRound(es))
       // round 1 can only be a fixpoint if the input already was one —
       // skip its probe shuffle (idempotence makes the extra round in
       // that rare case harmless)
@@ -264,7 +255,7 @@ object Components {
 
   /** q145: the q53 dup-group summary via large-star/small-star —
     * identical output through a fundamentally different (and
-    * scale-native) algorithm. The per-round localCheckpoint cuts the
+    * scale-native) algorithm. The per-round pin cuts the
     * doubling lineage; convergence is detected on the materialized
     * edge set (star edges stable), capped at [[StarRounds]]. */
   def dedupGroupsStar(spark: SparkSession, sfDir: String): DataFrame =

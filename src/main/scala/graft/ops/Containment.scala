@@ -82,9 +82,9 @@ object Containment {
     // analogue of the stored inverted index a production run keeps
     val kept = sh.join(df.filter(col("df") <= DfCap), Seq("sh"))
       .select(col("doc_id"), col("sh"))
-      .localCheckpoint()
+      .pin()
     val sizes = kept.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
-    // merge hint: `kept` is a localCheckpoint LogicalRDD whose
+    // merge hint: `kept` is a pinned LogicalRDD whose
     // inherited stats UNDER-report the index, so the static planner
     // broadcast it into its own self-join (measured at the staged 30×
     // corpus: the x10→x30 leg grew 5.5× on 3× data, the driver

@@ -31,7 +31,7 @@ import org.apache.spark.sql.functions._
   * K-pass linear scan with nothing corpus-proportional on the driver
   * or in any shuffle. At 100 TB each pass is a cheap map + tree
   * reduce; K is the product knob. Lineage is cut per step
-  * (localCheckpoint) so step k never replays steps 1..k−1.
+  * (pin) so step k never replays steps 1..k−1.
   */
 object Coreset {
 
@@ -49,7 +49,7 @@ object Coreset {
     val vecs = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), VectorOps.toDouble(col("embedding")).as("v"))
       .withColumn("xx", VectorOps.dot(col("v"), col("v")))
-      .localCheckpoint()
+      .pin()
     // seed = vec_id 0 (deterministic; any fixed rule works for the
     // 2-approximation). Guard the dense-vec_id contract loudly (the
     // fitVecsK spreadSeeds convention): without it a missing seed row
@@ -67,7 +67,7 @@ object Coreset {
     var state = vecs.crossJoin(broadcast(seed))
       .select(col("vec_id"), col("v"), col("xx"),
         d2(col("xx"), col("v"), col("cv"), col("cc")).as("dmin"))
-      .localCheckpoint()
+      .pin()
     val trace = Seq.newBuilder[(Long, Long, Option[Double])]
     trace += ((1L, 0L, None))
     for (step <- 2 to K) {
@@ -84,7 +84,7 @@ object Coreset {
         .select(col("vec_id"), col("v"), col("xx"),
           least(col("dmin"),
             d2(col("xx"), col("v"), col("cv"), col("cc"))).as("dmin"))
-        .localCheckpoint()
+        .pin()
     }
     trace.result()
       .toDF("step", "vec_id", "d")

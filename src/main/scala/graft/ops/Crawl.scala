@@ -45,7 +45,7 @@ object Crawl {
         // frontier reads the materialized checkpoint, so no level's
         // joins are ever recomputed
         visited = visited.unionByName(
-          next.withColumn("depth", lit(d))).localCheckpoint()
+          next.withColumn("depth", lit(d))).pin()
         frontier = visited.filter(col("depth") === d).select(col("node"))
       }
       visited.groupBy(col("depth"))
@@ -97,7 +97,7 @@ object Crawl {
           .select(col("dst").as("node")).distinct()
           .join(visited, Seq("node"), "left_anti")
         visited = visited.unionByName(
-          next.withColumn("depth", lit(d))).localCheckpoint()
+          next.withColumn("depth", lit(d))).pin()
         frontier = visited.filter(col("depth") === d).select(col("node"))
       }
       visited

@@ -56,7 +56,7 @@ object Cuped {
     * adjustment core, exposed for the spec's crafted cohorts. */
   private[graft] def cupedOf(usersIn: DataFrame): DataFrame = {
     val users = usersIn
-      .localCheckpoint() // slim per-user relation feeds fit + report
+      .pin() // slim per-user relation feeds fit + report
     def dsum(c: org.apache.spark.sql.Column, scale: Int) =
       sum(c.cast(s"decimal(38,$scale)")).cast("double")
     // pooled θ fit (standard CUPED: one θ across arms). Degeneracy is

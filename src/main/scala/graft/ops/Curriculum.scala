@@ -63,7 +63,7 @@ object Curriculum {
     // (the q83/tfidf convention)
     val toks = docs
       .select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("tok"))
-      .localCheckpoint()
+      .pin()
     val nDocs = docs.agg(count(lit(1)).as("n_docs"))
     val dfT = toks.distinct().groupBy(col("tok")).agg(count(lit(1)).as("df"))
     // vocab grows with the corpus (q69 rule): the static planner's
@@ -83,7 +83,7 @@ object Curriculum {
     // 4 consumers below (threshold passes + bucketing) — pin the
     // expensive explode/join/agg subtree once. Checkpointed relation
     // only ever streams (q224 convention: never on a build side).
-    val diff = difficulty(spark, sfDir).localCheckpoint()
+    val diff = difficulty(spark, sfDir).pin()
     val cuts = Stats.quantileDiscOf(
       diff.select(lit("all").as("g"), col("difficulty").as("v")), PhaseQs)
     val thr = cuts.agg(

@@ -39,7 +39,7 @@ object Dsir {
     val toks = Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("lang"),
         explode(TextOps.tokens(col("text"))).as("tok"))
-      .localCheckpoint()
+      .pin()
     val vocab = toks.groupBy(col("tok"))
       .agg(count(lit(1)).as("c_raw"),
         sum(when(col("lang") === TargetLang, 1L).otherwise(0L)).as("c_tgt"))

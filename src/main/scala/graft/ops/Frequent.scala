@@ -83,11 +83,11 @@ object Frequent {
     import spark.implicits._
     val toks = Tables.documents(spark, sfDir)
       .select(explode(TextOps.tokens(col("text"))).as("tok"))
-      .localCheckpoint() // both passes read the same materialization
+      .pin() // both passes read the same materialization
     val summaries = toks.as[String]
       .mapPartitions(mgSummarize)
       .toDF("tok", "n_part")
-      .localCheckpoint() // one MG pass feeds both N and the candidates
+      .pin() // one MG pass feeds both N and the candidates
     // single-row total as a broadcast join, not a driver scalar
     val total = summaries.filter(col("tok").isNull)
       .agg(sum(col("n_part")).as("n_total"))

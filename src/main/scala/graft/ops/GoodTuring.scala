@@ -46,7 +46,7 @@ object GoodTuring {
     // totals is derived from it (n_tokens = Σ f·n_r) instead of
     // re-reading vocab.
     val fof = vocab.groupBy(col("f")).agg(count(lit(1)).as("n_r"))
-      .localCheckpoint()
+      .pin()
     val totals = fof.agg(sum(col("f") * col("n_r")).as("n_tokens"))
     // aggregate (not filter) so the relation is 1-row even in a
     // hapax-free corpus — the cross join must never zero the spine

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: each iteration is one (contrib join on src) + one
   * groupBy dst — the shuffle pattern of the components loop —
-  * localCheckpoint per iteration to cut lineage. The rank/outdeg
+  * pin per iteration to cut lineage. The rank/outdeg
   * sides are broadcast and the per-iteration checkpoints collapse to
   * one partition when the measured node count is small (the node
   * count is already an up-front action); a billion-node graph takes
@@ -63,27 +63,22 @@ object Graph {
       redistributeDangling: Boolean): DataFrame = {
     val es = edgeList.cache()
     try {
-      // node count rides the checkpoint job as an observe metric
-      // (r15, the pinPairs trick) — the separate count() was one more
-      // job on metadata-scale data
-      val obsN = org.apache.spark.sql.Observation()
-      val nodes = es.select(col("src").as("node"))
-        .unionByName(es.select(col("dst").as("node"))).distinct()
-        .observe(obsN, count(lit(1)).as("n"))
-        .localCheckpoint()
+      val (nodes, nNodes) = Materialize.pinCounted(
+        es.select(col("src").as("node"))
+          .unionByName(es.select(col("dst").as("node"))).distinct())
       val outdeg = es.groupBy(col("src"))
         .agg(count(lit(1)).cast("double").as("deg"))
-        .localCheckpoint()
+        .pin()
       // one count up front (the loop materializes checkpoints anyway —
       // this is an iterative job, not a lazy plan), shared by every
       // iteration instead of a per-iteration 1-row cross join
-      val n = obsN.get("n").asInstanceOf[Long].toDouble
+      val n = nNodes.toDouble
       val small = n < SmallGraphNodes
       // small graph → rank vector is broadcast-sized and one partition
       // holds it; 3 rounds × 32 shuffle partitions on 2000 nodes was
       // pure scheduling overhead
       def pin(df: DataFrame): DataFrame =
-        (if (small) df.coalesce(1) else df).localCheckpoint()
+        (if (small) df.coalesce(1) else df).pin()
       def maybeBroadcast(df: DataFrame): DataFrame =
         if (small) broadcast(df) else df
       var ranks = pin(nodes
@@ -194,21 +189,20 @@ object Graph {
       .select(pmod(col("l_orderkey"), lit(TriNodes)).as("a"),
         pmod(col("l_partkey"), lit(TriNodes)).as("b"))
       .where(col("a") =!= col("b"))
-    val obsE = org.apache.spark.sql.Observation()
-    val und = raw.select(least(col("a"), col("b")).as("u"),
-        greatest(col("a"), col("b")).as("v"))
-      .distinct()
-      .observe(obsE, count(lit(1)).as("n")) // count rides the checkpoint (r15)
-      .localCheckpoint() // reused by degrees + orientation + closing join
+    // reused by degrees + orientation + closing join
+    val (und, nUnd) = Materialize.pinCounted(
+      raw.select(least(col("a"), col("b")).as("u"),
+          greatest(col("a"), col("b")).as("v"))
+        .distinct())
     // wedges outnumber edges quadratically-in-degree: when the edge
     // list itself is small, broadcast it to the wedge side so the
     // (much larger) wedge set never shuffles; huge graphs keep the
     // partitioned hash join on (b, c)
-    val smallEdges = obsE.get("n").asInstanceOf[Long] < 2000000L
+    val smallEdges = nUnd < 2000000L
     val deg = und.select(col("u").as("node"))
       .unionByName(und.select(col("v").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint() // reused: two orientation joins + wedge stats
+      .pin() // reused: two orientation joins + wedge stats
     // orient: (deg, id)-smaller endpoint → larger; the degree table is
     // |V| rows (vs |E| edges and |E|^{1.5}-bounded wedges) — broadcast
     val du = broadcast(deg.select(col("node").as("u"), col("deg").as("du")))
@@ -220,7 +214,7 @@ object Graph {
         when(uFirst, col("u")).otherwise(col("v")).as("s"),
         when(uFirst, col("v")).otherwise(col("u")).as("t"),
         when(uFirst, col("dv")).otherwise(col("du")).as("dt"))
-      .localCheckpoint()
+      .pin()
     // wedges from a common oriented source, ordered by (deg, id) so
     // each unordered out-pair appears once
     val e1 = oriented.select(col("s"), col("t").as("b"), col("dt").as("db"))
@@ -312,15 +306,13 @@ object Graph {
   private[graft] def hitsOver(edgeList: DataFrame): DataFrame = {
     val es = edgeList.cache()
     try {
-      val obsN = org.apache.spark.sql.Observation()
-      val nodes = es.select(col("src").as("node"))
-        .unionByName(es.select(col("dst").as("node"))).distinct()
-        .observe(obsN, count(lit(1)).as("n")) // count rides the checkpoint (r15)
-        .localCheckpoint()
-      val n = obsN.get("n").asInstanceOf[Long].toDouble
+      val (nodes, nNodes) = Materialize.pinCounted(
+        es.select(col("src").as("node"))
+          .unionByName(es.select(col("dst").as("node"))).distinct())
+      val n = nNodes.toDouble
       val small = n < SmallGraphNodes
       def pin(df: DataFrame): DataFrame =
-        (if (small) df.coalesce(1) else df).localCheckpoint()
+        (if (small) df.coalesce(1) else df).pin()
       def mb(df: DataFrame): DataFrame = if (small) broadcast(df) else df
       def normalized(raw: DataFrame, key: String, out: String): DataFrame = {
         val total = raw.agg(

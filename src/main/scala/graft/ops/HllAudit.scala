@@ -45,7 +45,7 @@ object HllAudit {
         approx_count_distinct(col("tok"), Rsd).as("n_approx"))
       .orderBy(col("source"))
     // one execution serves both the contract check and the answer
-    val pinned = both.localCheckpoint(true)
+    val pinned = both.pin()
     val rows = pinned.collect() // group-cardinality-bounded (≤ #sources)
     require(rows.nonEmpty, "audit needs at least one group")
     rows.foreach { r =>

@@ -75,7 +75,7 @@ object InContextPack {
       .select(col("doc_id"),
         TextOps.tokenCountBpe(col("text")).as("n_tok"))
     // semantic order within cluster → q86 cumsum-floor packing.
-    // checkpoint-fed lineage (docVectors localCheckpoints the corpus)
+    // checkpoint-fed lineage (docVectors pins the corpus)
     // under-reports sizes, so the corpus-proportional ntok join is
     // hinted per the q224 convention (shuffle_hash: the dists side
     // carries 8 KB vector payloads SMJ would sort — the q27 lesson)
@@ -92,7 +92,7 @@ object InContextPack {
     // materialized: packed feeds BOTH adjacency sides and the rollup
     // — without the checkpoint the assignment join and the window
     // sort re-execute three times
-    val packed = packedStage(spark, sfDir).localCheckpoint()
+    val packed = packedStage(spark, sfDir).pin()
     // adjacency census: cosine of each (rank, rank+1) pair that lands
     // in the SAME context — partitioned equi-join on (cid, rnk)
     val a = packed.select(col("cid"), col("ctx_id"), col("rnk"),

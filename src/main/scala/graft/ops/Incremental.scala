@@ -78,7 +78,7 @@ object Incremental {
     val docs = Tables.documents(spark, sfDir)
       .select(col("doc_id"), fp.as("fp"))
     val batch = docs.filter(col("doc_id") % 10 === 0)
-      .localCheckpoint() // feeds both stages and the totals
+      .pin() // feeds both stages and the totals
     val corpusFps = docs.filter(col("doc_id") % 10 =!= 0)
       .select(col("fp")).distinct()
     val withinKept = batch.groupBy(col("fp"))

@@ -35,7 +35,7 @@ object Index {
       .select(col("doc_id"), posexplode(TextOps.tokens(col("text")))
         .as(Seq("pos", "term")))
       .where(col("term").isin(Phrase: _*))
-      .localCheckpoint() // one tokenize pass feeds both join sides
+      .pin() // one tokenize pass feeds both join sides
     val first = postings.where(col("term") === Phrase.head)
       .select(col("doc_id"), col("pos"))
     val hits = Phrase.zipWithIndex.tail.foldLeft(first) {

@@ -78,7 +78,7 @@ object KMeans {
       .select(col("vec_id").cast("int").as("cid"), col("v").as("cv"))
     for (_ <- 1 to Iters)
       centroids = update(assign(vecs, centroids))
-        .select(col("cid"), col("cv"), col("n")).localCheckpoint()
+        .select(col("cid"), col("cv"), col("n")).pin()
     centroids
   }
 
@@ -191,16 +191,12 @@ object KMeans {
     * pin's own job). */
   private[graft] def docVectorsWithCount(spark: SparkSession,
       sfDir: String): (DataFrame, Long) = {
-    val obs = org.apache.spark.sql.Observation()
-    val vecs = Corpus.docEmbeddings(spark, sfDir)
-      .observe(obs, count(lit(1)).as("n"))
-      .localCheckpoint()
-      .withColumn("xx", VectorOps.dot(col("v"), col("v")))
-    (vecs, obs.get("n").asInstanceOf[Long])
+    val (vecs, n) = Materialize.pinCounted(Corpus.docEmbeddings(spark, sfDir))
+    (vecs.withColumn("xx", VectorOps.dot(col("v"), col("v"))), n)
   }
 
   private[graft] def docVectors(spark: SparkSession, sfDir: String): DataFrame =
-    Corpus.docEmbeddings(spark, sfDir).localCheckpoint()
+    Corpus.docEmbeddings(spark, sfDir).pin()
       .withColumn("xx", VectorOps.dot(col("v"), col("v")))
 
   private def d2c(xx: Column, x: Column, c: Column, cc: Column): Column =
@@ -303,7 +299,7 @@ object KMeans {
         .filter(col("vec_id") % stride === 0 && col("vec_id") / stride < k)
         .select((col("vec_id") / stride).cast("int").as("cid"),
           col("v").as("cv"), col("xx").as("cc"))
-        .localCheckpoint()
+        .pin()
       val got = seeds.count()
       require(got == k, s"fitVecsK(spreadSeeds): seeded $got/$k centroids — " +
         "vec_ids are not dense from 0 (gapped ids land between strides)")
@@ -311,16 +307,18 @@ object KMeans {
     } else vecs.filter(col("vec_id") < k)
       .select(col("vec_id").cast("int").as("cid"),
         col("v").as("cv"), col("xx").as("cc")))
-    for (_ <- 1 to DocIters) {
+    for (i <- 1 to DocIters) {
       // barrier between assign and re-center: updateDoc's posexplode
       // sits in the same codegen pipeline as the assignment project,
       // and GenerateExec re-evaluates deferred child expressions PER
       // exploded element — 1024× the K·d argmin per vector (measured
-      // 2.4× the whole stage at sf0.01). The narrow (cid, v)
-      // checkpoint pins the cid once per vector.
-      val assigned = assignDoc(vecs, cents)
-        .select(col("cid"), col("v")).localCheckpoint()
-      cents = updateDoc(assigned).localCheckpoint()
+      // 2.4× the whole stage at sf0.01). The narrow (cid, v) pin fixes
+      // the cid once per vector; it and the superseded centroids are
+      // released once the new centroids are pinned.
+      val prev = cents
+      cents = Materialize.using(assignDoc(vecs, cents)
+        .select(col("cid"), col("v")))(assigned => updateDoc(assigned).pin())
+      if (i > 1) Materialize.release(prev) // the seeds may read vecs lazily
     }
     cents
   }
@@ -417,7 +415,7 @@ object KMeans {
     val sample = vecs.filter(col("vec_id") % sStride === 0)
       .select(floor(col("vec_id") / sStride).cast("long").as("vec_id"),
         col("v"), col("xx"))
-      .localCheckpoint()
+      .pin()
     val l1 = fitVecsK(sample, b1, spreadSeeds = true)
       .select(col("cid"), col("cv"), col("cc"))
     // one full routing pass (n·B1·d), pinned: feeds seeding, every
@@ -425,14 +423,14 @@ object KMeans {
     var coarse = assignDoc(vecs, l1)
       .select(col("vec_id"), col("cid").cast("long").as("g"),
         col("v"), col("xx"))
-      .localCheckpoint()
+      .pin()
     var cents: DataFrame = null
     for (l <- 1 until levels - 1) {
       cents = refineLevel(coarse, bs(l), span)
       coarse = assignWithinGroups(coarse, cents)
         .select(col("vec_id"), (col("g") * bs(l) + col("c")).as("g"),
           col("v"), col("xx"))
-        .localCheckpoint()
+        .pin()
     }
     val bLast = bs(levels - 1)
     cents = refineLevel(coarse, bLast, span)
@@ -497,11 +495,13 @@ object KMeans {
     var cents = coarse
       .join(broadcast(seedIds), Seq("vec_id")) // ≈K rows — bounded
       .select(col("g"), col("c"), col("v").as("cv"), col("xx").as("cc"))
-      .localCheckpoint()
+      .pin()
     for (_ <- 1 to DocIters) {
-      val assigned = assignWithinGroups(coarse, cents)
-        .select(col("g"), col("c"), col("v")).localCheckpoint()
-      cents = updateDocBy(assigned, Seq("g", "c")).localCheckpoint()
+      val prev = cents
+      cents = Materialize.using(assignWithinGroups(coarse, cents)
+        .select(col("g"), col("c"), col("v")))(
+        assigned => updateDocBy(assigned, Seq("g", "c")).pin())
+      Materialize.release(prev)
     }
     cents
   }
@@ -906,23 +906,23 @@ object KMeans {
               .orderBy(col("sim").desc, col("vec_id"))))
           .filter(col("rank") <= 3)
           .select(col("q_id"), col("vec_id").as("n_id"))
-          .localCheckpoint() :: Nil
+          .pin() :: Nil
       },
       () => {
         val (fm, fa) = docModelOver(vecs, DocK, spreadSeeds = false)
         knnIvfTop3(fm, fa, AuditQueries)
           .select(col("q_id"), col("n_id"), lit(1L).as("hit_flat"))
-          .localCheckpoint() :: Nil
+          .pin() :: Nil
       },
       () => {
         val (tm, ta) = fitVecsTree(vecs, DocK)
         List(
           knnIvfTop3(tm, ta, AuditQueries)
             .select(col("q_id"), col("n_id"), lit(1L).as("hit_tree"))
-            .localCheckpoint(),
+            .pin(),
           knnIvfTop3(tm, ta, AuditQueries, TreeEqFracProbe)
             .select(col("q_id"), col("n_id"), lit(1L).as("hit_tree_eqf"))
-            .localCheckpoint())
+            .pin())
       })
     val tree = treePair.head
     val treeEqf = treePair(1)

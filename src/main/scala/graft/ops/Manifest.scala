@@ -59,7 +59,7 @@ object Manifest {
     val toks = docs2.select(col("doc_id"), col("source"),
       col("source").isin(Bayes.CuratedSources: _*).as("curated"),
       explode(TextOps.tokens(col("text"))).as("tok"))
-      .localCheckpoint()
+      .pin()
     val m = Bayes.model(spark, toks)
     val weights = m.groupBy(col("bin")).agg(
       (sum(when(col("curated"), col("lp")).otherwise(lit(0.0)))
@@ -79,7 +79,7 @@ object Manifest {
       .agg(count(lit(1)).as("n_toks"),
         round(sum(col("w").cast("decimal(28,12)")).cast("double")
           / count(lit(1)), 6).as("llr"))
-      .localCheckpoint()
+      .pin()
     val kept = perDoc.filter(col("llr") > 0.0)
 
     // stage 3: α=0.5 mixture weights over KEPT token supply

@@ -1,37 +1,39 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset, Observation}
+import org.apache.spark.sql.functions.{count, lit}
 
-/** The engine's materialization primitive — one place that decides
-  * HOW a mid-pipeline relation is pinned (VERDICT r15 #1/#3).
+/** The engine's one materialization boundary: every mid-pipeline
+  * relation that is pinned (fit loops, staged audit chains, shared
+  * subtrees, the streaming replays' staging inputs) goes through this
+  * object, and no other code pins. ToolsSpec enforces that.
   *
-  * Every fit loop, staged audit chain, and shared subtree in this
-  * tree truncates lineage with `localCheckpoint`, which stores the
-  * blocks on executors with NO fault-tolerant replication: perfect
-  * for `local[n]` (the executor IS the driver's process; losing it
-  * loses the job anyway) but a real-cluster liability — one lost
-  * executor makes the truncated lineage unrecoverable and fails the
-  * job ("Checkpoint block ... not found"). At 100 TB the same call
-  * sites need a RELIABLE materialization instead.
+  * - [[pin]] (or `.pin()`, from the `graft.ops` package object)
+  *   eagerly materializes a relation and returns a lineage-free leaf.
+  * - [[pinCounted]] pins and returns the row count, which an
+  *   `observe` metric collects from the pin's own job, so the count
+  *   costs no extra job.
+  * - [[using]] pins, runs a body on the pinned frame, and releases
+  *   the blocks afterwards, also when the body throws.
+  * - [[release]] drops a pin's blocks once nothing reads it again.
   *
-  * [[pin]] is that switch. The default mode is `local` —
-  * byte-identical behavior and plans to the raw `localCheckpoint`
-  * call it replaces, so bench records and plan evidence are
-  * unaffected. A cluster deployment sets
-  * `spark.graft.materialize.mode=reliable` (plus
-  * `sparkContext.setCheckpointDir` on durable storage) and every
-  * call site silently switches to `Dataset.checkpoint` — same
-  * values, same downstream plans (both return a materialized
-  * LogicalRDD), but the blocks live on the checkpoint dir's
-  * replicated storage and survive executor loss.
+  * The mode decides HOW a relation is pinned. `local` (the default)
+  * is `localCheckpoint`: blocks on the executors with no replication,
+  * right for `local[n]`, where the executor is the driver's process,
+  * and byte-identical in plans to the raw call. On a cluster one lost
+  * executor makes such a truncated lineage unrecoverable ("Checkpoint
+  * block ... not found"), so a cluster deployment sets
+  * `spark.graft.materialize.mode=reliable` plus a checkpoint dir on
+  * durable storage (`spark.checkpoint.dir` or
+  * `sparkContext.setCheckpointDir`), and every pin becomes
+  * `Dataset.checkpoint`: the same rows and the same downstream plans
+  * (both return a materialized LogicalRDD), but the blocks survive
+  * executor loss.
   *
-  * The contract both modes share: the returned frame is EAGERLY
-  * materialized (callers rely on the checkpoint job to fire
-  * `observe` metrics and to pin convergence-loop state), its rows
-  * are exactly the input's, and downstream consumers see a
-  * lineage-free leaf. `eager = false` delays materialization to the
-  * first action (used where the caller wants the pin to execute
-  * under scoped confs).
+  * Both modes materialize eagerly (callers rely on the pin's job to
+  * fire `observe` metrics and to fix convergence-loop state), keep
+  * the input's rows exactly, and hand downstream consumers a leaf
+  * without lineage.
   */
 object Materialize {
 
@@ -40,18 +42,36 @@ object Materialize {
     * other value fails fast rather than silently pinning locally. */
   val ModeKey = "spark.graft.materialize.mode"
 
-  def pin(df: DataFrame, eager: Boolean = true): DataFrame =
-    df.sparkSession.conf.getOption(ModeKey) match {
+  def pin[T](ds: Dataset[T]): Dataset[T] =
+    ds.sparkSession.conf.getOption(ModeKey) match {
       case Some("reliable") =>
-        require(df.sparkSession.sparkContext.getCheckpointDir.nonEmpty,
-          s"$ModeKey=reliable needs sparkContext.setCheckpointDir on " +
-            "durable storage")
-        df.checkpoint(eager)
-      case Some("local") | None => df.localCheckpoint(eager)
+        require(ds.sparkSession.sparkContext.getCheckpointDir.nonEmpty,
+          s"$ModeKey=reliable needs a checkpoint dir on durable storage " +
+            "(spark.checkpoint.dir or sparkContext.setCheckpointDir)")
+        ds.checkpoint()
+      case Some("local") | None => ds.localCheckpoint()
       case Some(other) =>
         throw new IllegalArgumentException(
           s"$ModeKey must be local or reliable, got '$other'")
     }
+
+  /** [[pin]] plus the pinned row count, observed from the pin's own
+    * job: an adaptive choice (one partition for a small table, a
+    * broadcast side) needs the size, and a separate `count()` would
+    * be one more job over the same subtree. */
+  def pinCounted(df: DataFrame): (DataFrame, Long) = {
+    val obs = Observation()
+    val pinned = pin(df.observe(obs, count(lit(1)).as("n")))
+    (pinned, obs.get("n").asInstanceOf[Long])
+  }
+
+  /** Pin `df`, run `body` on the pinned frame, then [[release]] it,
+    * also when `body` throws. `body` must not return anything that
+    * still reads the pin lazily: pin what it returns. */
+  def using[T](df: DataFrame)(body: DataFrame => T): T = {
+    val pinned = pin(df)
+    try body(pinned) finally release(pinned)
+  }
 
   /** Drop a [[pin]]'s blocks once nothing reads the pinned frame
     * again. The frame is unusable afterwards: its lineage is
@@ -61,11 +81,4 @@ object Materialize {
       case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist()
       case _ =>
     }
-
-  /** `df.pin()` syntax so call sites read like the
-    * `.localCheckpoint()` they replace. */
-  implicit final class PinSyntax(private val df: DataFrame) extends AnyVal {
-    def pin(): DataFrame = Materialize.pin(df)
-    def pin(eager: Boolean): DataFrame = Materialize.pin(df, eager)
-  }
 }

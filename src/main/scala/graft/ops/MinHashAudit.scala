@@ -91,7 +91,7 @@ object MinHashAudit {
         round(sum(col("err").cast("decimal(28,9)")).cast("double")
           / count(lit(1)), 6).as("mean_abs_err"),
         round(max(col("err")), 6).as("max_abs_err"))
-      .localCheckpoint() // one execution serves contract + answer
+      .pin() // one execution serves contract + answer
     // census columns: band(0), n_pairs(1), mean_est(2),
     // mean_exact(3), mean_abs_err(4), max_abs_err(5)
     for (r <- census.collect()

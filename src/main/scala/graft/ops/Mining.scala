@@ -49,7 +49,7 @@ object Mining {
     val d = Tables.documents(spark, sfDir)
       .select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))
       .withColumn("n", size(col("toks")))
-      .localCheckpoint() // feeds the model side and the held-out side
+      .pin() // feeds the model side and the held-out side
     val train = d.filter(col("doc_id") % 2 === 0)
     val held = d.filter(col("doc_id") % 2 === 1)
 
@@ -182,7 +182,7 @@ object Mining {
       .join(broadcast(Tables.part(spark, sfDir)
         .select(col("p_partkey").as("l_partkey"), col("p_name"))),
         Seq("l_partkey"))
-      .localCheckpoint() // feeds both the per-target totals and the term counts
+      .pin() // feeds both the per-target totals and the term counts
     val totals = links.groupBy(col("dst"))
       .agg(count(lit(1)).as("links"))
       .orderBy(col("links").desc, col("dst"))
@@ -243,10 +243,10 @@ object Mining {
     val d = Tables.documents(spark, sfDir)
       .select(TextOps.tokens(col("text")).as("toks"))
       .withColumn("n", size(col("toks")))
-      .localCheckpoint() // feeds unigram and bigram counters
+      .pin() // feeds unigram and bigram counters
     val uni = d.select(explode(col("toks")).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("c1"))
-      .localCheckpoint() // joined twice (marginals of both slots)
+      .pin() // joined twice (marginals of both slots)
     val bi = d.filter(col("n") >= 2)
       .select(explode(zip_with(
         slice(col("toks"), lit(1), col("n") - 1),
@@ -333,7 +333,7 @@ object Mining {
         explode(split(col("page"), "\n")).as("para"))
       .select(col("doc_id"), col("source"),
         substring(md5(col("para")), 1, 15).as("ph"))
-      .localCheckpoint() // feeds df counting and the join back
+      .pin() // feeds df counting and the join back
     val dfCounts = paras.groupBy(col("ph"))
       .agg(countDistinct(col("doc_id")).as("df"))
     // merge: the paragraph checkpoint is corpus-proportional and was
@@ -389,7 +389,7 @@ object Mining {
         TextOps.shinglesFromTokens(col("toks"), 8),
         s => TextOps.hash60(s)))).as("g"))
       .distinct()
-      .localCheckpoint() // shared by sizes + both join sides
+      .pin() // shared by sizes + both join sides
     val sizes = grams.groupBy(col("source"))
       .agg(count(lit(1)).as("n_grams"))
     // merge: both sides are the (source, gram) checkpoint — the

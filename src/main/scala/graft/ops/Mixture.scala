@@ -69,7 +69,7 @@ object Mixture {
           .otherwise((col("b") - col("cum_n").cast("double")) /
             (col("tot_w") - col("cum_w")).cast("double")))
       .withColumn("r_next", lead(col("r"), 1).over(byRatio))
-      .localCheckpoint()
+      .pin()
 
     // the water level: the unique feasible candidate — k capped
     // domains is consistent iff the k-th ratio is under λ_k and the

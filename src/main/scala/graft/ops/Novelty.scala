@@ -81,7 +81,7 @@ object Novelty {
 
   def noveltyScore(spark: SparkSession, sfDir: String,
       k: Int): DataFrame = {
-    val grams = gramPairs(spark, sfDir).localCheckpoint() // feeds both sides
+    val grams = gramPairs(spark, sfDir).pin() // feeds both sides
     val owner = grams.groupBy(col("g"))
       .agg(min(col("doc_id")).as("first_doc"), count(lit(1)).as("df"))
     // merge hint: without it the static planner BROADCASTS the
@@ -145,7 +145,7 @@ object Novelty {
     val pairs = gramPairs(spark, sfDir)
       .crossJoin(broadcast(maxId))
       .select(col("doc_id"), col("g"), batchOf.as("batch"))
-      .localCheckpoint() // feeds first-seen and instance counts
+      .pin() // feeds first-seen and instance counts
     val newPerBatch = pairs.groupBy(col("g"))
       .agg(min(col("batch")).as("batch"))
       .groupBy(col("batch")).agg(count(lit(1)).as("n_new_grams"))

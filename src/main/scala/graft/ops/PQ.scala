@@ -45,7 +45,7 @@ object PQ {
     * are materialized FIRST — the M slice expressions would otherwise
     * re-evaluate the featurizer subtree once per subspace. */
   private[graft] def subvecs(spark: SparkSession, sfDir: String): DataFrame =
-    Corpus.docEmbeddings(spark, sfDir).localCheckpoint()
+    Corpus.docEmbeddings(spark, sfDir).pin()
       .select(col("vec_id"), explode(array((0 until M).map { m =>
         struct(lit(m).as("m"),
           slice(col("v"), m * SubDim + 1, SubDim).as("sv"))
@@ -102,16 +102,16 @@ object PQ {
   /** q67: PQ-ANN — train, encode, ADC-score against query vec_id=0,
     * top-10 by approximate distance. */
   def pqAnn(spark: SparkSession, sfDir: String): DataFrame = {
-    // eager localCheckpoint, not cache: the returned plan is lazy, so
+    // eager pin, not cache: the returned plan is lazy, so
     // a cache()+unpersist() pair around plan CONSTRUCTION would be
     // dropped before the first action; the checkpoint materializes
     // the exploded subvectors once for their ~6 downstream uses
-    val sub: DataFrame = subvecs(spark, sfDir).localCheckpoint()
+    val sub: DataFrame = subvecs(spark, sfDir).pin()
     var cents = sub.filter(col("vec_id") < K)
       .select(col("m"), col("vec_id").cast("int").as("cid"),
         col("sv").as("cv"), col("xx").as("cc"))
     for (_ <- 1 to LloydIters)
-      cents = recenter(assign(sub, cents)).localCheckpoint()
+      cents = recenter(assign(sub, cents)).pin()
     val codes = assign(sub, cents).select(col("vec_id"), col("m"), col("cid"))
     val qsub = sub.filter(col("vec_id") === 0)
       .select(col("m"), col("sv").as("qv"), col("xx").as("qxx"))

@@ -9,7 +9,7 @@ package graft.ops
   * tail of one chain with the next chain's tasks.
   *
   * DETERMINISM: safe only for thunks whose VALUES are independent of
-  * scheduling — every use here materializes (localCheckpoint) a
+  * scheduling — every use here materializes (pins) a
   * subtree whose content is a pure function of its inputs; only the
   * wall-clock interleaving changes. Never use it around
   * driver-observed convergence loops whose iteration count could

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -145,21 +145,18 @@ object Partitioning {
     * on stats-typed columns) — exactly why the layout groups by the
     * partition column `day`. The query HARD-ASSERTS
     * `PushedAggregation` in the executed scan; the eager
-    * localCheckpoint materializes under the scoped DSv2 confs (the
+    * pin materializes under the scoped DSv2 confs (the
     * q153 pattern), so the asserted plan IS the one that produced
     * the answer and the session confs are restored afterwards. */
   def footerRollup(spark: SparkSession, sfDir: String): DataFrame = {
     val path = writePartitioned(spark, sfDir)
-    val prevV1 = spark.conf.get("spark.sql.sources.useV1SourceList")
-    val prevPush = spark.conf.get("spark.sql.parquet.aggregatePushdown")
-    val prevInf = spark.conf.get("spark.sql.sources.partitionColumnTypeInference.enabled")
-    try {
-      spark.conf.set("spark.sql.sources.useV1SourceList", "")
-      spark.conf.set("spark.sql.parquet.aggregatePushdown", "true")
+    GraftSession.withConfs(spark, Seq(
+      "spark.sql.sources.useV1SourceList" -> "",
+      "spark.sql.parquet.aggregatePushdown" -> "true",
       // day was WRITTEN as a yyyy-MM-dd string; without this the read
       // back-infers the partition directory as DATE and the result
       // dtype drifts from the oracle's VARCHAR (r13 strict-gate audit)
-      spark.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
+      "spark.sql.sources.partitionColumnTypeInference.enabled" -> "false")) {
       // `+ 0.0` after the pushed aggregates: parquet writers record a
       // zero min/max stat as -0.0/+0.0 conservatively (sign-safety in
       // the format spec), so a footer-stats MIN can return -0.0 where
@@ -176,16 +173,12 @@ object Partitioning {
           (col("v_min") + lit(0.0)).as("v_min"),
           (col("v_max") + lit(0.0)).as("v_max"))
         .orderBy(col("day"))
-      val out = agg.localCheckpoint(true) // executes under the scoped confs
+      val out = agg.pin() // executes under the scoped confs
       val plan = agg.queryExecution.executedPlan.toString
       require(plan.contains("PushedAggregation: [COUNT(*)")
         && plan.contains("MIN(value)") && plan.contains("MAX(value)"),
         s"aggregates not answered from footer statistics:\n$plan")
       out
-    } finally {
-      spark.conf.set("spark.sql.sources.useV1SourceList", prevV1)
-      spark.conf.set("spark.sql.parquet.aggregatePushdown", prevPush)
-      spark.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled", prevInf)
     }
   }
 

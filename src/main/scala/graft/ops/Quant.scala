@@ -207,7 +207,7 @@ object Quant {
       .select(col("vec_id"), col("v"), col("p"),
         VectorOps.dot(col("v"), col("v")).as("vv"),
         VectorOps.dot(col("p"), col("p")).as("pp"))
-      .localCheckpoint() // both sides of the audit cross join
+      .pin() // both sides of the audit cross join
     val a = e.select(col("vec_id").as("a_id"), col("v").as("va"),
       col("p").as("pa"), col("vv").as("aa"), col("pp").as("paa"))
     val b = e.select(col("vec_id").as("b_id"), col("v").as("vb"),

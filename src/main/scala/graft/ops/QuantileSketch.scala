@@ -57,7 +57,7 @@ object QuantileSketch {
     * published, t-digest audited in-pass. */
   def tdigestAudit(spark: SparkSession, sfDir: String): DataFrame = {
     val agg = auditAgg(spark, sfDir)
-    val pinned = agg.localCheckpoint(true) // one execution, both uses
+    val pinned = agg.pin() // one execution, both uses
     val rows = pinned.collect() // group-cardinality-bounded (3 flags)
     require(rows.nonEmpty, "audit needs at least one group")
     rows.foreach { r =>

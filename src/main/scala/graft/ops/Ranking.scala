@@ -133,12 +133,12 @@ object Ranking {
   def bigramLogprob(spark: SparkSession, sfDir: String): DataFrame = {
     // the tokenized docs feed three consumers (occurrences, unigram
     // model, vocab stats) and the occurrence stream feeds two (bigram
-    // model + scoring) — materialize each once (localCheckpoint, not
+    // model + scoring) — materialize each once (pin, not
     // cache: the returned plan is lazy, round-2 lesson)
     val d = Tables.documents(spark, sfDir)
       .select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))
       .withColumn("n", size(col("toks")))
-      .localCheckpoint()
+      .pin()
     val occ = d.filter(col("n") >= 2)
       .select(col("doc_id"),
         explode(zip_with(
@@ -146,7 +146,7 @@ object Ranking {
           slice(col("toks"), lit(2), col("n") - 1),
           (a, b) => struct(a.as("w1"), b.as("w2")))).as("bg"))
       .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
-      .localCheckpoint()
+      .pin()
     val uni = d.select(explode(col("toks")).as("w1"))
       .groupBy(col("w1")).agg(count(lit(1)).as("c1"))
     val bi = occ.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c2"))
@@ -217,7 +217,7 @@ object Ranking {
     val d = Tables.documents(spark, sfDir)
       .select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))
       .withColumn("n", size(col("toks")))
-      .localCheckpoint()
+      .pin()
     val occ = d.filter(col("n") >= 2)
       .select(col("doc_id"),
         explode(zip_with(
@@ -225,9 +225,9 @@ object Ranking {
           slice(col("toks"), lit(2), col("n") - 1),
           (a, b) => struct(a.as("w1"), b.as("w2")))).as("bg"))
       .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
-      .localCheckpoint()
+      .pin()
     val bi = occ.groupBy(col("w1"), col("w2"))
-      .agg(count(lit(1)).as("c2")).localCheckpoint()
+      .agg(count(lit(1)).as("c2")).pin()
     val ctx = bi.groupBy(col("w1"))
       .agg(sum(col("c2")).as("c1"), count(lit(1)).as("n1p_fwd"))
     val cont = bi.groupBy(col("w2")).agg(count(lit(1)).as("n1p_bwd"))
@@ -303,13 +303,13 @@ object Ranking {
     val dt = docs.select(col("doc_id"), explode(col("toks")).as("term"))
       .groupBy(col("doc_id"), col("term"))
       .agg(count(lit(1)).cast("double").as("tf"))
-      .localCheckpoint()
+      .pin()
     // n_docs counts ALL documents (matching the oracle), not just
     // those with tokens; Catalyst prunes the tokenize for a bare count
     val stats = docs.agg(count(lit(1)).cast("double").as("n_docs"))
     val dfT = dt.groupBy(col("term"))
       .agg(count(lit(1)).cast("double").as("df"))
-      .localCheckpoint()
+      .pin()
     // merge: dfT is the vocabulary-sized df checkpoint, statically
     // broadcast off its stats-blind estimate (PERF.md r11 audit)
     val w = dt.join(dfT.hint("merge"), Seq("term"))
@@ -437,10 +437,10 @@ object Ranking {
     val Seq(bm, tf) = Par.run(
       () => bm25(spark, sfDir)
         .withColumn("rank_bm25", row_number().over(bmRank))
-        .select(col("doc_id"), col("rank_bm25")).localCheckpoint(),
+        .select(col("doc_id"), col("rank_bm25")).pin(),
       () => tfidf(spark, sfDir)
         .withColumn("rank_tfidf", row_number().over(tfRank))
-        .select(col("doc_id"), col("rank_tfidf")).localCheckpoint())
+        .select(col("doc_id"), col("rank_tfidf")).pin())
     bm.join(tf, Seq("doc_id"), "full_outer")
       .withColumn("rrf", round(
         coalesce(lit(1.0) / (lit(RrfC.toDouble) + col("rank_bm25")), lit(0.0))

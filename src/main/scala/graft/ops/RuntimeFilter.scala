@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -37,9 +37,7 @@ object RuntimeFilter {
       "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "512MB",
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "1KB",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    try {
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    GraftSession.withConfs(spark, confs) {
       val urgent = Tables.orders(spark, sfDir)
         .filter(col("o_orderpriority") === Priority)
         .select(col("o_orderkey"), col("o_orderdate"))
@@ -51,7 +49,7 @@ object RuntimeFilter {
           round(sum((col("l_extendedprice") * (lit(1) - col("l_discount")))
             .cast("decimal(28,10)")).cast("double"), 2).as("revenue"))
         .orderBy(col("o_year"))
-      val out = joined.localCheckpoint(true) // executes under the scoped confs
+      val out = joined.pin() // executes under the scoped confs
       val plan = joined.queryExecution.executedPlan.toString
       // the physical rendering: the fact-side Filter carries
       // might_contain(<subquery>) probing a bloom_filter_agg built
@@ -59,9 +57,6 @@ object RuntimeFilter {
       require(plan.contains("might_contain") && plan.contains("bloom_filter_agg"),
         s"no runtime bloom filter injected into the fact side:\n$plan")
       out
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 

@@ -114,8 +114,8 @@ object Segment {
     // row count flapped 100/103 run to run before the pin). Any ONE
     // boundary set yields the same global ranks (total order), so the
     // pinned result is deterministic across runs too.
-    val rng = Materialize.pin(df.repartitionByRange(p, sortCols: _*)
-      .withColumn("__pid", spark_partition_id()))
+    val rng = df.repartitionByRange(p, sortCols: _*)
+      .withColumn("__pid", spark_partition_id()).pin()
     val local = rng.withColumn("__lr", row_number().over(
       Window.partitionBy(col("__pid")).orderBy(sortCols: _*)))
     // ≤ p rows: offsets and the grand total, metadata-scale

@@ -51,12 +51,12 @@ object SemDedup {
   private[graft] def semDedupOver(assignments: DataFrame,
       alreadyPinned: Boolean = false): DataFrame = {
     // the fitted assignment feeds both pair sides and the final
-    // rollup — materialize it once (localCheckpoint keeps the
+    // rollup — materialize it once (a pin keeps the
     // returned plan lazy); callers that already checkpointed pass
     // alreadyPinned to avoid double-copying the 8 KB-per-row payload
     val selected = assignments
       .select(col("vec_id"), col("v"), col("xx"), col("cid"))
-    val assigned = if (alreadyPinned) selected else selected.localCheckpoint()
+    val assigned = if (alreadyPinned) selected else selected.pin()
     val a = assigned.select(col("cid"), col("vec_id").as("i"),
       col("v").as("vi"), col("xx").as("xi"))
     val b = assigned.select(col("cid"), col("vec_id").as("j"),

@@ -81,16 +81,16 @@ object SemanticDecon {
       "q228 leaked eval twins")
     // one featurize pass, read three ways (organic train / eval /
     // leak) — checkpoint-fed joins below follow the q224 convention
-    val e = Corpus.docEmbeddings(spark, sfDir).localCheckpoint()
+    val e = Corpus.docEmbeddings(spark, sfDir).pin()
     val isEval = pmod(col("vec_id"), lit(EvalEvery.toLong)) === 0
     val eval = e.filter(isEval)
     val leak = Similarity.perturbLast(eval, off)
     val train = e.filter(!isEval).unionByName(leak)
       .withColumn("nrm", graft.functions.VectorOps.l2Norm(col("v")))
-      .localCheckpoint()
+      .pin()
     val evalN = eval
       .withColumn("nrm", graft.functions.VectorOps.l2Norm(col("v")))
-      .localCheckpoint()
+      .pin()
     // the bipartite density self-guard (the q27/q225 discipline):
     // hold the declared geometry while the measured candidate volume
     // fits, widen along the recall-matched ladder when chance

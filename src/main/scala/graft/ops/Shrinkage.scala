@@ -38,7 +38,7 @@ object Shrinkage {
     // without the pin the corpus would tokenize+score twice
     val rated = cells.withColumn("raw_rate",
       round(col("k").cast("double") / col("n"), 6))
-      .localCheckpoint()
+      .pin()
     // method-of-moments Beta fit over the observed rates
     val moments = rated.agg(
       count(lit(1)).cast("double").as("s"),

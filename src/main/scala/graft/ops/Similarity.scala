@@ -139,7 +139,7 @@ object Similarity {
     // array element — O(dims²) per row, measured 26 s of the original
     // 31 s runtime at sf0.1. Staged through checkpoints/projections,
     // every subexpression runs once per row.
-    val e = Corpus.docEmbeddings(spark, sfDir).localCheckpoint()
+    val e = Corpus.docEmbeddings(spark, sfDir).pin()
     val perturbed = perturbLast(
       e.filter(pmod(col("vec_id"), lit(20)) === 0), off)
     // norms ride on the corpus rows so pair verification is one dot
@@ -147,7 +147,7 @@ object Similarity {
     // self-dot, computed once per vector instead of once per pair)
     e.unionByName(perturbed)
       .withColumn("nrm", VectorOps.l2Norm(col("v")))
-      .localCheckpoint()
+      .pin()
   }
 
   /** Perturbed copies of `rows(vec_id, v)` — last component zeroed,
@@ -318,7 +318,7 @@ object Similarity {
       .repartition(parts, col("band"), col("key"))
     val denom = col("na") * col("nb")
     // Force the partitioned join: the bucketed sides are
-    // localCheckpoint LogicalRDDs whose inherited size estimate
+    // pinned LogicalRDDs whose inherited size estimate
     // UNDER-reports the exploded 8 KB-vector rows, so the static
     // planner picked BroadcastHashJoin — collecting corpus × NBands
     // vector payloads through the driver (measured: 3.4 GB at the

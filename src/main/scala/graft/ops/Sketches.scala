@@ -52,7 +52,7 @@ object Sketches {
     * semi-join-reduction pattern that skips shuffling a 100 TB fact
     * table to join a small dim. */
   def bloomSemiJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    val flagged = flaggedUsers(spark, sfDir).localCheckpoint()
+    val flagged = flaggedUsers(spark, sfDir).pin()
     val positions = flagged.select(explode(array(
       (0 until BloomK).map(j => bloomPos(j, col("user_id"))): _*)).as("pos"))
     val bloom = positions
@@ -234,7 +234,7 @@ object Sketches {
   def cmsHeavyHitters(spark: SparkSession, sfDir: String): DataFrame = {
     val toks = Tables.documents(spark, sfDir)
       .select(explode(TextOps.tokens(col("text"))).as("tok"))
-      .localCheckpoint()
+      .pin()
     val sketch = toks
       .select(posexplode(array((0 until CmDepth).map(j =>
         cmPos(j, col("tok"))): _*)))

@@ -48,7 +48,7 @@ object Skyline {
     // q207 the upstream is the full scoring scan — without the pin
     // the tokenizer+featurize pipeline would run on both join sides
     val withB = pts.withColumn("bucket",
-      floor(col("score") * nBuckets).cast("long")).localCheckpoint()
+      floor(col("score") * nBuckets).cast("long")).pin()
     // (a) per score group: min cost (one partial agg)
     val grp = withB.groupBy(col("bucket"), col("score"))
       .agg(min(col("n_chars")).as("gmin"))

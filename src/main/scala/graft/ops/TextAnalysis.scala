@@ -162,11 +162,11 @@ object TextAnalysis {
     val freq = Tables.documents(spark, sfDir)
       .select(explode(TextOps.tokens(col("text"))).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("f"))
-      .localCheckpoint() // feeds the corpus totals and the top-k cut
+      .pin() // feeds the corpus totals and the top-k cut
     val totals = freq.agg(count(lit(1)).as("vocab"),
       sum(col("f")).as("n_tokens"))
     val top = freq.orderBy(col("f").desc, col("w")).limit(HillK + 1)
-      .localCheckpoint() // threshold row and numerator share the cut
+      .pin() // threshold row and numerator share the cut
     val thr = top.agg(min(col("f")).cast("double").as("f_thr"),
       (count(lit(1)) - 1).as("k"))
     top.crossJoin(broadcast(thr))

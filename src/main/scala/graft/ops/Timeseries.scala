@@ -29,12 +29,12 @@ object Timeseries {
     * LOCF; `observed` marks real rows vs carried-forward ones. */
   def gapFill(spark: SparkSession, sfDir: String): DataFrame = {
     // daily feeds both the bounds aggregate and the spine join —
-    // materialize once (localCheckpoint: the returned plan stays lazy)
+    // materialize once (pin: the returned plan stays lazy)
     val daily = Tables.events(spark, sfDir)
       .groupBy(col("user_id"), to_date(col("ts")).as("day"))
       .agg(round(sum(col("value").cast("decimal(28,10)")).cast("double"), 2)
         .as("v"))
-      .localCheckpoint()
+      .pin()
     val spine = daily.groupBy(col("user_id"))
       .agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
       .select(col("user_id"),

@@ -31,7 +31,7 @@ object Trend {
       .select(col("user_id"),
         date_format(col("ts"), "yyyy-MM-dd").as("day"))
       .distinct()
-      .localCheckpoint() // feeds DAU and the 7-day expansion
+      .pin() // feeds DAU and the 7-day expansion
     val dau = ud.groupBy(col("day")).agg(count(lit(1)).as("dau"))
     val wau = ud
       .select(col("user_id"), explode(sequence(lit(0), lit(WauDays - 1)))

@@ -74,7 +74,7 @@ object Winnow {
       .select(col("doc_id"),
         transform(TextOps.shinglesFromTokens(col("toks"), K),
           s => TextOps.hash60(s)).as("hs"))
-      .localCheckpoint()
+      .pin()
     hs.where(size(col("hs")) >= W)
       .select(col("doc_id"),
         explode(array_distinct(
@@ -86,10 +86,10 @@ object Winnow {
     * the planted near-dup copies must surface. */
   def winnowPairs(spark: SparkSession, sfDir: String): DataFrame = {
     // fingerprints feed both sides of the pair join — materialize once
-    val fps = fingerprints(spark, sfDir).localCheckpoint()
+    val fps = fingerprints(spark, sfDir).pin()
     val byFp = fps.groupBy(col("fp")).agg(count(lit(1)).as("df"))
       .where(col("df") <= MaxDf)
-    // merge hint: `fps` is a localCheckpoint LogicalRDD whose
+    // merge hint: `fps` is a pinned LogicalRDD whose
     // inherited stats under-report the corpus-proportional
     // fingerprint relation; the static planner broadcast it BuildLeft
     // into the df-cap join and AQE cannot demote a checkpoint-fed

@@ -87,7 +87,7 @@ object Zipf {
       .select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("tok"))
       .groupBy(col("tok"))
       .agg(count(lit(1)).as("f"), min(col("doc_id")).as("first_doc"))
-      .localCheckpoint()
+      .pin()
     val totals = vocab.agg(
       count(lit(1)).as("n_vocab"),
       sum(col("f")).cast("long").as("n_tokens"))

@@ -61,7 +61,7 @@ object Zorder {
       shiftrightunsigned(shiftleft(col("x"), LowBits) + col("y"), FileShift)
         .as("f_user"),
       shiftrightunsigned(shiftleft(col("y"), LowBits + 6) + col("x"), FileShift)
-        .as("f_time")).localCheckpoint()
+        .as("f_time")).pin()
     val layouts = Seq("zorder" -> "f_z", "user_major" -> "f_user",
       "time_major" -> "f_time")
     val perBox = for {

@@ -57,44 +57,44 @@ object LateDrop {
     // materialized once (r16, guide §2.4): the max/min scalar probes
     // and three of the staged batch writes each re-scanned events —
     // five passes for one slim (ts, event_type) relation
-    val ev = graft.ops.Materialize.pin(
-      Tables.events(spark, sfDir).select(col("ts"), col("event_type")))
-    val mx = ev.agg(max(col("ts"))).collect()(0).getTimestamp(0)
-    val lateSlice = ev.filter(col("ts") >=
-      new java.sql.Timestamp(mx.getTime - 40 * 60 * 1000))
-    // the slice must exercise BOTH paths: the filter threshold is
-    // floor-to-ms(max)−10min, so a row earlier than max−15min is
-    // droppable under ANY 5-min window alignment, and the max row
-    // itself (in the slice by construction) is always keepable
-    val thrMs = mx.getTime - 600000L
-    val lo = lateSlice.agg(min(col("ts"))).collect()(0).getTimestamp(0)
-    require(lo.getTime < thrMs - 300000L,
-      "late slice must contain droppable rows (evicted windows)")
-    // lag-invariance pins (see scaladoc): batches 0/1/3 must give the
-    // same keep/drop answer whether the filter uses the lagged or the
-    // current watermark, so ONLY batch 2 depends on the probed
-    // one-batch-lag semantics. 5-min windows on ms epochs:
-    def winEndMs(t: Long): Long = (t / 300000L + 1L) * 300000L
-    // batch 1 (the max row): its window clears the batch-0 watermark,
-    // so lagged (−∞) and unlagged (thrMs) filters both keep it — and
-    // being the max row, it cannot ADVANCE the watermark, which is
-    // what equalizes batch 2's lagged vs unlagged threshold
-    require(winEndMs(mx.getTime) > thrMs,
-      "lag pin: batch-1 max row must be keepable under both watermarks")
-    // batch 3 (advance row at max+30min): keepable under any watermark
-    // this replay can reach, and its own window must stay OPEN past
-    // the final watermark (floor-to-ms(max)+20min) so it never emits
-    require(winEndMs(mx.getTime + 1800000L) > mx.getTime + 1200000L,
-      "lag pin: advance row's window must outlive the final watermark")
-    import spark.implicits._
-    val advance = Seq((new java.sql.Timestamp(mx.getTime + 30 * 60 * 1000),
-      "advance")).toDF("ts", "event_type")
-    Replay.stage(stage, Seq(
-      ev,
-      ev.filter(col("ts") === mx),
-      lateSlice,
-      advance))
-    graft.ops.Materialize.release(ev)
+    graft.ops.Materialize.using(
+      Tables.events(spark, sfDir).select(col("ts"), col("event_type"))) { ev =>
+      val mx = ev.agg(max(col("ts"))).collect()(0).getTimestamp(0)
+      val lateSlice = ev.filter(col("ts") >=
+        new java.sql.Timestamp(mx.getTime - 40 * 60 * 1000))
+      // the slice must exercise BOTH paths: the filter threshold is
+      // floor-to-ms(max)−10min, so a row earlier than max−15min is
+      // droppable under ANY 5-min window alignment, and the max row
+      // itself (in the slice by construction) is always keepable
+      val thrMs = mx.getTime - 600000L
+      val lo = lateSlice.agg(min(col("ts"))).collect()(0).getTimestamp(0)
+      require(lo.getTime < thrMs - 300000L,
+        "late slice must contain droppable rows (evicted windows)")
+      // lag-invariance pins (see scaladoc): batches 0/1/3 must give the
+      // same keep/drop answer whether the filter uses the lagged or the
+      // current watermark, so ONLY batch 2 depends on the probed
+      // one-batch-lag semantics. 5-min windows on ms epochs:
+      def winEndMs(t: Long): Long = (t / 300000L + 1L) * 300000L
+      // batch 1 (the max row): its window clears the batch-0 watermark,
+      // so lagged (−∞) and unlagged (thrMs) filters both keep it — and
+      // being the max row, it cannot ADVANCE the watermark, which is
+      // what equalizes batch 2's lagged vs unlagged threshold
+      require(winEndMs(mx.getTime) > thrMs,
+        "lag pin: batch-1 max row must be keepable under both watermarks")
+      // batch 3 (advance row at max+30min): keepable under any watermark
+      // this replay can reach, and its own window must stay OPEN past
+      // the final watermark (floor-to-ms(max)+20min) so it never emits
+      require(winEndMs(mx.getTime + 1800000L) > mx.getTime + 1200000L,
+        "lag pin: advance row's window must outlive the final watermark")
+      import spark.implicits._
+      val advance = Seq((new java.sql.Timestamp(mx.getTime + 30 * 60 * 1000),
+        "advance")).toDF("ts", "event_type")
+      Replay.stage(stage, Seq(
+        ev,
+        ev.filter(col("ts") === mx),
+        lateSlice,
+        advance))
+    }
     val src = Replay.source(spark, "ts TIMESTAMP, event_type STRING", stage)
     val q = Replay.withStatePartitions(spark) {
       WindowedStats.windowedCounts(src).writeStream

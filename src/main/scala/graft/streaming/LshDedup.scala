@@ -134,10 +134,10 @@ object LshDedup {
     // writes below each re-ran the corpusNear union + text scan and
     // the coalesce(1) collapsed each of those scans to ONE task; off
     // the pin they are cheap block reads
-    val docs = graft.ops.Materialize.pin(Dedup.corpusNear(spark, sfDir))
-    Replay.stage(stage, (0 until StreamBatches).map(b =>
-      docs.filter(pmod(col("doc_id"), lit(StreamBatches.toLong)) === b)))
-    graft.ops.Materialize.release(docs)
+    graft.ops.Materialize.using(Dedup.corpusNear(spark, sfDir)) { docs =>
+      Replay.stage(stage, (0 until StreamBatches).map(b =>
+        docs.filter(pmod(col("doc_id"), lit(StreamBatches.toLong)) === b)))
+    }
     val src = Replay.source(spark, "doc_id BIGINT, text STRING", stage).as[Doc]
     // spread the CPU-bound signature pass (tokenize + 16 minhash
     // perms per doc in [[bandKeys]]) across the cores: each staged

@@ -155,10 +155,10 @@ object RateLimit {
     // materialized once (r16, guide §2.4): the four per-tick staged
     // writes each re-ran the two-way documents union under a
     // coalesce(1) single task; off the pin they are block reads
-    val cand = graft.ops.Materialize.pin(candidates(spark, sfDir))
-    Replay.stage(stage,
-      (0 until VTicks).map(b => cand.filter(col("vtime") === b.toLong)))
-    graft.ops.Materialize.release(cand)
+    graft.ops.Materialize.using(candidates(spark, sfDir)) { cand =>
+      Replay.stage(stage,
+        (0 until VTicks).map(b => cand.filter(col("vtime") === b.toLong)))
+    }
     val src = Replay.source(spark,
       "domain STRING, url STRING, vtime BIGINT", stage).as[TimedCandidate]
     val q = Replay.withStatePartitions(spark) {

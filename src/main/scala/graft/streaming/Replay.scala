@@ -77,16 +77,8 @@ object Replay {
 
   /** Run `f` (a stateful query's `start()`) under [[ScopedConfs]],
     * restoring every key afterwards. */
-  def withStatePartitions[T](spark: SparkSession)(f: => T): T = {
-    val prev = ScopedConfs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    try {
-      ScopedConfs.foreach { case (k, v) => spark.conf.set(k, v) }
-      f
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
+  def withStatePartitions[T](spark: SparkSession)(f: => T): T =
+    graft.GraftSession.withConfs(spark, ScopedConfs)(f)
 
   /** `Scratch.dir(name, sfDir)`, wiped, so every run replays the
     * stream from batch 0 with a fresh checkpoint and sink. */

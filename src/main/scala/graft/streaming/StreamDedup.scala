@@ -90,11 +90,11 @@ object StreamDedup {
     // materialize (doc_id, fp) once (r16, guide §2.4): the four
     // staged writes each re-ran the 4-way corpus union + tokenizing
     // fingerprint; off the pin they are block reads
-    val docs = graft.ops.Materialize.pin(corpus(spark, sfDir)
-      .select(col("doc_id"), TextOps.fingerprint(col("text")).as("fp")))
-    Replay.stage(stage, (0 until StreamBatches).map(b =>
-      docs.filter(pmod(col("doc_id"), lit(StreamBatches.toLong)) === b)))
-    graft.ops.Materialize.release(docs)
+    graft.ops.Materialize.using(corpus(spark, sfDir)
+        .select(col("doc_id"), TextOps.fingerprint(col("text")).as("fp"))) { docs =>
+      Replay.stage(stage, (0 until StreamBatches).map(b =>
+        docs.filter(pmod(col("doc_id"), lit(StreamBatches.toLong)) === b)))
+    }
     val src = Replay.source(spark, "doc_id BIGINT, fp BIGINT", stage)
     val q = Replay.withStatePartitions(spark) {
       src.dropDuplicates("fp").writeStream
@@ -150,11 +150,6 @@ object StreamDedup {
   def streamedBoundedDedup(spark: SparkSession, sfDir: String): DataFrame = {
     val base = Replay.scratch(spark, "stream_wdedup", sfDir)
     val stage = s"$base/stage"
-    // materialized once (r16, guide §2.4): three staged batches
-    // derive from `keys`, and each derivation re-ran the full
-    // tokenizing-fingerprint + distinct pipeline before the pin
-    val keys = graft.ops.Materialize.pin(Tables.documents(spark, sfDir)
-      .select(TextOps.fingerprint(col("text")).as("key")).distinct())
     val t0 = lit(java.sql.Timestamp.valueOf("2024-06-01 00:00:00"))
     def adv(k: Long, offsetMin: Int, bix: Int) = {
       import spark.implicits._
@@ -162,18 +157,23 @@ object StreamDedup {
         (t0 + expr(s"interval $offsetMin minutes")).as("ts"),
         lit(bix).as("bix"))
     }
-    Replay.stage(stage, Seq(
-      keys.select(col("key"), t0.as("ts"), lit(0).as("bix")),
-      keys.filter(pmod(col("key"), lit(3)) === 0)
-        .select(col("key"), (t0 + expr("interval 1 minute")).as("ts"),
-          lit(1).as("bix"))
-        .unionByName(adv(-1L, 30, 1)),
-      adv(-2L, 720, 2),
-      keys.filter(pmod(col("key"), lit(5)) === 0)
-        .select(col("key"), (t0 + expr("interval 1440 minutes")).as("ts"),
-          lit(3).as("bix"))
-        .unionByName(adv(-3L, 1500, 3))))
-    graft.ops.Materialize.release(keys)
+    // materialized once (r16, guide §2.4): three staged batches
+    // derive from `keys`, and each derivation re-ran the full
+    // tokenizing-fingerprint + distinct pipeline before the pin
+    graft.ops.Materialize.using(Tables.documents(spark, sfDir)
+        .select(TextOps.fingerprint(col("text")).as("key")).distinct()) { keys =>
+      Replay.stage(stage, Seq(
+        keys.select(col("key"), t0.as("ts"), lit(0).as("bix")),
+        keys.filter(pmod(col("key"), lit(3)) === 0)
+          .select(col("key"), (t0 + expr("interval 1 minute")).as("ts"),
+            lit(1).as("bix"))
+          .unionByName(adv(-1L, 30, 1)),
+        adv(-2L, 720, 2),
+        keys.filter(pmod(col("key"), lit(5)) === 0)
+          .select(col("key"), (t0 + expr("interval 1440 minutes")).as("ts"),
+            lit(3).as("bix"))
+          .unionByName(adv(-3L, 1500, 3))))
+    }
     val src = Replay.source(spark, "key BIGINT, ts TIMESTAMP, bix INT", stage)
     val q = Replay.withStatePartitions(spark) {
       src.withWatermark("ts", DedupDelay)

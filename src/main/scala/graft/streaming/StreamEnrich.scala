@@ -32,11 +32,11 @@ object StreamEnrich {
     // materialized once (r16, guide §2.4): the four staged writes
     // each re-scanned the events table under a coalesce(1) single
     // task; off the pin they are block reads
-    val ev = graft.ops.Materialize.pin(Tables.events(spark, sfDir)
-      .select(col("event_id"), col("user_id"), col("value")))
-    Replay.stage(stage, (0 until StreamBatches).map(b =>
-      ev.filter(pmod(col("event_id"), lit(StreamBatches.toLong)) === b)))
-    graft.ops.Materialize.release(ev)
+    graft.ops.Materialize.using(Tables.events(spark, sfDir)
+        .select(col("event_id"), col("user_id"), col("value"))) { ev =>
+      Replay.stage(stage, (0 until StreamBatches).map(b =>
+        ev.filter(pmod(col("event_id"), lit(StreamBatches.toLong)) === b)))
+    }
     val dim = Tables.customer(spark, sfDir)
       .select(col("c_custkey").as("user_id"),
         col("c_mktsegment").as("segment"))

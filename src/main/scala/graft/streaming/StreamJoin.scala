@@ -36,15 +36,15 @@ object StreamJoin {
     // materialized once (r16, guide §2.4): each ranged side pays a
     // range-sampling pass PLUS the shuffle-write pass — four events
     // scans for two slim relations; off the pin they are block reads
-    val ev = graft.ops.Materialize.pin(Tables.events(spark, sfDir)
-      .select(col("user_id"), col("ts"), col("event_type")))
-    Replay.stageRanges(s"$base/imps", ev.filter(col("event_type") === "view")
-      .select(col("user_id").as("ad_id"), col("ts").as("imp_ts")), "imp_ts")
-    Replay.stageRanges(s"$base/clicks", ev.filter(col("event_type") === "click")
-      .select(col("user_id").as("c_ad_id"), col("ts").as("click_ts")),
-      "click_ts")
-    more(ev)
-    graft.ops.Materialize.release(ev)
+    graft.ops.Materialize.using(Tables.events(spark, sfDir)
+        .select(col("user_id"), col("ts"), col("event_type"))) { ev =>
+      Replay.stageRanges(s"$base/imps", ev.filter(col("event_type") === "view")
+        .select(col("user_id").as("ad_id"), col("ts").as("imp_ts")), "imp_ts")
+      Replay.stageRanges(s"$base/clicks", ev.filter(col("event_type") === "click")
+        .select(col("user_id").as("c_ad_id"), col("ts").as("click_ts")),
+        "click_ts")
+      more(ev)
+    }
     (Replay.source(spark, "ad_id BIGINT, imp_ts TIMESTAMP", s"$base/imps"),
       Replay.source(spark, "c_ad_id BIGINT, click_ts TIMESTAMP",
         s"$base/clicks"))

@@ -1,9 +1,10 @@
 package graft.tools
 
+import graft.ops.PinSyntax
 import org.apache.spark.sql.functions._
 
 /** Plan evidence for the r15 re-centering change: the fit loops run
-  * behind localCheckpoint barriers, so the declared queries' final
+  * behind pin barriers, so the declared queries' final
   * plans cannot show the explode → native-aggregate diff — this dumps
   * the UPDATE SUBTREE's own `.explain("formatted")` for both shapes
   * over the same staged assignment.
@@ -19,7 +20,7 @@ object ExplainRecenter {
     spark.sparkContext.setLogLevel("ERROR")
     val assigned = graft.ops.KMeans.docVectors(spark, sfDir)
       .select(pmod(col("vec_id"), lit(10)).cast("int").as("cid"), col("v"))
-      .localCheckpoint()
+      .pin()
     def dump(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
       val plan = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)

@@ -1,11 +1,11 @@
 package graft.tools
 
-import graft.ops.KMeans
+import graft.ops.{KMeans, PinSyntax}
 
 /** Breakdown probe for the ADAPTIVE doc-model path (r13: flat Lloyd
   * at the gate K, two-level tree above it — [[KMeans.fitVecsTree]]).
   * Times the fit+final-assignment alone (materialized via
-  * localCheckpoint, same barrier as [[ProbeSemDedupK]]) so ladder
+  * pin, same barrier as [[ProbeSemDedupK]]) so ladder
   * legs can separate the fit from each consumer's own stages.
   *
   * {{{ sbt "runMain graft.tools.ProbeDocModel /dev/shm/graft_scale/x30 3" }}}
@@ -20,7 +20,7 @@ object ProbeDocModel {
     val times = (1 to reps).map { rep =>
       val t0 = System.nanoTime()
       val (model, assigned) = KMeans.docModelAndAssignments(spark, sfDir)
-      val a = assigned.localCheckpoint()
+      val a = assigned.pin()
       val t1 = System.nanoTime()
       val k = model.count()
       val n = a.count()

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.ops.Graph
+import graft.ops.{Graph, PinSyntax}
 import org.apache.spark.sql.functions._
 
 /** Scale probe for the iterative rank-loop family (q66/q75/q110):
@@ -32,7 +32,7 @@ object ProbeGraphScale {
       .select(pmod(xxhash64(col("id")), lit(nNodes)).as("src"),
         pmod(xxhash64(col("id") + nEdges), lit(nNodes)).as("dst"))
       .distinct()
-      .localCheckpoint() // probe the loop, not the generator
+      .pin() // probe the loop, not the generator
     var e = 0L
     val times = (1 to reps).map { rep =>
       val edges = stageEdges()

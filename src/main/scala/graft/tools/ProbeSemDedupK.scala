@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.ops.{KMeans, SemDedup}
+import graft.ops.{KMeans, PinSyntax, SemDedup}
 
 /** Scale probe for the q100 SemDeDup family: drive the SAME
   * pair-compare + rollup with K scaled to the corpus — the
@@ -34,7 +34,7 @@ object ProbeSemDedupK {
       val t0 = System.nanoTime()
       val assigned = KMeans
         .docModelAndAssignmentsK(spark, sfDir, k, spreadSeeds = k > KMeans.DocK)._2
-        .localCheckpoint() // stage barrier: fit + assignment timed alone
+        .pin() // stage barrier: fit + assignment timed alone
       val t1 = System.nanoTime()
       val out = SemDedup.semDedupOver(assigned, alreadyPinned = true)
       val agg = out.selectExpr("count(*) AS clusters",

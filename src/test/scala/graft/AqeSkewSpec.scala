@@ -40,5 +40,12 @@ class AqeSkewSpec extends SparkSpec {
     AqeSkew.skewJoinRollup(spark, dir).collect()
     val after = keys.map(k => k -> spark.conf.getOption(k))
     assert(after === before, "q187 must not leak its scoped confs")
+    // getOption reads a default for an absent key; only getAll shows a
+    // key restored to its default instead of unset, and only in a
+    // session where no earlier run left it set (see ConfScopeSpec)
+    val fresh = spark.newSession()
+    val all = fresh.conf.getAll
+    AqeSkew.skewJoinRollup(fresh, dir).collect()
+    assert(fresh.conf.getAll === all, "q187 left keys set")
   }
 }

@@ -47,6 +47,18 @@ class KMeansTreeSpec extends SparkSpec {
       .localCheckpoint()
   }
 
+  test("a Lloyd fit leaves only its centroids pinned, whatever DocIters is") {
+    // each iteration's n-row assignment and superseded centroids are
+    // released once the next centroids are pinned
+    vecs.count()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val cents = KMeans.fitVecsK(vecs, Centers)
+    val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(KMeans.DocIters > 1, "one iteration cannot show growth")
+    assert(left.size === 1, s"${left.size} pins left after ${KMeans.DocIters} iterations")
+    assert(cents.count() > 0, "the returned centroids must stay readable")
+  }
+
   test("adaptive K floors at the gate constant and scales by DocsPerCluster") {
     import spark.implicits._
     def k(n: Int): Int = KMeans.adaptiveDocK(

@@ -66,17 +66,51 @@ class MaterializeSpec extends SparkSpec {
   }
 
   test("an eager pin fires an observe metric from its own job") {
-    // KMeans.docVectorsWithCount, Components and Graph read counts
-    // observed below a pin without running any other action
+    // pinCounted (KMeans.docVectorsWithCount, Components, Graph) reads
+    // the count observed below a pin without running any other action
     import spark.implicits._
+    def input = (0 until 1000).toDF("x")
     def observedCount(): Long = {
       val obs = Observation()
-      Materialize.pin((0 until 1000).toDF("x")
-        .observe(obs, count(lit(1)).as("cnt")))
+      Materialize.pin(input.observe(obs, count(lit(1)).as("cnt")))
       Await.result(obs.future, 30.seconds).getAs[Long]("cnt")
     }
+    def pinnedCount(): Long = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        val (pinned, n) = Materialize.pinCounted(input)
+        org.apache.spark.ListenerBusDrain(spark.sparkContext)
+        assert(jobs.get === 1, "pinCounted ran more than the pin's own job")
+        assert(pinned.count() === n)
+        n
+      } finally spark.sparkContext.removeSparkListener(listener)
+    }
     assert(observedCount() === 1000L, "local mode")
+    assert(pinnedCount() === 1000L, "local mode, pinCounted")
     assert(reliably(_ => observedCount()) === 1000L, "reliable mode")
+    assert(reliably(_ => pinnedCount()) === 1000L, "reliable mode, pinCounted")
+  }
+
+  test("using releases the pin's blocks on a normal return and on a throw") {
+    def registered = spark.sparkContext.getPersistentRDDs.keySet
+    val before = registered
+    val rows = Materialize.using(sample) { pinned =>
+      assert((registered -- before).nonEmpty, "the body runs on a pin")
+      pinned.count()
+    }
+    assert(rows === sample.count())
+    assert((registered -- before).isEmpty, "normal return kept the blocks")
+    intercept[IllegalStateException] {
+      Materialize.using(sample)(_ => throw new IllegalStateException("body"))
+    }
+    assert((registered -- before).isEmpty, "a throwing body kept the blocks")
   }
 
   test("an unknown mode fails fast, naming the conf") {

@@ -5,7 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The dev mains stay few and documented: every main the docs tell a
   * reader to run exists, the oracle dump has one writer, JIT timing
   * lives only in the bench child and the one profiler, no kernel
-  * boxes a primitive array result, and there is one tokenizer. */
+  * boxes a primitive array result, there is one tokenizer, and one
+  * place each pins (ops/Materialize) and scopes session confs
+  * (GraftSession.withConfs). */
 class ToolsSpec extends AnyFunSuite {
 
   private def sources: Seq[java.io.File] = {
@@ -57,6 +59,20 @@ class ToolsSpec extends AnyFunSuite {
       .map(_.getPath.stripPrefix("src/main/scala/graft/"))
     assert(copies.isEmpty,
       s"tokenize with expressions.Tokenizer instead: ${copies.mkString(", ")}")
+  }
+
+  test("only ops/Materialize.scala pins or observes") {
+    // every pin goes through Materialize.pin/pinCounted/using, so the
+    // materialize mode reaches every call site
+    assert(holders(".localCheckpoint(") === Set("ops/Materialize.scala"),
+      "pin with .pin() or Materialize.using instead of localCheckpoint")
+    assert(holders("Observation(") === Set("ops/Materialize.scala"),
+      "count a pin with Materialize.pinCounted instead of an Observation")
+  }
+
+  test("only GraftSession.scala unsets a session conf") {
+    assert(holders("conf.unset(") === Set("GraftSession.scala"),
+      "scope session confs with GraftSession.withConfs")
   }
 
   test("only Bench.scala and tools/Profile.scala read the JIT compile clock") {
