@@ -5,8 +5,12 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal, UnaryMinus}
 import graft.expressions.{DotProduct, FtsMatch, HashFeaturize, HashQueryDot, NfcNormalize, SignPack, Tokens}
 
-/** Session extension point — registers the engine's native SQL
-  * functions so `spark.sql("SELECT vec_dot(a, b) ...")` works:
+/** The engine's one session extension point: registers its native
+  * SQL functions, so `spark.sql("SELECT vec_dot(a, b) ...")` works,
+  * and the planner strategy that lowers [[graft.plans.TopKPerKey]]'s
+  * marker node. [[GraftSession.builder]] installs it, so every session
+  * the engine builds, and every `newSession()` of one, carries both;
+  * nothing is registered at call time. Outside the engine's builder:
   *
   * {{{
   * SparkSession.builder().withExtensions(new GraftExtensions)
@@ -15,6 +19,7 @@ import graft.expressions.{DotProduct, FtsMatch, HashFeaturize, HashQueryDot, Nfc
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
+    ext.injectPlannerStrategy(_ => graft.plans.TopKPerKey.TopKStrategy)
     ext.injectFunction((
       new FunctionIdentifier("vec_dot"),
       new ExpressionInfo(classOf[DotProduct].getName, "vec_dot"),

@@ -7,8 +7,9 @@ import org.apache.spark.sql.SparkSession
   * shuffle partitions ≈ cores (not the 200 default),
   * nanos-as-long parquet reads (the events table is TIMESTAMP(NANOS),
   * which Spark's vectorized reader otherwise refuses), AQE on for the
-  * runtime re-planning story at scale, and tmpfs-backed scratch space
-  * when available.
+  * runtime re-planning story at scale, tmpfs-backed scratch space
+  * when available, and the engine's extensions ([[GraftExtensions]]:
+  * its SQL functions and planner strategy).
   */
 object GraftSession {
 
@@ -33,6 +34,7 @@ object GraftSession {
 
   def builder(cores: String): SparkSession.Builder = {
     val b = SparkSession.builder()
+      .withExtensions(new GraftExtensions)
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", cores)
       .config("spark.sql.adaptive.enabled", "true")
@@ -53,6 +55,9 @@ object GraftSession {
         "org.apache.spark.sql.execution.streaming.checkpointing." +
           "FileSystemBasedCheckpointFileManager")
       .config("spark.ui.enabled", "false")
+      // reliable-mode pins (ops/Materialize) that no `release` dropped
+      // lose their checkpoint files once the driver GCs them
+      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
     scratchDir.fold(b)(d => b.config("spark.local.dir", d))
   }
 
@@ -86,10 +91,10 @@ object GraftSession {
     * eviction churn. Unpersisting every still-registered RDD is
     * synchronous and safe between queries (nothing references them
     * across query boundaries); a periodic System.gc() lets the
-    * ContextCleaner reclaim shuffle files and broadcasts too. In
-    * reliable mode the checkpoint files stay in the checkpoint dir:
-    * Spark deletes them only under
-    * `spark.cleaner.referenceTracking.cleanCheckpoints`. */
+    * ContextCleaner reclaim shuffle files and broadcasts too, and, in
+    * reliable mode, the checkpoint files of pins nothing references
+    * any more ([[builder]] sets
+    * `spark.cleaner.referenceTracking.cleanCheckpoints`). */
   def scrub(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values

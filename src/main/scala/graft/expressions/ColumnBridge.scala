@@ -1,16 +1,19 @@
 package graft.expressions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** Column ↔ Expression bridging for the native expressions' Column
-  * APIs. The conversions live in private[sql] helpers in Spark 4
-  * whose static forms are public bytecode, so bind them once here by
-  * reflection rather than shading into the org.apache.spark namespace
-  * — and once only: the Spark-internal class has already moved across
-  * versions, and every expression companion carrying its own copy
-  * turns the next upgrade into a grep hunt. */
-private[expressions] object ColumnBridge {
+/** The one binding of Spark 4's private entry points: the Column ↔
+  * Expression conversions behind the native expressions' Column APIs,
+  * and `Dataset.ofRows`, which wraps a custom logical node (such as
+  * [[graft.plans.TopKPerKey]]'s) as a DataFrame. They live in
+  * private[sql] helpers whose static forms are public bytecode, so
+  * bind them once here by reflection rather than shading into the
+  * org.apache.spark namespace — and once only: the Spark-internal
+  * classes have already moved across versions, and every caller
+  * carrying its own copy turns the next upgrade into a grep hunt. */
+private[graft] object ColumnBridge {
   private val exprUtils =
     Class.forName("org.apache.spark.sql.classic.ExpressionUtils")
   private val toColumn =
@@ -18,9 +21,20 @@ private[expressions] object ColumnBridge {
   private val toExpression =
     exprUtils.getMethod("expression", classOf[Column])
 
+  private val datasetClass =
+    Class.forName("org.apache.spark.sql.classic.Dataset$")
+  private val datasetModule = datasetClass.getField("MODULE$").get(null)
+  private val ofRowsMethod = datasetClass.getMethods
+    .find(m => m.getName == "ofRows" && m.getParameterCount == 2)
+    .get
+
   def column(e: Expression): Column =
     toColumn.invoke(null, e).asInstanceOf[Column]
 
   def expression(c: Column): Expression =
     toExpression.invoke(null, c).asInstanceOf[Expression]
+
+  /** `plan` as a DataFrame of `spark`. */
+  def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    ofRowsMethod.invoke(datasetModule, spark, plan).asInstanceOf[DataFrame]
 }

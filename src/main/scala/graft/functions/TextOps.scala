@@ -101,22 +101,30 @@ object TextOps {
   def hash60(c: Column): Column =
     conv(substring(md5(c), 1, 15), 16, 10).cast("long")
 
-  /** Snippet (P11, `search.py:102-112`): first query term found in the
-    * lowercased content wins; ±`window` chars around it wrapped in
-    * "... {} ..."; fallback = first 2*window chars + "...".
-    * Term scan = left fold keeping the first non-zero `instr`.
+  /** Snippet (P11, `search.py:102-112`): the first query token (in
+    * query order) found in the lowercased content wins; ±`window`
+    * chars around it wrapped in "... {} ..."; fallback = first
+    * 2*window chars + "...". The query is tokenized once, on the
+    * driver, by the engine's one tokenizer, so its terms are
+    * [[tokens]]'s.
+    *
+    * No lambda and no branch holds the hit: every term's `instr` runs
+    * on one `lower(content)`, the hit is the first non-zero of them,
+    * and the window always takes `substring` (from 1 on a miss), so
+    * Spark evaluates `lower(content)` and the hit once per row as
+    * common subexpressions. The trailing 0 types the array when the
+    * query has no tokens.
     */
-  def snippet(content: Column, query: Column, window: Int = 100): Column = {
-    val pos = aggregate(
-      tokens(query), lit(0),
-      (acc, term) => when(acc > 0, acc)
-        .otherwise(coalesce(instr(lower(content), term), lit(0))))
-    val start = greatest(pos - window, lit(1))
-    when(content.isNull, lit(null).cast("string"))
-      .when(pos > 0,
-        concat(lit("... "), substring(content, start, lit(2 * window)),
-          lit(" ...")))
-      .otherwise(concat(substring(content, 1, 2 * window), lit("...")))
+  def snippet(content: Column, query: String, window: Int = 100): Column = {
+    import graft.expressions.Tokenizer
+    val terms = Tokenizer.tokenStrings(
+      org.apache.spark.unsafe.types.UTF8String.fromString(query), Tokenizer.useICU)
+    val lc = lower(content)
+    val hits = terms.distinct.map(instr(lc, _)).toSeq :+ lit(0)
+    val pos = coalesce(get(array_remove(array(hits: _*), 0), lit(0)), lit(0))
+    concat(when(pos > 0, lit("... ")).otherwise(lit("")),
+      substring(content, greatest(pos - window, lit(1)), lit(2 * window)),
+      when(pos > 0, lit(" ...")).otherwise(lit("...")))
   }
 
   // ---------------------------------------------------------------

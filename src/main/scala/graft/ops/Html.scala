@@ -233,8 +233,7 @@ object Html {
       .orderBy(col("id"))
   }
 
-  private val tokSqlDoc =
-    "list_filter(string_split_regex(lower(text), '[^a-z0-9_]+'), x -> x != '')"
+  private val tokSqlDoc = graft.functions.TextOps.tokSql()
 
   val structuredRegistrySql: String =
     s"""WITH ${Corpus.webPagesCte},

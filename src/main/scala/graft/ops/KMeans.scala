@@ -58,19 +58,6 @@ object KMeans {
         transform(col("s"), x => round(x / col("n"), 9)).as("cv"),
         col("n"))
 
-  /** The pre-r15 posexplode formulation of [[update]] — retained as
-    * the parity REFERENCE for VecDecimalSumSpec's bit-equality gate. */
-  private[graft] def updateExplode(assigned: DataFrame): DataFrame =
-    assigned.select(col("cid"), posexplode(col("v"))).toDF("cid", "i", "x")
-      .groupBy(col("cid"), col("i"))
-      .agg(round(sum(col("x").cast("decimal(28,12)")).cast("double")
-        / count(lit(1)), 9).as("m"),
-        count(lit(1)).as("nn"))
-      .groupBy(col("cid"))
-      .agg(transform(array_sort(collect_list(struct(col("i"), col("m")))),
-        s => s.getField("m")).as("cv"),
-        max(col("nn")).as("n"))
-
   /** Fitted model after [[Iters]] iterations: (cid, cv, n). */
   def fit(spark: SparkSession, sfDir: String): DataFrame = {
     val vecs = vectors(spark, sfDir).cache()

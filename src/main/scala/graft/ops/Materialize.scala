@@ -73,12 +73,19 @@ object Materialize {
     try body(pinned) finally release(pinned)
   }
 
-  /** Drop a [[pin]]'s blocks once nothing reads the pinned frame
-    * again. The frame is unusable afterwards: its lineage is
-    * truncated, so the blocks cannot be recomputed. */
+  /** Drop a [[pin]]'s blocks, and in reliable mode its checkpoint
+    * files, once nothing reads the pinned frame again. The frame is
+    * unusable afterwards: its lineage is truncated, so the blocks
+    * cannot be recomputed. */
   def release(pinned: DataFrame): Unit =
     pinned.queryExecution.logical.foreach {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist()
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        r.rdd.unpersist()
+        r.rdd.getCheckpointFile.foreach { f =>
+          val path = new org.apache.hadoop.fs.Path(f)
+          path.getFileSystem(pinned.sparkSession.sparkContext.hadoopConfiguration)
+            .delete(path, true)
+        }
       case _ =>
     }
 }

@@ -700,13 +700,6 @@ object PdfCodec {
     * four outcomes (`file_handler.py:11-49`). */
   final case class Decoded(pages: Seq[String])
 
-  private final class Cursor(val bytes: Array[Byte], var pos: Int) {
-    def text: String = new String(bytes, ISO_8859_1)
-    def skipWs(): Unit =
-      while (pos < bytes.length && (bytes(pos) == ' ' || bytes(pos) == '\n' ||
-        bytes(pos) == '\r' || bytes(pos) == '\t')) pos += 1
-  }
-
   private def fail(msg: String): Nothing =
     throw new IllegalArgumentException(s"pdf parse error: $msg")
 

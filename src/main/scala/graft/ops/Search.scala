@@ -181,14 +181,17 @@ object Search {
     * global window; the total is a partial-agg count; the two meet in
     * a 1-row broadcast cross join. The page and the total each scan
     * the predicate: a one-pass `count(*) over ()` window would move
-    * every match into one task, the shape this note rules out. */
+    * every match into one task, the shape this note rules out.
+    * `stemmed` matches through [[TextOps.ftsMatchStemmed]] instead. */
   def listingPage(spark: SparkSession, sfDir: String, query: String,
       sortBy: String = "last_crawled", asc: Boolean = false,
-      offset: Int = 0, limit: Int = 10): DataFrame = {
+      offset: Int = 0, limit: Int = 10,
+      stemmed: Boolean = false): DataFrame = {
     val wp = Corpus.webPages(spark, sfDir)
     val hay = concat(col("title"), lit(" "), col("domain"), lit(" "),
       col("url"))
-    val filtered = wp.filter(TextOps.ftsMatch(hay, lit(query)) === true)
+    val matches = if (stemmed) TextOps.ftsMatchStemmed _ else TextOps.ftsMatch _
+    val filtered = wp.filter(matches(hay, lit(query)) === true)
     val sortCol = col(resolveSortColumn(sortBy))
     val page = filtered
       .orderBy(if (asc) sortCol.asc else sortCol.desc, col("id"))
@@ -207,12 +210,15 @@ object Search {
     listingPage(spark, sfDir, "widget", sortBy = "last_crawled",
       asc = false, offset = 10, limit = 10)
 
+  /** The oracle's rendering of [[listingPage]]'s haystack. */
+  private val listingHaySql = "title || ' ' || domain || ' ' || url"
+
   val listingSql: String =
     s"""WITH ${Corpus.webPagesCte},
       |filtered AS (
       |  SELECT * FROM web_pages
       |  WHERE len(list_intersect(
-      |    list_filter(string_split_regex(lower(title || ' ' || domain || ' ' || url), '[^a-z0-9_]+'), x -> x != ''),
+      |    ${TextOps.tokSql(listingHaySql)},
       |    ['widget'])) > 0)
       |SELECT (SELECT COUNT(*) FROM filtered) AS total,
       |  id, url, domain, title, CAST(epoch(last_crawled) AS BIGINT) AS crawled_s
@@ -234,23 +240,8 @@ object Search {
     * token with Porter2 and builds no token array),
     * TakeOrderedAndProject page, partial-agg total, 1-row broadcast
     * cross join. Stemming adds zero exchanges. */
-  def listingStemmed(spark: SparkSession, sfDir: String): DataFrame = {
-    val wp = Corpus.webPages(spark, sfDir)
-    val hay = concat(col("title"), lit(" "), col("domain"), lit(" "),
-      col("url"))
-    val query = lit("widgets gearing")
-    val filtered = wp.filter(
-      TextOps.ftsMatchStemmed(hay, query) === true)
-    val page = filtered
-      .orderBy(col("last_crawled").desc, col("id"))
-      .limit(10)
-      .select(col("id"), col("url"), col("domain"), col("title"),
-        unix_timestamp(col("last_crawled")).as("crawled_s"))
-    val total = filtered.agg(count(lit(1)).as("total"))
-    page.crossJoin(broadcast(total))
-      .select(col("total"), col("id"), col("url"), col("domain"),
-        col("title"), col("crawled_s"))
-  }
+  def listingStemmed(spark: SparkSession, sfDir: String): DataFrame =
+    listingPage(spark, sfDir, "widgets gearing", stemmed = true)
 
   val listingStemmedSql: String = {
     val st = TextOps.stemSql("t")
@@ -259,7 +250,7 @@ object Search {
       |  SELECT * FROM web_pages
       |  WHERE len(list_intersect(
       |    list_transform(
-      |      list_filter(string_split_regex(lower(title || ' ' || domain || ' ' || url), '[^a-z0-9_]+'), x -> x != ''),
+      |      ${TextOps.tokSql(listingHaySql)},
       |      t -> $st),
       |    list_transform(['widgets', 'gearing'], t -> $st))) > 0)
       |SELECT (SELECT COUNT(*) FROM filtered) AS total,
@@ -274,8 +265,8 @@ object Search {
     * first hit, top-10 by doc_id. */
   def snippetSearch(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables.documents(spark, sfDir)
-    val query = lit("merge window")
-    docs.filter(TextOps.ftsMatch(col("text"), query) === true)
+    val query = "merge window"
+    docs.filter(TextOps.ftsMatch(col("text"), lit(query)) === true)
       .select(col("doc_id"),
         TextOps.snippet(col("text"), query).as("snippet"))
       .orderBy(col("doc_id"))
@@ -283,7 +274,7 @@ object Search {
   }
 
   val snippetSearchSql: String =
-    """WITH toks AS (SELECT ['merge', 'window'] AS qt)
+    s"""WITH toks AS (SELECT ['merge', 'window'] AS qt)
       |SELECT doc_id,
       |  CASE WHEN pos > 0 THEN '... ' || substr(text, GREATEST(pos - 100, 1), 200) || ' ...'
       |       ELSE substr(text, 1, 200) || '...' END AS snippet
@@ -293,7 +284,7 @@ object Search {
       |         ELSE COALESCE(instr(lower(text), 'window'), 0) END AS pos
       |  FROM documents, toks
       |  WHERE len(list_intersect(
-      |    list_filter(string_split_regex(lower(text), '[^a-z0-9_]+'), x -> x != ''),
+      |    ${TextOps.tokSql()},
       |    qt)) > 0)
       |ORDER BY doc_id
       |LIMIT 10""".stripMargin

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
@@ -149,30 +149,12 @@ object TopKPerKey {
 
   // -- public API -------------------------------------------------
 
-  private val classicDataset =
-    Class.forName("org.apache.spark.sql.classic.Dataset$")
-  private val datasetModule =
-    classicDataset.getField("MODULE$").get(null)
-  private val ofRowsMethod = classicDataset.getMethods
-    .find(m => m.getName == "ofRows" && m.getParameterCount == 2)
-    .get
-
-  /** Install the strategy once per session (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    val cur = spark.experimental.extraStrategies
-    if (!cur.contains(TopKStrategy))
-      spark.experimental.extraStrategies = cur :+ TopKStrategy
-  }
-
   /** Top-k rows per key group, ordered by `orderCol`
-    * (descending by default). */
+    * (descending by default). Plans through [[TopKStrategy]], which
+    * [[graft.GraftExtensions]] installs in every session
+    * [[graft.GraftSession.builder]] builds. */
   def perKey(df: DataFrame, keyCols: Seq[String], orderCol: String,
-      k: Int, desc: Boolean = true): DataFrame = {
-    val spark = df.sparkSession
-    register(spark)
-    val node = TopKPerKeyNode(keyCols, orderCol, k, desc,
-      df.queryExecution.analyzed)
-    ofRowsMethod.invoke(datasetModule, spark, node)
-      .asInstanceOf[DataFrame]
-  }
+      k: Int, desc: Boolean = true): DataFrame =
+    graft.expressions.ColumnBridge.ofRows(df.sparkSession,
+      TopKPerKeyNode(keyCols, orderCol, k, desc, df.queryExecution.analyzed))
 }

@@ -57,7 +57,6 @@ class DotProductSpec extends SparkSpec {
   }
 
   test("vec_dot / vec_negdot register through GraftExtensions for SQL") {
-    installGraftFunctions()
     val out = spark.sql(
       "SELECT vec_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d, " +
         "vec_negdot(array(1.0D, 0.0D), array(1.0D, 0.0D)) AS nd")

@@ -113,7 +113,6 @@ class HashFeaturizeSpec extends SparkSpec {
   }
 
   test("vec_featurize registers through GraftExtensions for SQL") {
-    installGraftFunctions()
     val out = spark.sql(
       "SELECT size(vec_featurize('hello world')) AS d64, " +
         "size(vec_featurize('hello world', 16)) AS d16")
@@ -123,7 +122,6 @@ class HashFeaturizeSpec extends SparkSpec {
   }
 
   test("vec_query_dot registers through GraftExtensions for SQL") {
-    installGraftFunctions()
     Seq(Some("Fast merge window"), Some("red widget"), None).toDF("t")
       .repartition(2).createOrReplaceTempView("query_dot_probe")
     val rows = spark.sql(

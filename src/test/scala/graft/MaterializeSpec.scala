@@ -113,6 +113,23 @@ class MaterializeSpec extends SparkSpec {
     assert((registered -- before).isEmpty, "a throwing body kept the blocks")
   }
 
+  test("a reliable using leaves no checkpoint files behind") {
+    reliably { dir =>
+      def rddDirs: Int = {
+        def walk(f: java.io.File): Seq[java.io.File] =
+          f +: Option(f.listFiles()).toSeq.flatten.filter(_.isDirectory).flatMap(walk)
+        walk(new java.io.File(dir)).count(_.getName.startsWith("rdd-"))
+      }
+      val before = rddDirs
+      val rows = Materialize.using(sample) { pinned =>
+        assert(rddDirs === before + 1, "the body runs on a reliable checkpoint")
+        pinned.count()
+      }
+      assert(rows === sample.count())
+      assert(rddDirs === before, "using kept the checkpoint files")
+    }
+  }
+
   test("an unknown mode fails fast, naming the conf") {
     spark.conf.set(Materialize.ModeKey, "Reliable")
     try {

@@ -8,7 +8,6 @@ import org.apache.spark.sql.functions._
 class SqlApiSpec extends SparkSpec {
 
   test("semantic search expressed entirely in SQL matches the DataFrame API") {
-    installGraftFunctions()
     Corpus.webPagesWithEmbeddings(spark, sfDir)
       .createOrReplaceTempView("wp_emb")
     val viaSql = spark.sql(
@@ -25,7 +24,6 @@ class SqlApiSpec extends SparkSpec {
   }
 
   test("vec_signpack in pure SQL matches the Column API") {
-    installGraftFunctions()
     Tables.documents(spark, sfDir).createOrReplaceTempView("docs_sp")
     val viaSql = spark.sql(
       """SELECT doc_id,
@@ -41,7 +39,6 @@ class SqlApiSpec extends SparkSpec {
   }
 
   test("featurize + score pipeline in pure SQL") {
-    installGraftFunctions()
     Tables.documents(spark, sfDir).createOrReplaceTempView("docs")
     val rows = spark.sql(
       """SELECT doc_id,

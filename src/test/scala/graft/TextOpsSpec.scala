@@ -23,12 +23,12 @@ class TextOpsSpec extends SparkSpec {
 
   test("snippet: window around first hit, fallback head (search.py:102-112)") {
     val text = ("x" * 150) + "needle" + ("y" * 150)
-    val hit = Seq((text, "needle")).toDF("c", "q")
-      .select(TextOps.snippet($"c", $"q")).as[String].head()
+    val hit = Seq(text).toDF("c")
+      .select(TextOps.snippet($"c", "needle")).as[String].head()
     assert(hit.startsWith("... ") && hit.endsWith(" ...") &&
       hit.contains("needle"))
-    val miss = Seq((text, "absent")).toDF("c", "q")
-      .select(TextOps.snippet($"c", $"q")).as[String].head()
+    val miss = Seq(text).toDF("c")
+      .select(TextOps.snippet($"c", "absent")).as[String].head()
     assert(miss === text.take(200) + "...")
   }
 

@@ -144,7 +144,6 @@ class TokenizeSpec extends SparkSpec {
   }
 
   test("text_tokens, fts_match and fts_match_stemmed register for SQL") {
-    installGraftFunctions()
     frame.createOrReplaceTempView("tokenize_probe")
     val viaSql = spark.sql(
       """SELECT t, text_tokens(t) AS toks,

@@ -5,16 +5,22 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The dev mains stay few and documented: every main the docs tell a
   * reader to run exists, the oracle dump has one writer, JIT timing
   * lives only in the bench child and the one profiler, no kernel
-  * boxes a primitive array result, there is one tokenizer, and one
+  * boxes a primitive array result, there is one tokenizer, one
   * place each pins (ops/Materialize) and scopes session confs
-  * (GraftSession.withConfs). */
+  * (GraftSession.withConfs), one binding of Spark's private entry
+  * points (expressions/ColumnBridge), and extensions enter only
+  * through the session (GraftExtensions). */
 class ToolsSpec extends AnyFunSuite {
 
-  private def sources: Seq[java.io.File] = {
+  private def scalaFiles(root: String): Seq[java.io.File] = {
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk)
       else Seq(f)
-    val files = walk(new java.io.File("src/main/scala")).filter(_.getName.endsWith(".scala"))
+    walk(new java.io.File(root)).filter(_.getName.endsWith(".scala"))
+  }
+
+  private def sources: Seq[java.io.File] = {
+    val files = scalaFiles("src/main/scala")
     assert(files.exists(_.getName == "Verify.scala"), "src/main sources not found")
     files
   }
@@ -78,5 +84,19 @@ class ToolsSpec extends AnyFunSuite {
   test("only Bench.scala and tools/Profile.scala read the JIT compile clock") {
     assert(holders("getCompilationMXBean") === Set("Bench.scala", "tools/Profile.scala"),
       "time queries with graft.tools.Profile instead of another probe")
+  }
+
+  test("extensions enter through GraftExtensions, not at call time") {
+    assert(holders("extraStrategies").isEmpty,
+      "inject planner strategies with GraftExtensions")
+    assert(holders("Class.forName(") === Set("expressions/ColumnBridge.scala"),
+      "bind Spark's private entry points in expressions/ColumnBridge")
+    // split so that this file does not hold the name it looks for
+    val installer = "install" + "GraftFunctions"
+    val tests = scalaFiles("src/test/scala")
+    assert(tests.exists(_.getName == "SparkSpec.scala"), "src/test sources not found")
+    val hacks = (sources ++ tests).filter(f => read(f).contains(installer))
+    assert(hacks.isEmpty, "the session from GraftSession.builder has the " +
+      s"functions already: ${hacks.mkString(", ")}")
   }
 }

@@ -39,7 +39,6 @@ class UnicodeSpec extends SparkSpec {
   }
 
   test("nfc_normalize as an injected SQL function matches the Column API") {
-    installGraftFunctions()
     Seq(nfd, nfc, "plain").toDF("s").createOrReplaceTempView("nfc_probe")
     val viaSql = spark.sql(
       "SELECT nfc_normalize(s) FROM nfc_probe").as[String].collect().toSeq
