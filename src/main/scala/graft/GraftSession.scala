@@ -90,15 +90,16 @@ object GraftSession {
     * 134-query × 2-rep run that lag accumulates into storage-memory
     * eviction churn. Unpersisting every still-registered RDD is
     * synchronous and safe between queries (nothing references them
-    * across query boundaries); a periodic System.gc() lets the
-    * ContextCleaner reclaim shuffle files and broadcasts too, and, in
-    * reliable mode, the checkpoint files of pins nothing references
-    * any more ([[builder]] sets
+    * across query boundaries), and `ColumnBridge.unpersist` drops a
+    * local pin without Spark's truncated-lineage warning; a periodic
+    * System.gc() lets the ContextCleaner reclaim shuffle files and
+    * broadcasts too, and, in reliable mode, the checkpoint files of
+    * pins nothing references any more ([[builder]] sets
     * `spark.cleaner.referenceTracking.cleanCheckpoints`). */
   def scrub(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = false))
+      .foreach(graft.expressions.ColumnBridge.unpersist)
     scrubCount += 1
     if (scrubCount % 8 == 0) System.gc()
   }

@@ -65,10 +65,8 @@ object Bpe {
       val top = pairs.orderBy(col("n").desc, col("a"), col("b")).limit(1)
         .collect().head
       val (a, b, n) = (top.getString(0), top.getString(1), top.getLong(2))
-      words = words
-        .withColumn("seg",
-          replace(col("seg"), lit(s" $a $b "), lit(s" $a$b ")))
-        .pin()
+      words = Materialize.advance(words, words.withColumn("seg",
+        replace(col("seg"), lit(s" $a $b "), lit(s" $a$b "))))
       val tokensAfter = words
         .select(sum(col("freq") * size(split(trim(col("seg")), " "))).as("t"))
         .collect().head.getLong(0)
@@ -167,7 +165,7 @@ object Bpe {
           case (c, i) =>
             sum(col("freq") * size(split(trim(c), " "))).as(s"t$i")
         }.toSeq: _*).collect().head
-        words = words.withColumn("seg", segAfter.last).pin()
+        words = Materialize.advance(words, words.withColumn("seg", segAfter.last))
         merges ++= accepted.zipWithIndex.map { case ((a, b, n), i) =>
           (a, b, n, statsRow.getLong(i))
         }

@@ -25,27 +25,20 @@ object Components {
 
   val Rounds = 6
 
-  /** Pair sets below this row count are pinned to one partition: the
-    * downstream loop then runs single-task with no exchange — the same
-    * fixed-cost cut the label loop uses. At or above it the incoming
-    * partitioning is kept: a 100 TB corpus realistically yields
-    * billions of near-dup pairs, and a single-partition pin there is a
-    * one-task bottleneck and a single-node memory hazard. */
-  val SmallPairs = 1000000L
-
   /** Size-conditional pin: coalesce(1) ONLY when the pair set is
-    * small; otherwise keep the shuffle partitioning. The row count
-    * that picks the branch rides the SAME job that materializes the
-    * checkpoint (an `observe` CollectMetrics node — codegen-safe
-    * pass-through), so the pin decision costs zero extra passes over
-    * the suite's hottest shared subtree (feeds q53/q145/q147). The
-    * large branch returns the first checkpoint as-is (no re-pass);
-    * only the small branch pays a second (metadata-scale, cached-
-    * block-read) checkpoint to land on one partition. Exposed for the
-    * plan spec. */
+    * small ([[Materialize.Sizing]]), so the downstream loop runs
+    * single-task with no exchange; otherwise keep the shuffle
+    * partitioning. The row count that picks the branch rides the SAME
+    * job that materializes the checkpoint (an `observe` CollectMetrics
+    * node — codegen-safe pass-through), so the pin decision costs zero
+    * extra passes over the suite's hottest shared subtree (feeds
+    * q53/q145/q147). The large branch returns the first checkpoint
+    * as-is (no re-pass); only the small branch pays a second
+    * (metadata-scale, cached-block-read) checkpoint to land on one
+    * partition, and releases the first. Exposed for the plan spec. */
   private[graft] def pinPairs(pairs: DataFrame): DataFrame = {
-    val (ck, n) = Materialize.pinCounted(pairs)
-    if (n < SmallPairs) ck.coalesce(1).pin() else ck
+    val (ck, sizing) = Materialize.pinSized(pairs)
+    sizing.compact(ck)
   }
 
   /** Canonical (a < b) near-dup pairs, materialized once — shared by
@@ -103,24 +96,19 @@ object Components {
     // huge one keeps the shuffle path. As in [[pinPairs]], the row
     // count rides the checkpoint job via an observe metric — no
     // separate count() action.
-    val (labels0, nLabels) = Materialize.pinCounted(
+    val (labels0, sizing) = Materialize.pinSized(
       es.select(col("src").as("node")).distinct()
         .withColumn("lbl", col("node")))
     var labels = labels0
-    val small = nLabels < 1000000L
-    def pin(df: DataFrame): DataFrame =
-      (if (small) df.coalesce(1) else df).pin()
-    def maybeBroadcast(df: DataFrame): DataFrame =
-      if (small) broadcast(df) else df
     var converged = false
     var round = 0
     while (round < rounds && !converged) {
       val t0 = System.nanoTime()
-      val neighborMin = es.join(maybeBroadcast(labels),
+      val neighborMin = es.join(sizing.side(labels),
           col("dst") === col("node"))
         .groupBy(col("src")).agg(min(col("lbl")).as("nlbl"))
-      val next = pin(labels
-        .join(maybeBroadcast(neighborMin), col("node") === col("src"), "left")
+      val next = sizing.advance(labels, labels
+        .join(sizing.side(neighborMin), col("node") === col("src"), "left")
         .select(col("node"), col("lbl").as("old_lbl"),
           least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl")))
       converged = next.filter(col("lbl") < col("old_lbl")).isEmpty
@@ -239,6 +227,7 @@ object Components {
       // that rare case harmless)
       converged = round > 0 && nNext == nEs &&
         next.unionByName(es).distinct().count() == nEs
+      Materialize.release(es) // the probe has read both rounds
       es = next
       nEs = nNext
       round += 1
@@ -267,10 +256,10 @@ object Components {
     * union. */
   private[graft] def starLabels(
       spark: SparkSession, sfDir: String): DataFrame = {
+    val pairs = pairTable(spark, sfDir)
     val es = starLoop(
-      pairTable(spark, sfDir)
-        .select(col("a_id").as("a"), col("b_id").as("b")),
-      StarRounds)
+      pairs.select(col("a_id").as("a"), col("b_id").as("b")), StarRounds)
+    Materialize.release(pairs) // the loop's first round pinned its own copy
     es.select(col("a").as("node"), col("b").as("lbl"))
       .unionByName(es.select(col("b").as("node"), col("b").as("lbl")))
       .distinct()

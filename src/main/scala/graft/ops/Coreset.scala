@@ -80,12 +80,14 @@ object Coreset {
       trace += ((step.toLong, nxt.getLong(0), Some(nxt.getDouble(3))))
       val c = Seq((nxt.getSeq[Double](1), nxt.getDouble(2)))
         .toDF("cv", "cc")
-      state = state.crossJoin(broadcast(c))
+      state = Materialize.advance(state, state.crossJoin(broadcast(c))
         .select(col("vec_id"), col("v"), col("xx"),
           least(col("dmin"),
-            d2(col("xx"), col("v"), col("cv"), col("cc"))).as("dmin"))
-        .pin()
+            d2(col("xx"), col("v"), col("cv"), col("cc"))).as("dmin")))
     }
+    // the trace is collected: the answer reads no pin
+    Materialize.release(state)
+    Materialize.release(vecs)
     trace.result()
       .toDF("step", "vec_id", "d")
       .select(col("step"), col("vec_id"),

@@ -13,9 +13,10 @@ import org.apache.spark.sql.functions._
   * groupBy dst — the shuffle pattern of the components loop —
   * pin per iteration to cut lineage. The rank/outdeg
   * sides are broadcast and the per-iteration checkpoints collapse to
-  * one partition when the measured node count is small (the node
-  * count is already an up-front action); a billion-node graph takes
-  * the shuffle-join path with full parallelism. Two mass semantics:
+  * one partition when the measured node count is small
+  * ([[Materialize.Sizing]]; the node count rides the node pin's job);
+  * a billion-node graph takes the shuffle-join path with full
+  * parallelism. Two mass semantics:
   *
   *   - [[pageRank]] DROPS dangling-node mass (documented
   *     simplification; ranks do not sum to 1),
@@ -32,11 +33,6 @@ object Graph {
 
   val Damping = 0.85
   val Iters = 3
-
-  /** Graphs smaller than this many nodes run the loop with broadcast
-    * rank joins and 1-partition checkpoints (pure fixed-cost cut);
-    * larger graphs shuffle with full parallelism. */
-  val SmallGraphNodes = 1000000L
 
   private def edges(spark: SparkSession, sfDir: String): DataFrame =
     Tables.lineitem(spark, sfDir)
@@ -63,7 +59,7 @@ object Graph {
       redistributeDangling: Boolean): DataFrame = {
     val es = edgeList.cache()
     try {
-      val (nodes, nNodes) = Materialize.pinCounted(
+      val (nodes, sizing) = Materialize.pinSized(
         es.select(col("src").as("node"))
           .unionByName(es.select(col("dst").as("node"))).distinct())
       val outdeg = es.groupBy(col("src"))
@@ -72,27 +68,19 @@ object Graph {
       // one count up front (the loop materializes checkpoints anyway —
       // this is an iterative job, not a lazy plan), shared by every
       // iteration instead of a per-iteration 1-row cross join
-      val n = nNodes.toDouble
-      val small = n < SmallGraphNodes
-      // small graph → rank vector is broadcast-sized and one partition
-      // holds it; 3 rounds × 32 shuffle partitions on 2000 nodes was
-      // pure scheduling overhead
-      def pin(df: DataFrame): DataFrame =
-        (if (small) df.coalesce(1) else df).pin()
-      def maybeBroadcast(df: DataFrame): DataFrame =
-        if (small) broadcast(df) else df
-      var ranks = pin(nodes
+      val n = sizing.rows.toDouble
+      var ranks = sizing.pin(nodes
         .select(col("node"), round(lit(1.0) / lit(n), 12).as("rank")))
       for (_ <- 1 to Iters) {
         val contribs = es
-          .join(maybeBroadcast(ranks), col("src") === col("node"))
-          .join(maybeBroadcast(outdeg), Seq("src"))
+          .join(sizing.side(ranks), col("src") === col("node"))
+          .join(sizing.side(outdeg), Seq("src"))
           .select(col("dst"), round(col("rank") / col("deg"), 12).as("c"))
         val inbound = contribs.groupBy(col("dst")).agg(
           round(sum(col("c").cast("decimal(28,14)")).cast("double"), 12)
             .as("insum"))
         val base = nodes
-          .join(maybeBroadcast(inbound), col("node") === col("dst"), "left")
+          .join(sizing.side(inbound), col("node") === col("dst"), "left")
         val (withDm, mass) =
           if (!redistributeDangling)
             (base, coalesce(col("insum"), lit(0.0)))
@@ -108,11 +96,14 @@ object Graph {
               coalesce(col("insum"), lit(0.0)) +
                 coalesce(col("dm"), lit(0.0)) / lit(n))
           }
-        ranks = pin(withDm
+        ranks = sizing.advance(ranks, withDm
           .select(col("node"),
             round(lit(1.0 - Damping) / lit(n) + lit(Damping) * mass, 12)
               .as("rank")))
       }
+      // the answer reads the last ranks only
+      Materialize.release(nodes)
+      Materialize.release(outdeg)
       ranks.orderBy(col("rank").desc, col("node")).limit(10)
         .select(col("node"), round(col("rank"), 9).as("rank"))
     } finally es.unpersist()
@@ -306,34 +297,33 @@ object Graph {
   private[graft] def hitsOver(edgeList: DataFrame): DataFrame = {
     val es = edgeList.cache()
     try {
-      val (nodes, nNodes) = Materialize.pinCounted(
+      val (nodes, sizing) = Materialize.pinSized(
         es.select(col("src").as("node"))
           .unionByName(es.select(col("dst").as("node"))).distinct())
-      val n = nNodes.toDouble
-      val small = n < SmallGraphNodes
-      def pin(df: DataFrame): DataFrame =
-        (if (small) df.coalesce(1) else df).pin()
-      def mb(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-      def normalized(raw: DataFrame, key: String, out: String): DataFrame = {
+      // the round after `prev`: `raw` scaled to sum 1
+      def normalized(prev: DataFrame, raw: DataFrame, key: String,
+          out: String): DataFrame = {
         val total = raw.agg(
           sum(col("raw").cast("decimal(28,14)")).cast("double").as("t"))
-        pin(raw.crossJoin(broadcast(total))
+        sizing.advance(prev, raw.crossJoin(broadcast(total))
           .select(col(key).as("node"),
             round(col("raw") / col("t"), 12).as(out)))
       }
-      var hubs = pin(nodes.select(col("node"), lit(1.0).as("hub")))
-      var auths: DataFrame = null
+      var hubs = sizing.pin(nodes.select(col("node"), lit(1.0).as("hub")))
+      // the node pin stands in for round 0's authorities: nothing
+      // reads it after the first hubs, and round 1 releases it
+      var auths = nodes
       for (_ <- 1 to HitsIters) {
-        val rawAuth = es.join(mb(hubs), col("src") === col("node"))
+        val rawAuth = es.join(sizing.side(hubs), col("src") === col("node"))
           .groupBy(col("dst"))
           .agg(round(sum(col("hub").cast("decimal(28,14)")).cast("double"), 12)
             .as("raw"))
-        auths = normalized(rawAuth, "dst", "auth")
-        val rawHub = es.join(mb(auths), col("dst") === col("node"))
+        auths = normalized(auths, rawAuth, "dst", "auth")
+        val rawHub = es.join(sizing.side(auths), col("dst") === col("node"))
           .groupBy(col("src"))
           .agg(round(sum(col("auth").cast("decimal(28,14)")).cast("double"), 12)
             .as("raw"))
-        hubs = normalized(rawHub, "src", "hub")
+        hubs = normalized(hubs, rawHub, "src", "hub")
       }
       auths.join(hubs, Seq("node"), "full_outer")
         .select(col("node"),

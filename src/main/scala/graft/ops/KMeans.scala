@@ -64,8 +64,8 @@ object KMeans {
     var centroids = vecs.filter(col("vec_id") < K)
       .select(col("vec_id").cast("int").as("cid"), col("v").as("cv"))
     for (_ <- 1 to Iters)
-      centroids = update(assign(vecs, centroids))
-        .select(col("cid"), col("cv"), col("n")).pin()
+      centroids = Materialize.advance(centroids, update(assign(vecs, centroids))
+        .select(col("cid"), col("cv"), col("n")))
     centroids
   }
 
@@ -294,19 +294,17 @@ object KMeans {
     } else vecs.filter(col("vec_id") < k)
       .select(col("vec_id").cast("int").as("cid"),
         col("v").as("cv"), col("xx").as("cc")))
-    for (i <- 1 to DocIters) {
-      // barrier between assign and re-center: updateDoc's posexplode
-      // sits in the same codegen pipeline as the assignment project,
-      // and GenerateExec re-evaluates deferred child expressions PER
-      // exploded element — 1024× the K·d argmin per vector (measured
-      // 2.4× the whole stage at sf0.01). The narrow (cid, v) pin fixes
-      // the cid once per vector; it and the superseded centroids are
-      // released once the new centroids are pinned.
-      val prev = cents
+    // barrier between assign and re-center: updateDoc's posexplode
+    // sits in the same codegen pipeline as the assignment project,
+    // and GenerateExec re-evaluates deferred child expressions PER
+    // exploded element — 1024× the K·d argmin per vector (measured
+    // 2.4× the whole stage at sf0.01). The narrow (cid, v) pin fixes
+    // the cid once per vector; it and the superseded centroids are
+    // released once the new centroids are pinned.
+    for (_ <- 1 to DocIters)
       cents = Materialize.using(assignDoc(vecs, cents)
-        .select(col("cid"), col("v")))(assigned => updateDoc(assigned).pin())
-      if (i > 1) Materialize.release(prev) // the seeds may read vecs lazily
-    }
+        .select(col("cid"), col("v")))(
+        assigned => Materialize.advance(cents, updateDoc(assigned)))
     cents
   }
 
@@ -406,18 +404,20 @@ object KMeans {
     val l1 = fitVecsK(sample, b1, spreadSeeds = true)
       .select(col("cid"), col("cv"), col("cc"))
     // one full routing pass (n·B1·d), pinned: feeds seeding, every
-    // Lloyd pass, and the next level's routing
-    var coarse = assignDoc(vecs, l1)
+    // Lloyd pass, and the next level's routing. It supersedes the
+    // sample and the level-1 centroids, and each level's routing
+    // supersedes the last level's and its centroids.
+    var coarse = Materialize.advance(sample, assignDoc(vecs, l1)
       .select(col("vec_id"), col("cid").cast("long").as("g"),
-        col("v"), col("xx"))
-      .pin()
+        col("v"), col("xx")))
+    Materialize.release(l1)
     var cents: DataFrame = null
     for (l <- 1 until levels - 1) {
       cents = refineLevel(coarse, bs(l), span)
-      coarse = assignWithinGroups(coarse, cents)
+      coarse = Materialize.advance(coarse, assignWithinGroups(coarse, cents)
         .select(col("vec_id"), (col("g") * bs(l) + col("c")).as("g"),
-          col("v"), col("xx"))
-        .pin()
+          col("v"), col("xx")))
+      Materialize.release(cents)
     }
     val bLast = bs(levels - 1)
     cents = refineLevel(coarse, bLast, span)
@@ -483,13 +483,10 @@ object KMeans {
       .join(broadcast(seedIds), Seq("vec_id")) // ≈K rows — bounded
       .select(col("g"), col("c"), col("v").as("cv"), col("xx").as("cc"))
       .pin()
-    for (_ <- 1 to DocIters) {
-      val prev = cents
+    for (_ <- 1 to DocIters)
       cents = Materialize.using(assignWithinGroups(coarse, cents)
         .select(col("g"), col("c"), col("v")))(
-        assigned => updateDocBy(assigned, Seq("g", "c")).pin())
-      Materialize.release(prev)
-    }
+        assigned => Materialize.advance(cents, updateDocBy(assigned, Seq("g", "c"))))
     cents
   }
 
@@ -699,7 +696,9 @@ object KMeans {
   /** q235: tree-fit cluster summary — count, vec_id checksum, and
     * first centroid component per leaf, leaves ordered. */
   def treeSummary(spark: SparkSession, sfDir: String): DataFrame = {
-    val (model, assigned) = fitVecsTree(docVectors(spark, sfDir), DocK)
+    val vecs = docVectors(spark, sfDir)
+    val (model, assigned) = fitVecsTree(vecs, DocK)
+    Materialize.release(vecs) // the answer reads the leaf level only
     val agg = assigned.groupBy(col("cid"))
       .agg(count(lit(1)).as("n"), sum(col("vec_id")).as("id_sum"))
     // `+ 0.0` pins the zero sign across engines (the q234 lesson): a

@@ -105,8 +105,8 @@ object Ledger {
     val t = java.sql.Timestamp.valueOf("2025-06-01 00:00:00")
     val jobs = Corpus.jobs(spark, sfDir)
     val afterRequest =
-      Ingest.requestStop(jobs, col("param_domain") === "d3.test", t)
-    val done = Ingest.completeStops(afterRequest, t)
+      Ingest.transition(jobs, col("param_domain") === "d3.test", "stopping", t)
+    val done = Ingest.transition(afterRequest, lit(true), "stopped", t)
     done
       .groupBy(col("status"))
       .agg(count(lit(1)).as("n"),

@@ -1,7 +1,10 @@
 package graft.ops
 
+import graft.expressions.ColumnBridge
 import org.apache.spark.sql.{DataFrame, Dataset, Observation}
-import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions.{broadcast, count, lit}
 
 /** The engine's one materialization boundary: every mid-pipeline
   * relation that is pinned (fit loops, staged audit chains, shared
@@ -16,6 +19,14 @@ import org.apache.spark.sql.functions.{count, lit}
   * - [[using]] pins, runs a body on the pinned frame, and releases
   *   the blocks afterwards, also when the body throws.
   * - [[release]] drops a pin's blocks once nothing reads it again.
+  * - [[advance]] moves an iterative loop (Lloyd k-means, PQ,
+  *   k-center, PageRank, HITS, connected components, BPE) to its next
+  *   round: it pins the new round's state, then releases the round it
+  *   supersedes, so no superseded round waits for a driver GC.
+  * - [[pinSized]] pins and counts a loop's state and returns the
+  *   loop's [[Sizing]]: under [[SmallRows]] rows, the one
+  *   small-relation constant, the loop pins its rounds on one
+  *   partition and broadcasts the relations it joins.
   *
   * The mode decides HOW a relation is pinned. `local` (the default)
   * is `localCheckpoint`: blocks on the executors with no replication,
@@ -73,19 +84,77 @@ object Materialize {
     try body(pinned) finally release(pinned)
   }
 
+  /** Pin `next`, the state of a loop's new round, and only then
+    * [[release]] `prev`, the round it supersedes. `next` may read
+    * `prev` lazily: its pin has run before `prev` goes. */
+  def advance(prev: DataFrame, next: DataFrame): DataFrame = {
+    val pinned = pin(next)
+    release(prev)
+    pinned
+  }
+
+  /** Row count under which a loop's round state is small: one
+    * partition holds it, and a broadcast join is cheaper than a
+    * shuffle. 3 rounds × 32 shuffle partitions on a 2,000-node graph
+    * were pure scheduling overhead. At or above it a loop keeps the
+    * incoming partitioning: a 100 TB corpus yields billions of
+    * near-dup pairs, and one partition there is a one-task bottleneck
+    * and a single-node memory hazard. */
+  val SmallRows = 1000000L
+
+  /** [[pinCounted]], with the [[Sizing]] the count selects. */
+  def pinSized(df: DataFrame): (DataFrame, Sizing) = {
+    val (pinned, n) = pinCounted(df)
+    (pinned, Sizing(n))
+  }
+
+  /** The small-relation rule of one loop, fixed by a measured row
+    * count: below [[SmallRows]] the loop's rounds are pinned on one
+    * partition and broadcast where the loop joins them; otherwise
+    * they keep their partitioning and join by shuffle. */
+  final case class Sizing(rows: Long) {
+    val small: Boolean = rows < SmallRows
+
+    private def placed(df: DataFrame): DataFrame =
+      if (small) df.coalesce(1) else df
+
+    /** Pin a round's state, on one partition when small. */
+    def pin(df: DataFrame): DataFrame = Materialize.pin(placed(df))
+
+    /** [[Materialize.advance]], on one partition when small. */
+    def advance(prev: DataFrame, next: DataFrame): DataFrame =
+      Materialize.advance(prev, placed(next))
+
+    /** A relation the loop joins: broadcast when small. */
+    def side(df: DataFrame): DataFrame = if (small) broadcast(df) else df
+
+    /** The counted pin on this sizing's partitions: a small one is
+      * re-pinned to one partition and its first copy released, a
+      * large one is kept as it is, with no second pass. */
+    def compact(pinned: DataFrame): DataFrame =
+      if (small) advance(pinned, pinned) else pinned
+  }
+
   /** Drop a [[pin]]'s blocks, and in reliable mode its checkpoint
-    * files, once nothing reads the pinned frame again. The frame is
-    * unusable afterwards: its lineage is truncated, so the blocks
-    * cannot be recomputed. */
-  def release(pinned: DataFrame): Unit =
-    pinned.queryExecution.logical.foreach {
-      case r: org.apache.spark.sql.execution.LogicalRDD =>
-        r.rdd.unpersist()
-        r.rdd.getCheckpointFile.foreach { f =>
-          val path = new org.apache.hadoop.fs.Path(f)
-          path.getFileSystem(pinned.sparkSession.sparkContext.hadoopConfiguration)
-            .delete(path, true)
-        }
-      case _ =>
+    * files, once nothing reads the pinned frame again. Only a frame
+    * that is itself a pin (column projections over one pinned leaf)
+    * is released; one that filters or joins a pin only reads it, and
+    * the pin stays. A released frame is unusable afterwards: its
+    * lineage is truncated, so the blocks cannot be recomputed. */
+  def release(df: DataFrame): Unit =
+    pinnedLeaf(df.queryExecution.logical).foreach { r =>
+      ColumnBridge.unpersist(r.rdd)
+      r.rdd.getCheckpointFile.foreach { f =>
+        val path = new org.apache.hadoop.fs.Path(f)
+        path.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+          .delete(path, true)
+      }
     }
+
+  @annotation.tailrec
+  private def pinnedLeaf(plan: LogicalPlan): Option[LogicalRDD] = plan match {
+    case Project(_, child) => pinnedLeaf(child)
+    case r: LogicalRDD => Some(r)
+    case _ => None
+  }
 }

@@ -111,7 +111,7 @@ object PQ {
       .select(col("m"), col("vec_id").cast("int").as("cid"),
         col("sv").as("cv"), col("xx").as("cc"))
     for (_ <- 1 to LloydIters)
-      cents = recenter(assign(sub, cents)).pin()
+      cents = Materialize.advance(cents, recenter(assign(sub, cents)))
     val codes = assign(sub, cents).select(col("vec_id"), col("m"), col("cid"))
     val qsub = sub.filter(col("vec_id") === 0)
       .select(col("m"), col("sv").as("qv"), col("xx").as("qxx"))

@@ -66,12 +66,13 @@ object Search {
       s"qv AS (SELECT v[1:${Embeddings.RefDims}] AS q_emb FROM qfeat)"
 
   /** Semantic search (E2) at reference dimensionality: featurize the
-    * query string, score the 1024-d corpus embeddings
-    * ([[Corpus.webPagesWithEmbeddings]]) with the reference's
-    * negative-inner-product distance (quirk Q2), range-filter at
-    * 0.05, top-5 ascending. The corpus side is one codegen'd scan that
-    * scores each page's content with the fused kernel, with a
-    * per-partition top-k heap; no corpus shuffle ([[nearest]]).
+    * query string and score each page's content ([[Corpus.webPages]])
+    * against it with the reference's negative-inner-product distance
+    * (quirk Q2), range-filter at 0.05, top-5 ascending. No stored
+    * vector is read: the fused kernel hashes the content and scores
+    * it in one codegen'd scan, bit-identical to the dot over the
+    * page's 1024-d embedding that the oracle computes, with a
+    * per-partition top-k heap and no corpus shuffle ([[nearest]]).
     */
   def semanticSearch(spark: SparkSession, sfDir: String): DataFrame =
     nearest(Corpus.webPages(spark, sfDir), col("content"),

@@ -69,7 +69,7 @@ object Segment {
     * extra exchanges + materializations the distributed shape pays.
     * Above it the one-task sort is the bottleneck (and a single-node
     * memory hazard), so [[distributedNtile]] takes over — the same
-    * size-conditional discipline as [[Components.SmallPairs]], keyed
+    * size-conditional discipline as [[Materialize.SmallRows]], keyed
     * on the optimizer's size estimate so the bench-scale plan stays
     * byte-identical to the pre-r16 one. */
   val SmallNtileBytes: Long = 1L << 30

@@ -82,41 +82,23 @@ object Ingest {
     "failed"    -> Set.empty,
     "stopped"   -> Set.empty)
 
-  /** Job-ledger state transition (Q3): rows matching `jobId` move to
+  /** Job-ledger state transition (Q3): rows matching `pred` move to
     * `to` only when the machine allows it (an invalid request is a
     * silent no-op — the semantics of the reference's stop endpoint,
-    * which the frontend calls but the backend never validates). */
-  def transition(ledger: DataFrame, jobId: String, to: String,
-      at: java.sql.Timestamp): DataFrame = {
+    * which the frontend calls but the backend never validates). A stop
+    * request (POST /stop-crawler) is `to = "stopping"`, which moves
+    * only running jobs; the worker acknowledging it is `to =
+    * "stopped"`, which moves only stopping ones. */
+  def transition(ledger: DataFrame, pred: org.apache.spark.sql.Column,
+      to: String, at: java.sql.Timestamp): DataFrame = {
     val fromStates = ValidTransitions.collect {
       case (from, tos) if tos(to) => from
     }.toSeq
-    val hit = col("id") === jobId && col("status").isin(fromStates.map(lit): _*)
+    val hit = pred && col("status").isin(fromStates.map(lit): _*)
     ledger.withColumn("updated_at",
         when(hit, lit(at)).otherwise(col("updated_at")))
       .withColumn("status",
         when(hit, lit(to)).otherwise(col("status")))
-  }
-
-  /** Stop request (POST /stop-crawler): every running job matching
-    * `pred` moves to `stopping`. */
-  def requestStop(ledger: DataFrame, pred: org.apache.spark.sql.Column,
-      at: java.sql.Timestamp): DataFrame = {
-    val hit = pred && col("status") === "running"
-    ledger.withColumn("updated_at",
-        when(hit, lit(at)).otherwise(col("updated_at")))
-      .withColumn("status",
-        when(hit, lit("stopping")).otherwise(col("status")))
-  }
-
-  /** Stop completion (the worker acknowledging): stopping → stopped. */
-  def completeStops(ledger: DataFrame,
-      at: java.sql.Timestamp): DataFrame = {
-    val hit = col("status") === "stopping"
-    ledger.withColumn("updated_at",
-        when(hit, lit(at)).otherwise(col("updated_at")))
-      .withColumn("status",
-        when(hit, lit("stopped")).otherwise(col("status")))
   }
 
   /** Wire a streaming PageItem source through the pipeline into a

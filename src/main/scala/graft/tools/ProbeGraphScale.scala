@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * N = 200k·m nodes and E = 1M·m edges, driven through the SAME
   * [[Graph.hitsOver]] loop the declared query runs. m = 1 sits on
   * the small-graph broadcast path, m ≥ 5 crosses
-  * [[Graph.SmallGraphNodes]] onto the full shuffle path — read legs
+  * [[graft.ops.Materialize.SmallRows]] onto the full shuffle path — read legs
   * within a mode, not across the switch.
   *
   * {{{ sbt "runMain graft.tools.ProbeGraphScale 10 2" }}}

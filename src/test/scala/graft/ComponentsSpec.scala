@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.Components
+import graft.ops.{Components, Materialize}
 
 /** Connected-components scale and convergence contracts:
   *
@@ -18,7 +18,7 @@ import graft.ops.Components
 class ComponentsSpec extends SparkSpec {
 
   test("pinPairs keeps >1 partition for a large pair set") {
-    val big = spark.range(0L, Components.SmallPairs + 200000L, 1L, 8)
+    val big = spark.range(0L, Materialize.SmallRows + 200000L, 1L, 8)
       .select(col("id").as("a_id"), (col("id") + 1).as("b_id"))
     val pinned = Components.pinPairs(big)
     assert(pinned.rdd.getNumPartitions > 1,

@@ -97,7 +97,7 @@ class IngestSpec extends SparkSpec {
   test("ledger transition drives the Q3 state machine") {
     val ledger = Seq(("job-1", "queued", t0), ("job-2", "queued", t0))
       .toDF("id", "status", "updated_at")
-    val running = Ingest.transition(ledger, "job-1", "running", t1)
+    val running = Ingest.transition(ledger, $"id" === "job-1", "running", t1)
     val got = running.orderBy("id").select("status").as[String].collect()
     assert(got.toSeq === Seq("running", "queued"))
   }
@@ -107,11 +107,11 @@ class IngestSpec extends SparkSpec {
       ("job-1", "completed", t0), ("job-2", "queued", t0),
       ("job-3", "stopped", t0)).toDF("id", "status", "updated_at")
     // completed → running is not in the machine: nothing changes
-    val a = Ingest.transition(ledger, "job-1", "running", t1)
+    val a = Ingest.transition(ledger, $"id" === "job-1", "running", t1)
     assert(a.orderBy("id").select("status").as[String].collect().toSeq ===
       Seq("completed", "queued", "stopped"))
     // queued → stopping is not in the machine either (only running stops)
-    val b = Ingest.transition(ledger, "job-2", "stopping", t1)
+    val b = Ingest.transition(ledger, $"id" === "job-2", "stopping", t1)
     assert(b.filter($"id" === "job-2").select("status").as[String].head() ===
       "queued")
     assert(Ingest.ValidTransitions("stopped").isEmpty)
@@ -124,10 +124,11 @@ class IngestSpec extends SparkSpec {
       .toDF("id", "status", "updated_at")
       .withColumn("param_domain",
         when($"id" === "job-2", "other.test").otherwise("d3.test"))
-    val requested = Ingest.requestStop(ledger, $"param_domain" === "d3.test", t1)
+    val requested =
+      Ingest.transition(ledger, $"param_domain" === "d3.test", "stopping", t1)
     assert(requested.orderBy("id").select("status").as[String].collect().toSeq
       === Seq("stopping", "running", "pending", "completed"))
-    val done = Ingest.completeStops(requested, t1)
+    val done = Ingest.transition(requested, lit(true), "stopped", t1)
     assert(done.orderBy("id").select("status").as[String].collect().toSeq
       === Seq("stopped", "running", "pending", "completed"))
     // stamp only moves on the rows that transitioned

@@ -138,6 +138,55 @@ class MaterializeSpec extends SparkSpec {
     } finally spark.conf.unset(Materialize.ModeKey)
   }
 
+  test("advance releases the superseded round's pin, not a pin it only filters") {
+    def registered = spark.sparkContext.getPersistentRDDs.keySet
+    val before = registered
+    val base = Materialize.pin(sample)
+    val baseIds = registered -- before
+    // round 0 filters the base pin: it reads that pin but is not one
+    val round0 = base.filter(col("n_regionkey") < 3)
+    val round1 = Materialize.advance(round0,
+      round0.select(col("n_nationkey"), (col("n_regionkey") + 1).as("r")))
+    val round1Ids = registered -- before -- baseIds
+    assert(baseIds.nonEmpty && round1Ids.nonEmpty, "both rounds are pins")
+    assert(baseIds.subsetOf(registered),
+      "advancing past a filter released the pin it reads")
+    // round 1 is a pin, seen through a projection: round 2 releases it
+    val round2 = Materialize.advance(round1.select(col("n_nationkey"), col("r")),
+      round1.select(col("n_nationkey"), (col("r") + 1).as("r")))
+    assert((registered intersect round1Ids).isEmpty,
+      "the superseded round's pin stayed")
+    assert(round2.count() === round0.count(), "the new round outlives the old")
+    Materialize.release(round2)
+    Materialize.release(base)
+    assert((registered -- before).isEmpty)
+  }
+
+  test("a looping query leaves only the pins its answer reads") {
+    // Upper bounds: the ContextCleaner may reclaim pins early, which
+    // only lowers the count. Each bound is the number of pins the
+    // answer's plan still reads once its loop is done. A pin is a
+    // checkpointed persistent RDD; a `cache()` upstream of a loop
+    // (Dedup's shingle caches under q145) is not one.
+    val bounds = Seq(
+      "q66_pagerank" -> 1,         // the last ranks
+      "q110_hits" -> 2,            // the last authorities and hubs
+      "q145_cc_star" -> 1,         // the converged star edges
+      "q235_kmeans_tree" -> 2,     // the leaf routing and the leaf centroids
+      "q236_kcenter_coreset" -> 0) // the trace is collected: a local relation
+    def registered = spark.sparkContext.getPersistentRDDs
+      .collect { case (id, rdd) if rdd.isCheckpointed => id }.toSet
+    bounds.foreach { case (name, bound) =>
+      GraftSession.scrub(spark)
+      val before = registered
+      val answer = SparkEntry.queries(name)(spark, sfDir)
+      assert(answer.collect().nonEmpty, s"$name answered nothing")
+      val left = (registered -- before).size
+      assert(left <= bound, s"$name left $left pins; its answer reads $bound")
+    }
+    GraftSession.scrub(spark)
+  }
+
   test("release drops the pin's blocks") {
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val pinned = Materialize.pin(sample)

@@ -76,6 +76,15 @@ class ToolsSpec extends AnyFunSuite {
       "count a pin with Materialize.pinCounted instead of an Observation")
   }
 
+  test("only ops/Materialize.scala sizes and pins a loop's rounds") {
+    // loops advance with Materialize.advance or a Materialize.Sizing,
+    // so the small-round rule and its constant live in one place
+    assert(holders("def pin(") === Set("ops/Materialize.scala", "ops/package.scala"),
+      "pin a loop's rounds with Materialize.advance or Materialize.Sizing")
+    assert(holders("SmallPairs").isEmpty && holders("SmallGraphNodes").isEmpty,
+      "size a loop's rounds with Materialize.SmallRows")
+  }
+
   test("only GraftSession.scala unsets a session conf") {
     assert(holders("conf.unset(") === Set("GraftSession.scala"),
       "scope session confs with GraftSession.withConfs")

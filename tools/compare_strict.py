@@ -3,12 +3,16 @@
 
 Usage: python3 tools/compare_strict.py <outDir> <sfDir>
 
-Same protocol as compare.py (columns sorted by name, rows sorted, values
-compared) but ALSO fails when the canonicalized dtypes differ — the
-driver hashes canonicalized values, so a DuckDB HUGEINT (-> float64 /
-object in pandas) against a Spark BIGINT (int64) is a hash mismatch
-even when every value is equal.  compare.py tolerates that; this tool
-reproduces the driver's stricter behavior.
+Reads <outDir>/<name>/ parquet (Spark results) and <outDir>/oracle_sql.json,
+runs each SQL in DuckDB with views over <sfDir>/<table>.parquet (a file,
+or a Spark parquet directory from StageScaledCorpus), and compares:
+columns sorted by name, rows sorted by all columns, exact values AND
+canonicalized dtypes.  The driver hashes canonicalized values, so a
+DuckDB HUGEINT (-> float64 / object in pandas) against a Spark BIGINT
+(int64) is a hash mismatch even when every value is equal: a dtype
+mismatch FAILs.  Its line still runs the value check (numbers compared
+as float across the two dtypes) and says whether the values match, to
+tell a dtype bug from a value bug.
 
 Calibrated against the driver's own labels (CORRECTNESS_r12: 231
 queries, 229 PASS / 2 FAIL): the driver's canonicalization provably
@@ -52,6 +56,30 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
     df = df.sort_values(by=list(df.columns), ignore_index=True)
     return df
 
+def mismatched(sdf: pd.DataFrame, odf: pd.DataFrame) -> list:
+    """Columns whose values differ."""
+    bad = []
+    for c in sdf.columns:
+        a, b = sdf[c], odf[c]
+        try:
+            if pd.api.types.is_float_dtype(a) or pd.api.types.is_float_dtype(b):
+                av = a.to_numpy(dtype="float64")
+                bv = b.to_numpy(dtype="float64")
+                both_nan = np.isnan(av) & np.isnan(bv)
+                # bit-faithful: value equal AND same zero sign
+                eq = (av == bv) & (np.signbit(av) == np.signbit(bv))
+                ok = (eq | both_nan).all()
+            else:
+                # None == NaN (driver: q213) — mask all NA flavors
+                # to one sentinel before the string compare
+                a2 = a.where(a.notna(), pd.NA)
+                b2 = b.where(b.notna(), pd.NA)
+                ok = (a2.astype(str) == b2.astype(str)).all()
+        except Exception:
+            ok = False
+        if not ok: bad.append(c)
+    return bad
+
 def main():
     out_dir, sf_dir = sys.argv[1], sys.argv[2]
     con = duckdb.connect()
@@ -81,29 +109,11 @@ def main():
             print(f"FAIL {name}: rows {len(sdf)} != {len(odf)}"); n_fail += 1; continue
         dt_bad = [(c, str(sdf[c].dtype), str(odf[c].dtype))
                   for c in sdf.columns if str(sdf[c].dtype) != str(odf[c].dtype)]
+        bad = mismatched(sdf, odf)
         if dt_bad:
-            print(f"FAIL {name}: dtype mismatch {dt_bad}")
+            values = f"values differ in {bad}" if bad else "values match"
+            print(f"FAIL {name}: dtype mismatch {dt_bad} ({values})")
             n_fail += 1; continue
-        bad = []
-        for c in sdf.columns:
-            a, b = sdf[c], odf[c]
-            try:
-                if pd.api.types.is_float_dtype(a):
-                    av = a.to_numpy(dtype="float64")
-                    bv = b.to_numpy(dtype="float64")
-                    both_nan = np.isnan(av) & np.isnan(bv)
-                    # bit-faithful: value equal AND same zero sign
-                    eq = (av == bv) & (np.signbit(av) == np.signbit(bv))
-                    ok = (eq | both_nan).all()
-                else:
-                    # None == NaN (driver: q213) — mask all NA flavors
-                    # to one sentinel before the string compare
-                    a2 = a.where(a.notna(), pd.NA)
-                    b2 = b.where(b.notna(), pd.NA)
-                    ok = (a2.astype(str) == b2.astype(str)).all()
-            except Exception:
-                ok = False
-            if not ok: bad.append(c)
         if bad:
             print(f"FAIL {name}: mismatched cols {bad}")
             for c in bad[:3]:
