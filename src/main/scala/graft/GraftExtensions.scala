@@ -7,9 +7,10 @@ import graft.expressions.{DotProduct, FtsMatch, HashFeaturize, HashQueryDot, Nfc
 
 /** The engine's one session extension point: registers its native
   * SQL functions, so `spark.sql("SELECT vec_dot(a, b) ...")` works,
-  * and the planner strategy that lowers [[graft.plans.TopKPerKey]]'s
-  * marker node. [[GraftSession.builder]] installs it, so every session
-  * the engine builds, and every `newSession()` of one, carries both;
+  * and the planner strategies that lower the marker nodes of
+  * [[graft.plans.TopKPerKey]] and [[graft.plans.PageTotal]].
+  * [[GraftSession.builder]] installs it, so every session the engine
+  * builds, and every `newSession()` of one, carries both;
   * nothing is registered at call time. Outside the engine's builder:
   *
   * {{{
@@ -20,6 +21,7 @@ import graft.expressions.{DotProduct, FtsMatch, HashFeaturize, HashQueryDot, Nfc
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => graft.plans.TopKPerKey.TopKStrategy)
+    ext.injectPlannerStrategy(_ => graft.plans.PageTotal.PageTotalStrategy)
     ext.injectFunction((
       new FunctionIdentifier("vec_dot"),
       new ExpressionInfo(classOf[DotProduct].getName, "vec_dot"),

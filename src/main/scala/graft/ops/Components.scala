@@ -50,9 +50,8 @@ object Components {
     * measured 10-14 s vs ~4 s at sf0.1). */
   private[graft] def pairTable(spark: SparkSession, sfDir: String): DataFrame = {
     val t0 = System.nanoTime()
-    val pairs = pinPairs(
-      Dedup.jaccardPairsUnsorted(spark, sfDir)
-        .select(col("a_id"), col("b_id")))
+    val pairs = Dedup.pinJaccardPairs(spark, sfDir)(p =>
+      pinPairs(p.select(col("a_id"), col("b_id"))))
     System.err.println(
       f"[cc] pairs materialized in ${(System.nanoTime() - t0) / 1e9}%.2fs")
     pairs

@@ -142,31 +142,51 @@ object Dedup {
     jaccardPairsUnsorted(spark, sfDir).orderBy(col("a_id"), col("b_id"))
 
   def jaccardPairsUnsorted(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // repartition: the source is one small parquet file → one input
-    // partition; the md5-shingle computation is CPU-bound and must
-    // spread across cores. cache: the shingled docs subtree feeds the
-    // inverted index AND both sides of the verification join — without
-    // it the most expensive stage recomputes 4×.
-    val docs = corpusNear(spark, sfDir)
+    val docs = shingledDocs(spark, sfDir).cache()
+    verifiedPairs(docs, prefixes(docs).cache())
+  }
+
+  /** [[jaccardPairsUnsorted]] handed to `pin`, with both of its caches
+    * dropped once `pin` has materialized what it returns: for a
+    * consumer (the CC family's pair table) that keeps only the pinned
+    * pairs. */
+  private[graft] def pinJaccardPairs(spark: SparkSession, sfDir: String)(
+      pin: DataFrame => DataFrame): DataFrame =
+    Materialize.cached(shingledDocs(spark, sfDir)) { docs =>
+      Materialize.cached(prefixes(docs))(prefix => pin(verifiedPairs(docs, prefix)))
+    }
+
+  // repartition: the source is one small parquet file → one input
+  // partition; the md5-shingle computation is CPU-bound and must
+  // spread across cores. The shingled docs feed the inverted index AND
+  // both sides of the verification join, so callers cache them —
+  // without it the most expensive stage recomputes 4×.
+  private def shingledDocs(spark: SparkSession, sfDir: String): DataFrame =
+    corpusNear(spark, sfDir)
       .repartition(spark.sparkContext.defaultParallelism)
       .withColumn("toks", TextOps.tokens(col("text")))
       .select(col("doc_id"),
         TextOps.shingleHashesFromTokens(col("toks")).as("sh"))
       .withColumn("n_sh", size(col("sh")))
-      .cache()
+
+  /** Each doc's prefix shingles; both sides of the candidate self-join
+    * read them, so callers cache them. */
+  private def prefixes(docs: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
     val inv = docs.select(col("doc_id"), col("n_sh"),
       explode(col("sh")).as("h"))
     val dfreq = inv.groupBy(col("h")).agg(count(lit(1)).as("df"))
     // prefix length n - ceil(0.6 n) + 1, integer arithmetic
-    val prefix = inv.join(dfreq, Seq("h"))
+    inv.join(dfreq, Seq("h"))
       .withColumn("r", row_number().over(
         Window.partitionBy(col("doc_id"))
           .orderBy(col("df"), col("h"))))
       .filter(col("r") <=
         col("n_sh") - ((col("n_sh") * 6 + 9) / 10).cast("long") + 1)
       .select(col("doc_id"), col("h"))
-      .cache() // both sides of the candidate self-join
+  }
+
+  private def verifiedPairs(docs: DataFrame, prefix: DataFrame): DataFrame = {
     val cand = prefix.as("a").join(prefix.as("b"),
         col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))

@@ -19,6 +19,9 @@ import org.apache.spark.sql.functions.{broadcast, count, lit}
   * - [[using]] pins, runs a body on the pinned frame, and releases
   *   the blocks afterwards, also when the body throws.
   * - [[release]] drops a pin's blocks once nothing reads it again.
+  * - [[cached]] caches a subtree that several branches of one answer
+  *   read, runs a body that pins that answer, then drops the cache,
+  *   also when the body throws.
   * - [[advance]] moves an iterative loop (Lloyd k-means, PQ,
   *   k-center, PageRank, HITS, connected components, BPE) to its next
   *   round: it pins the new round's state, then releases the round it
@@ -82,6 +85,17 @@ object Materialize {
   def using[T](df: DataFrame)(body: DataFrame => T): T = {
     val pinned = pin(df)
     try body(pinned) finally release(pinned)
+  }
+
+  /** Cache `df`, run `body` on the cached frame, then drop the cache,
+    * also when `body` throws. Unlike [[using]], no job runs up front:
+    * the first job that reads the frame fills the cache, so a subtree
+    * that several branches (or every round of a loop) read is
+    * computed once at no extra job. As with [[using]], `body` must pin
+    * what it returns, since the cache is gone afterwards. */
+  def cached[T](df: DataFrame)(body: DataFrame => T): T = {
+    val c = df.cache()
+    try body(c) finally c.unpersist()
   }
 
   /** Pin `next`, the state of a loop's new round, and only then

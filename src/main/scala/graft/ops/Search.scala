@@ -171,18 +171,19 @@ object Search {
   /** Parameterized web-pages listing (E3): FTS predicate over the
     * null-strict `title || domain || url` concat (quirk Q5 — NULL
     * title hides the row), caller-chosen sort column (validated, id
-    * tiebreak), LIMIT/OFFSET page, plus the listing total as a
-    * separate aggregate (the reference also runs a separate COUNT
-    * query, `search.py:65-66`).
+    * tiebreak), LIMIT/OFFSET page, plus the listing total (the
+    * reference runs it as a separate COUNT query, `search.py:65-66`).
     *
-    * Scale shape: the predicate is one fused byte scan per row
+    * Scale shape: one scan and one job ([[graft.plans.PageTotal]]).
+    * The predicate is one fused byte scan per row
     * ([[graft.expressions.FtsMatch]]: no token array, stops at the
-    * first hit); the page is TakeOrderedAndProject with offset —
-    * per-partition (offset+limit)-row heaps, no single-partition
-    * global window; the total is a partial-agg count; the two meet in
-    * a 1-row broadcast cross join. The page and the total each scan
-    * the predicate: a one-pass `count(*) over ()` window would move
-    * every match into one task, the shape this note rules out.
+    * first hit). The rows that pass feed TakeOrderedAndProject with
+    * offset — per-partition (offset+limit)-row heaps, one k·P-row
+    * merge on the driver, no single-partition global window — and a
+    * `count(1)` metric on the same pass, whose value becomes the
+    * `total` column once the page is collected. No second scan, no
+    * aggregate exchange, no join. An empty page (no match, or
+    * `offset` past the total) has no rows, so it carries no total.
     * `stemmed` matches through [[TextOps.ftsMatchStemmed]] instead. */
   def listingPage(spark: SparkSession, sfDir: String, query: String,
       sortBy: String = "last_crawled", asc: Boolean = false,
@@ -192,17 +193,11 @@ object Search {
     val hay = concat(col("title"), lit(" "), col("domain"), lit(" "),
       col("url"))
     val matches = if (stemmed) TextOps.ftsMatchStemmed _ else TextOps.ftsMatch _
-    val filtered = wp.filter(matches(hay, lit(query)) === true)
     val sortCol = col(resolveSortColumn(sortBy))
-    val page = filtered
-      .orderBy(if (asc) sortCol.asc else sortCol.desc, col("id"))
-      .offset(offset).limit(limit)
-      .select(col("id"), col("url"), col("domain"), col("title"),
-        unix_timestamp(col("last_crawled")).as("crawled_s"))
-    val total = filtered.agg(count(lit(1)).as("total"))
-    page.crossJoin(broadcast(total))
-      .select(col("total"), col("id"), col("url"), col("domain"),
-        col("title"), col("crawled_s"))
+    graft.plans.PageTotal.page(wp.filter(matches(hay, lit(query)) === true),
+      Seq(if (asc) sortCol.asc else sortCol.desc, col("id")), offset, limit,
+      Seq(col("id"), col("url"), col("domain"), col("title"),
+        unix_timestamp(col("last_crawled")).as("crawled_s")))
   }
 
   /** The declared listing query: page 2 (offset 10 / limit 10) of the
@@ -236,11 +231,11 @@ object Search {
     * entirely — the query-side normalization Postgres to_tsquery
     * performs. First page, default recency sort.
     *
-    * Scale shape: same as q9 — a scan-local predicate (the fused
-    * [[graft.expressions.FtsMatch]] scan, which stems each haystack
-    * token with Porter2 and builds no token array),
-    * TakeOrderedAndProject page, partial-agg total, 1-row broadcast
-    * cross join. Stemming adds zero exchanges. */
+    * Scale shape: same as q9 — one scan and one job: a scan-local
+    * predicate (the fused [[graft.expressions.FtsMatch]] scan, which
+    * stems each haystack token with Porter2 and builds no token
+    * array) feeding the TakeOrderedAndProject page and the count
+    * metric that becomes `total`. Stemming adds zero exchanges. */
   def listingStemmed(spark: SparkSession, sfDir: String): DataFrame =
     listingPage(spark, sfDir, "widgets gearing", stemmed = true)
 

@@ -101,15 +101,6 @@ object Ingest {
         when(hit, lit(to)).otherwise(col("status")))
   }
 
-  /** Wire a streaming PageItem source through the pipeline into a
-    * parquet-backed corpus dir, one upsert-merge per micro-batch.
-    *
-    * Batch stamps are `base + batchId` millis where `base` is one
-    * past the newest `last_crawled` already in the corpus (epoch for
-    * an empty one): monotonic across batches, deterministic on
-    * within-run retry of the same batchId (idempotent merge), and
-    * never older than pre-seeded rows — so pointing the stream at a
-    * backfilled corpus cannot silently drop every update. */
   /** If a previous run died between renaming the live dir away and
     * renaming the new build in, the backup is the only copy —
     * promote it back before anyone reads. Idempotent. */
@@ -120,6 +111,15 @@ object Ingest {
     if (!fs.exists(dst) && fs.exists(old)) fs.rename(old, dst)
   }
 
+  /** Wire a streaming PageItem source through the pipeline into a
+    * parquet-backed corpus dir, one upsert-merge per micro-batch.
+    *
+    * Batch stamps are `base + batchId` millis where `base` is one
+    * past the newest `last_crawled` already in the corpus (epoch for
+    * an empty one): monotonic across batches, deterministic on
+    * within-run retry of the same batchId (idempotent merge), and
+    * never older than pre-seeded rows — so pointing the stream at a
+    * backfilled corpus cannot silently drop every update. */
   def run(spark: SparkSession, source: DataFrame, corpusDir: String,
       checkpointDir: String) = {
     val fs0 = org.apache.hadoop.fs.FileSystem.get(

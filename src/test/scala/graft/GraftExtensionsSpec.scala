@@ -1,13 +1,14 @@
 package graft
 
-import graft.plans.TopKPerKey
+import graft.ops.Search
+import graft.plans.{PageTotal, TopKPerKey}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 
 /** The engine's extensions come with the session: a session that
   * [[GraftSession.builder]] built, and every `newSession()` of it,
-  * resolves the SQL functions and plans the TopKPerKey marker with no
-  * installer call and no call-time strategy mutation. */
+  * resolves the SQL functions and plans the TopKPerKey and PageTotal
+  * markers with no installer call and no call-time strategy mutation. */
 class GraftExtensionsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("a fresh newSession() has the SQL functions and the TopKPerKey strategy") {
@@ -25,5 +26,14 @@ class GraftExtensionsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(find(plan)(_.isInstanceOf[TopKPerKey.TopKPerKeyExec]).nonEmpty,
       s"no TopKPerKeyExec in\n$plan")
     assert(fresh.experimental.extraStrategies.isEmpty)
+  }
+
+  test("a fresh newSession() plans a listing through the PageTotal strategy") {
+    val fresh = spark.newSession()
+    val page = Search.listingPage(fresh, sfDir, "widget")
+    assert(page.collect().nonEmpty)
+    val plan = page.queryExecution.executedPlan
+    assert(find(plan)(_.isInstanceOf[PageTotal.PageTotalExec]).nonEmpty,
+      s"no PageTotalExec in\n$plan")
   }
 }

@@ -165,24 +165,27 @@ class MaterializeSpec extends SparkSpec {
   test("a looping query leaves only the pins its answer reads") {
     // Upper bounds: the ContextCleaner may reclaim pins early, which
     // only lowers the count. Each bound is the number of pins the
-    // answer's plan still reads once its loop is done. A pin is a
-    // checkpointed persistent RDD; a `cache()` upstream of a loop
-    // (Dedup's shingle caches under q145) is not one.
+    // answer's plan still reads once its loop is done. Every
+    // persistent RDD counts, so a `cache()` upstream of a loop (the
+    // k-means vectors, Dedup's shingle caches under the CC family)
+    // must be dropped once the loop's pins hold the answer.
     val bounds = Seq(
+      "q41_kmeans_clusters" -> 1,  // the last centroids
+      "q53_dedup_groups" -> 1,     // the last labels
       "q66_pagerank" -> 1,         // the last ranks
       "q110_hits" -> 2,            // the last authorities and hubs
       "q145_cc_star" -> 1,         // the converged star edges
+      "q147_canonical_keep" -> 1,  // the last labels
       "q235_kmeans_tree" -> 2,     // the leaf routing and the leaf centroids
       "q236_kcenter_coreset" -> 0) // the trace is collected: a local relation
-    def registered = spark.sparkContext.getPersistentRDDs
-      .collect { case (id, rdd) if rdd.isCheckpointed => id }.toSet
+    def registered = spark.sparkContext.getPersistentRDDs.keySet.toSet
     bounds.foreach { case (name, bound) =>
       GraftSession.scrub(spark)
       val before = registered
       val answer = SparkEntry.queries(name)(spark, sfDir)
       assert(answer.collect().nonEmpty, s"$name answered nothing")
       val left = (registered -- before).size
-      assert(left <= bound, s"$name left $left pins; its answer reads $bound")
+      assert(left <= bound, s"$name left $left persistent RDDs; its answer reads $bound")
     }
     GraftSession.scrub(spark)
   }

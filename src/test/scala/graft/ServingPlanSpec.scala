@@ -1,13 +1,12 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
 import graft.expressions.{FtsMatch, HashFeaturize, HashQueryDot}
 import graft.ops.Search
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{ArrayAggregate, ArrayFilter, ArraysOverlap, Expression, StringSplit}
-import org.apache.spark.sql.execution.TakeOrderedAndProjectExec
+import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, TakeOrderedAndProjectExec}
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
 import org.apache.spark.sql.types.{ArrayType, DoubleType}
@@ -18,44 +17,22 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType}
   * row's text with one fused kernel, builds no vector column and joins
   * nothing against the query vector, snippet search stays one job, and
   * the full-text predicates of listing and snippet search scan each
-  * text once without building a token array. */
+  * text once without building a token array, and a listing page and
+  * its total come from one scan in one job. */
 class ServingPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private val builds: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "dashboard" -> Search.dashboard,
     "listingPage" -> ((s, d) => Search.listingPage(s, d, "widget")),
+    "listingStemmed" -> Search.listingStemmed,
     "semanticSearch" -> Search.semanticSearch,
     "ragContext" -> Search.ragContext,
     "snippetSearch" -> Search.snippetSearch,
     "knn1024" -> Search.knn1024)
 
-  private val oneJob = Set("semanticSearch", "ragContext", "snippetSearch",
-    "knn1024")
+  private val oneJob = Set("listingPage", "listingStemmed", "semanticSearch",
+    "ragContext", "snippetSearch", "knn1024")
   private val knn = Set("semanticSearch", "ragContext", "knn1024")
-
-  /** `body`'s result and the number of jobs it launched from this
-    * thread, counted once the listener bus has drained. */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"serving-plan-${System.nanoTime()}"
-    val n = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (Option(js.properties).exists(
-            _.getProperty("spark.jobGroup.id") == group)) n.incrementAndGet()
-    }
-    ListenerBusDrain(sc)
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, group)
-    try {
-      val r = body
-      ListenerBusDrain(sc)
-      (r, n.get)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
 
   for ((name, build) <- builds) {
     test(s"$name: a second build launches no job") {
@@ -122,6 +99,34 @@ class ServingPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         s"$name carries a vector column below the top-k:\n$plan")
       assert(collect(plan) { case j: BroadcastNestedLoopJoinExec => j }.isEmpty,
         s"$name still joins against a broadcast relation:\n$plan")
+    }
+  }
+
+  private val listings: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
+    "listing" -> Search.listing,
+    "listingPage" -> ((s, d) => Search.listingPage(s, d, "widget")),
+    "listingStemmed" -> Search.listingStemmed)
+
+  for ((name, build) <- listings) {
+    test(s"$name: the page and its total come from one scan") {
+      val df = build(spark, sfDir)
+      assert(df.collect().nonEmpty, s"$name returned no rows")
+      // the final adaptive plan, query stages included
+      val plan = df.queryExecution.executedPlan
+      val scans = collect(plan) { case s: FileSourceScanExec => s }
+      assert(scans.size == 1, s"$name scans ${scans.size} times:\n$plan")
+      // the predicate a Filter evaluates (the scan only lists it)
+      val matches = collect(plan) { case f: FilterExec => f }
+        .flatMap(_.condition.collect { case m: FtsMatch => m })
+      assert(matches.size == 1, s"$name matches ${matches.size} times:\n$plan")
+      assert(collect(plan) { case t: TakeOrderedAndProjectExec => t }.size == 1,
+        s"$name has no single top-k:\n$plan")
+      assert(collect(plan) { case w: WindowExec => w }.isEmpty,
+        s"$name uses a window:\n$plan")
+      assert(collect(plan) { case j: BroadcastNestedLoopJoinExec => j }.isEmpty,
+        s"$name joins its total to the page:\n$plan")
+      assert(collect(plan) { case e: Exchange => e }.isEmpty,
+        s"$name exchanges rows:\n$plan")
     }
   }
 }
