@@ -119,6 +119,17 @@ object Dedup {
 
   // ---- 2. n-gram Jaccard pairs ---------------------------------
 
+  /** q23 surface: the near-dup pairs in deterministic (a_id, b_id)
+    * order for the oracle hash. Consumers that don't need the order
+    * (the CC family) use [[pinJaccardPairs]] — a global sort
+    * materialized through checkpoint/collect pays the range
+    * partitioner's SAMPLING pass, which re-executes the verification
+    * join (the pipeline's most expensive uncached stage) a second
+    * time. Under q23's own `count()` the optimizer eliminates the
+    * sort, which is why q23 solo never showed the cost. */
+  def jaccardPairs(spark: SparkSession, sfDir: String): DataFrame =
+    jaccardPairsUnsorted(spark, sfDir).orderBy(col("a_id"), col("b_id"))
+
   /** Near-dup pairs by exact 3-gram Jaccard ≥ 0.6, via PREFIX
     * FILTERING (Xiao et al., "Efficient Similarity Joins for Near
     * Duplicate Detection"): rank each doc's shingles by global
@@ -130,17 +141,6 @@ object Dedup {
     * self-join explodes on frequent shingles. Verification is exact
     * (array_intersect on full shingle sets); the result set is
     * IDENTICAL to the naive algorithm. */
-  /** q23 surface: the near-dup pairs in deterministic (a_id, b_id)
-    * order for the oracle hash. Consumers that don't need the order
-    * (the CC family) use [[jaccardPairsUnsorted]] — a global sort
-    * materialized through checkpoint/collect pays the range
-    * partitioner's SAMPLING pass, which re-executes the verification
-    * join (the pipeline's most expensive uncached stage) a second
-    * time. Under q23's own `count()` the optimizer eliminates the
-    * sort, which is why q23 solo never showed the cost. */
-  def jaccardPairs(spark: SparkSession, sfDir: String): DataFrame =
-    jaccardPairsUnsorted(spark, sfDir).orderBy(col("a_id"), col("b_id"))
-
   def jaccardPairsUnsorted(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = shingledDocs(spark, sfDir).cache()
     verifiedPairs(docs, prefixes(docs).cache())

@@ -91,12 +91,6 @@ object PageTotal {
       }
     }
 
-    override def executeTake(n: Int): Array[InternalRow] =
-      executeCollect().take(n)
-
-    override def executeTail(n: Int): Array[InternalRow] =
-      executeCollect().takeRight(n)
-
     // a consumer that reads the page as an RDD (a count, a join) gets
     // the collected page as one partition: it is at most `limit` rows,
     // and an aggregate over it needs no exchange
