@@ -34,14 +34,6 @@ object Corpus {
       embedding_type: String,
       last_crawled: java.sql.Timestamp)
 
-  /** Typed view of [[webPages]] — compile-time field checks for
-    * API-boundary code; the DataFrame plan underneath is unchanged. */
-  def typedWebPages(spark: SparkSession,
-      sfDir: String): org.apache.spark.sql.Dataset[WebPage] = {
-    import spark.implicits._
-    webPages(spark, sfDir).as[WebPage]
-  }
-
   /** web_pages ← part. Purely scalar derivation → identical rows in
     * Spark and DuckDB; scales with the part table. The analyzed frame
     * is built once per session, `part` files and session confs

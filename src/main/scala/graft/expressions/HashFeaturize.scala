@@ -18,8 +18,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * each token of the lowercased input into one of `dims` signed
   * buckets, count, L2-normalize.
   *
-  * Semantically identical to the HOF formulation
-  * ([[graft.functions.Embeddings.featurizeHof]]) — same tokenizer
+  * Semantically identical to the HOF formulation (one `aggregate`
+  * per output dimension, kept in HashFeaturizeSpec) — same tokenizer
   * (the shared [[Tokenizer]] scan: maximal `[a-z0-9_]` runs of the
   * lowercased text, no token array built), same 60-bit
   * md5-prefix hash, same bucket/sign rule, same left-to-right double
@@ -180,6 +180,22 @@ object HashFeaturize {
     override def initialValue(): Array[Byte] = new Array[Byte](64)
   }
 
+  /** The engine's 60-bit hash of an md5 digest `d`: its first 15 hex
+    * digits as a non-negative long. The JVM copy of
+    * [[graft.functions.TextOps.hash60]] and of the oracle's
+    * `('0x' || substr(md5(s), 1, 15))::BIGINT`, shared by the
+    * featurizer, the hyperplane and JL planes, and streaming LSH. */
+  def hash60(d: Array[Byte]): Long = {
+    var h = 0L
+    var k = 0
+    while (k < 7) { h = (h << 8) | (d(k) & 0xffL); k += 1 }
+    (h << 4) | ((d(7) & 0xffL) >> 4)
+  }
+
+  /** [[hash60]] of the md5 of `s`'s UTF-8 bytes. */
+  def hash60(s: String): Long =
+    hash60(md5.get().digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+
   /** The hash rule, once: hash each [[Tokenizer]] token of the text,
     * add its sign into its bucket of `raw(0 until dims)`. */
   private def accumulate(s: UTF8String, raw: Array[Double], dims: Int,
@@ -195,14 +211,7 @@ object HashFeaturize {
       scan.copyTo(tok, 0)
       digest.reset()
       digest.update(tok, 0, scan.length)
-      val d = digest.digest()
-      // first 15 hex chars of md5 as a 60-bit non-negative long —
-      // identical to TextOps.hash60 / the oracle's
-      // ('0x'||substr(md5(t),1,15))::BIGINT
-      var h = 0L
-      var k = 0
-      while (k < 7) { h = (h << 8) | (d(k) & 0xffL); k += 1 }
-      h = (h << 4) | ((d(7) & 0xffL) >> 4)
+      val h = hash60(digest.digest())
       val bucket = (h % dims).toInt
       raw(bucket) += (if (((h >> 6) & 1L) == 0L) 1.0 else -1.0)
     }

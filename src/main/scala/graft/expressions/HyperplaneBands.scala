@@ -1,7 +1,5 @@
 package graft.expressions
 
-import java.security.MessageDigest
-
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
@@ -84,15 +82,8 @@ object HyperplaneBands {
   /** Sign of plane j, dimension i: +1 iff the 60-bit md5 hash of
     * "hp{j}_{i}" is even — byte-for-byte the oracle's
     * `('0x' || substr(md5('hp' || j || '_' || i), 1, 15))::BIGINT % 2`. */
-  def planeSign(j: Int, i: Int): Double = {
-    val md = MessageDigest.getInstance("MD5")
-    val d = md.digest(s"hp${j}_$i".getBytes("UTF-8"))
-    var h = 0L
-    var k = 0
-    while (k < 7) { h = (h << 8) | (d(k) & 0xffL); k += 1 }
-    h = (h << 4) | ((d(7) & 0xffL) >> 4)
-    if (h % 2 == 0) 1.0 else -1.0
-  }
+  def planeSign(j: Int, i: Int): Double =
+    if (HashFeaturize.hash60(s"hp${j}_$i") % 2 == 0) 1.0 else -1.0
 
   // (nPlanes, dims) → plane signs flattened row-major; computed once
   // per shape per JVM and shared by all tasks

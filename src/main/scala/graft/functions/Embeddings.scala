@@ -31,22 +31,6 @@ object Embeddings {
   def featurize(text: Column, dims: Int = Dims): Column =
     graft.expressions.HashFeaturize.featurize(text, dims)
 
-  /** HOF formulation of [[featurize]] — kept as the portable
-    * reference implementation. It unrolls one `aggregate` per output
-    * dimension (a dims× duplicated subtree), so it is ~3 orders of
-    * magnitude slower than the native expression at dims=64: use only
-    * for equivalence testing. */
-  def featurizeHof(text: Column, dims: Int = Dims): Column = {
-    val toks = TextOps.tokens(text)
-    val hashes = transform(toks, t => TextOps.hash60(t))
-    val raw = transform(sequence(lit(0), lit(dims - 1)), i =>
-      aggregate(hashes, lit(0.0), (acc, h) =>
-        acc + when(pmod(h, lit(dims)) === i,
-          when(pmod(shiftright(h, 6), lit(2)) === 0, lit(1.0))
-            .otherwise(lit(-1.0))).otherwise(lit(0.0))))
-    VectorOps.l2Normalize(raw)
-  }
-
   /** The reference's full chain: featurize → L2 normalize → truncate
     * or zero-pad (quirk Q1 order). */
   def embedText(text: Column, dims: Int = Dims): Column =

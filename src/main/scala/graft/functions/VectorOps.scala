@@ -68,11 +68,6 @@ object VectorOps {
       .otherwise(concat(toDouble(v),
         array_repeat(lit(0.0), lit(dims) - size(v))))
 
-  /** The reference's full embedding post-processing chain:
-    * normalize THEN truncate/pad (`tasks.py:86-88`, quirk Q1). */
-  def normalizeThenPad(v: Column, dims: Int): Column =
-    truncateOrPad(l2Normalize(v), dims)
-
   /** [[truncateOrPad]] for a DOUBLE vector whose length is statically
     * known to be ≥ dims (the featurizer's fixed model-width output):
     * one plain slice. The generic CASE variant references its input

@@ -42,12 +42,6 @@ object Benford {
       case (acc, (p, i)) => when(digit === i + 1, p).otherwise(acc)
     }
 
-  /** First significant digit of a positive amount via exact-decimal
-    * cents — never float formatting or log10 (engine-divergent at
-    * power-of-ten boundaries). */
-  private[graft] def firstDigitCents(x: Column): Column =
-    substring(round(x * 100).cast("long").cast("string"), 1, 1).cast("int")
-
   /** q214: per-priority Benford audit of order totals — observed vs
     * expected first-digit shares, per-digit χ² contributions, and the
     * stratum χ² (8 degrees of freedom; > 15.507 rejects at α=0.05). */

@@ -211,16 +211,6 @@ object Bpe {
       .orderBy(col("round"))
   }
 
-  /** SPEC-ONLY: q96's report off the sequential reference loop, for
-    * BpeSpec's batched ≡ sequential pin. */
-  private[graft] def bpeMergesSequential(spark: SparkSession,
-      sfDir: String): DataFrame = {
-    val (roundRows, _) = mergeLoopSequential(spark, sfDir)
-    import spark.implicits._
-    roundRows.toDF("round", "merge", "pair_count", "corpus_tokens")
-      .orderBy(col("round"))
-  }
-
   /** q143: tokenizer fertility by source — APPLY the learned BPE
     * segmentation to every word occurrence and report, per data
     * source, tokens-per-word (fertility) and chars-per-token. This is

@@ -67,13 +67,6 @@ object Bucketing {
       .join(spark.table(embTable).select(col("doc_id"),
         col("embedding")), Seq("doc_id"))
 
-  /** Control: the same join off plain parquet (exchanges both sides). */
-  def plainJoined(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.documents(spark, sfDir).select(col("doc_id"), col("source"))
-      .join(Tables.embeddings(spark, sfDir)
-        .select(col("vec_id").as("doc_id"), col("embedding")),
-        Seq("doc_id"))
-
   /** Per-source rollup used to compare answers across layouts. */
   def rollup(joined: DataFrame): DataFrame =
     joined.groupBy(col("source"))

@@ -20,6 +20,12 @@ import org.apache.spark.sql.functions._
   * hash-bucket joins (shingle, band, bit-prefix), which is the
   * standard 100 TB-safe shape; the verification join touches only
   * candidate pairs.
+  *
+  * Shared pieces, one home each: every candidate self-join is
+  * [[Blocking.pairs]] (SimHash bands come from [[Blocking.byteBands]]),
+  * q23 and q24 read one shingled corpus ([[shingled]]) and one exact
+  * Jaccard verification, and the JVM side of the md5 hash is
+  * [[graft.expressions.HashFeaturize.hash60]].
   */
 object Dedup {
 
@@ -142,8 +148,8 @@ object Dedup {
     * (array_intersect on full shingle sets); the result set is
     * IDENTICAL to the naive algorithm. */
   def jaccardPairsUnsorted(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs = shingledDocs(spark, sfDir).cache()
-    verifiedPairs(docs, prefixes(docs).cache())
+    val docs = shingled(spark, sfDir).cache()
+    jaccardOf(docs, prefixes(docs).cache())
   }
 
   /** [[jaccardPairsUnsorted]] handed to `pin`, with both of its caches
@@ -152,16 +158,18 @@ object Dedup {
     * pairs. */
   private[graft] def pinJaccardPairs(spark: SparkSession, sfDir: String)(
       pin: DataFrame => DataFrame): DataFrame =
-    Materialize.cached(shingledDocs(spark, sfDir)) { docs =>
-      Materialize.cached(prefixes(docs))(prefix => pin(verifiedPairs(docs, prefix)))
+    Materialize.cached(shingled(spark, sfDir)) { docs =>
+      Materialize.cached(prefixes(docs))(prefix => pin(jaccardOf(docs, prefix)))
     }
 
-  // repartition: the source is one small parquet file → one input
-  // partition; the md5-shingle computation is CPU-bound and must
-  // spread across cores. The shingled docs feed the inverted index AND
-  // both sides of the verification join, so callers cache them —
-  // without it the most expensive stage recomputes 4×.
-  private def shingledDocs(spark: SparkSession, sfDir: String): DataFrame =
+  /** The shingled near-dup corpus (doc_id, sh, n_sh), uncached. It
+    * feeds the candidate index, the signatures and both sides of the
+    * verification join, so callers cache it: without that the md5
+    * shingle stage, the pipeline's most expensive, recomputes per
+    * reader. The repartition spreads the one-file source's CPU-bound
+    * shingling across cores. Shared by q23, q24, q217 and the CC
+    * family. */
+  private[graft] def shingled(spark: SparkSession, sfDir: String): DataFrame =
     corpusNear(spark, sfDir)
       .repartition(spark.sparkContext.defaultParallelism)
       .withColumn("toks", TextOps.tokens(col("text")))
@@ -186,23 +194,24 @@ object Dedup {
       .select(col("doc_id"), col("h"))
   }
 
-  private def verifiedPairs(docs: DataFrame, prefix: DataFrame): DataFrame = {
-    val cand = prefix.as("a").join(prefix.as("b"),
-        col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
-      .distinct()
-    cand
-      .join(docs.select(col("doc_id").as("a_id"), col("sh").as("sha"),
-        col("n_sh").as("na")), Seq("a_id"))
-      .join(docs.select(col("doc_id").as("b_id"), col("sh").as("shb"),
-        col("n_sh").as("nb")), Seq("b_id"))
+  private def jaccardOf(docs: DataFrame, prefix: DataFrame): DataFrame =
+    verified(docs, Blocking.pairs(prefix, "doc_id", "h").distinct(), 0.6)
+
+  /** The exact-Jaccard verification of candidate pairs (a_id, b_id)
+    * against the shingled corpus: (a_id, b_id, jaccard) for the pairs
+    * at Jaccard ≥ `t`, q23's and q24's one verification. The shingle
+    * arrays join back once per surviving candidate. */
+  private def verified(docs: DataFrame, cand: DataFrame, t: Double): DataFrame = {
+    def side(s: String) = docs.select(col("doc_id").as(s"${s}_id"),
+      col("sh").as(s"sh$s"), col("n_sh").as(s"n$s"))
+    cand.join(side("a"), Seq("a_id")).join(side("b"), Seq("b_id"))
       .withColumn("shared", size(array_intersect(col("sha"), col("shb"))))
       // filter on the UNROUNDED ratio (mirrors the oracle, which only
       // rounds in the projection — rounding first would admit pairs in
       // [t - 5e-7, t) that the oracle rejects)
       .withColumn("jac_raw", col("shared").cast("double")
         / (col("na") + col("nb") - col("shared")))
-      .filter(col("jac_raw") >= 0.6)
+      .filter(col("jac_raw") >= t)
       .select(col("a_id"), col("b_id"), round(col("jac_raw"), 6).as("jaccard"))
   }
 
@@ -236,18 +245,6 @@ object Dedup {
 
   // ---- 3. MinHash + LSH ----------------------------------------
 
-  /** The shingled near-dup corpus (doc_id, sh), cached — feeds
-    * signatures and the verification joins; shared with the q217
-    * estimator audit. */
-  private[graft] def shingledNear(spark: SparkSession,
-      sfDir: String): DataFrame =
-    corpusNear(spark, sfDir)
-      .repartition(spark.sparkContext.defaultParallelism)
-      .withColumn("toks", TextOps.tokens(col("text")))
-      .select(col("doc_id"),
-        TextOps.shingleHashesFromTokens(col("toks")).as("sh"))
-      .cache() // feeds signatures + both verification joins
-
   /** (doc_id, sh, m0..m15): the 16-permutation signature columns. */
   private[graft] def signedOf(docs: DataFrame): DataFrame = {
     val sig = minhashCoeffs.zipWithIndex.map { case ((a, b), i) =>
@@ -272,10 +269,7 @@ object Dedup {
 
   /** Distinct candidate pairs (a_id < b_id) of an inverted index. */
   private[graft] def candOf(inv: DataFrame): DataFrame =
-    inv.as("a").join(inv.as("b"),
-        col("a.bkey") === col("b.bkey") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
-      .distinct()
+    Blocking.pairs(inv, "doc_id", "bkey").distinct()
 
   /** q24: 16-permutation MinHash signature, banded 4×4; band-bucket
     * join yields candidates, exact Jaccard ≥ 0.5 verifies. The
@@ -283,24 +277,11 @@ object Dedup {
     * property that makes near-dedup feasible at 100 TB (shuffle
     * carries signatures, not shingle sets). */
   def minhashLsh(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs = shingledNear(spark, sfDir)
-    val signed = signedOf(docs)
+    val docs = shingled(spark, sfDir).cache()
     // candidates carry only ids through the band join + distinct;
     // shingle arrays join back once per surviving pair (shuffling
     // signatures, not shingle sets — the property that scales)
-    val cand = candOf(invOf(signed))
-    val sized = docs.withColumn("n_sh", size(col("sh")))
-    cand
-      .join(sized.select(col("doc_id").as("a_id"), col("sh").as("sha"),
-        col("n_sh").as("na")), Seq("a_id"))
-      .join(sized.select(col("doc_id").as("b_id"), col("sh").as("shb"),
-        col("n_sh").as("nb")), Seq("b_id"))
-      .withColumn("shared", size(array_intersect(col("sha"), col("shb"))))
-      // unrounded filter, round only in the projection (see jaccardPairs)
-      .withColumn("jac_raw", col("shared").cast("double")
-        / (col("na") + col("nb") - col("shared")))
-      .filter(col("jac_raw") >= 0.5)
-      .select(col("a_id"), col("b_id"), round(col("jac_raw"), 6).as("jaccard"))
+    verified(docs, candOf(invOf(signedOf(docs))), 0.5)
       .orderBy(col("a_id"), col("b_id"))
   }
 
@@ -387,20 +368,11 @@ object Dedup {
       .withColumn("simhash", simhash)
       .select(col("doc_id"), col("simhash"))
       .cache() // both sides of the band self-join
-    val banded = docs.select(col("doc_id"), col("simhash"),
-      explode(array((0 until 4).map { b =>
-        struct(lit(b).as("band"),
-          shiftright(col("simhash"), 8 * b).bitwiseAND(lit(255L)).as("key"))
-      }: _*)).as("bk"))
-      .select(col("doc_id"), col("simhash"),
-        col("bk.band").as("band"), col("bk.key").as("key"))
-    banded.as("a").join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key")
-          && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
-        col("a.simhash").as("sha"), col("b.simhash").as("shb"))
+    Blocking.pairs(Blocking.byteBands(docs, "simhash", 4),
+        "doc_id", "band", "key")
       .distinct() // a pair can match in several bands
-      .withColumn("hamming", bit_count(col("sha").bitwiseXOR(col("shb"))))
+      .withColumn("hamming",
+        bit_count(col("a_simhash").bitwiseXOR(col("b_simhash"))))
       .filter(col("hamming") <= 6)
       .select(col("a_id"), col("b_id"),
         col("hamming").cast("long").as("hamming"))

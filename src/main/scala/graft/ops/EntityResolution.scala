@@ -64,10 +64,9 @@ object EntityResolution {
       .groupBy(col("name"), col("blk"))
       .agg(min(col("id")).as("gid"), count(lit(1)).as("cnt"))
       .cache()
-    val pairs = groups.as("a").join(groups.as("b"),
-        col("a.blk") === col("b.blk") && col("a.gid") < col("b.gid"))
-      .filter(levenshtein(col("a.name"), col("b.name")) <= MaxDist)
-      .select(col("a.gid").as("a"), col("b.gid").as("b"))
+    val pairs = Blocking.pairs(groups, "gid", "blk")
+      .filter(levenshtein(col("a_name"), col("b_name")) <= MaxDist)
+      .select(col("a_id").as("a"), col("b_id").as("b"))
     val edges = pairs.select(col("a").as("src"), col("b").as("dst"))
       .unionByName(pairs.select(col("b").as("src"), col("a").as("dst")))
     val labels = Components.minLabelLoop(edges, 10)

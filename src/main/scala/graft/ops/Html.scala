@@ -204,11 +204,6 @@ object Html {
       case _ => lit("{}")
     }
 
-  /** Parse a persisted structured_data blob back through the
-    * registry's StructType (the schema-on-read half of P10). */
-  def parseStructured(json: Column, schemaName: String): Column =
-    from_json(json, extractionSchemas(schemaName))
-
   /** Registry-dispatch query: ecommerce rules over the html corpus,
     * blog rules over the documents table, and an unknown schema name
     * over the same docs → `{}` rows, all through the one dispatch

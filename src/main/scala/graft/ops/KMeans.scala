@@ -195,26 +195,14 @@ object KMeans {
   private def d2c(xx: Column, x: Column, c: Column, cc: Column): Column =
     round(xx - lit(2.0) * VectorOps.dot(x, c) + cc, 9)
 
-  /** Relational assignment — kept as the parity REFERENCE shape (one
-    * row per (vector, centroid) through a broadcast join + min_by).
-    * NearestCentroidSpec pins [[assignDoc]] ≡ this on real corpora;
-    * the production path below avoids the n·K payload blowup. */
-  private[graft] def assignDocRelational(vecs: DataFrame,
-      cents: DataFrame): DataFrame =
-    vecs.crossJoin(broadcast(cents))
-      .withColumn("dist", d2c(col("xx"), col("v"), col("cv"), col("cc")))
-      .groupBy(col("vec_id"))
-      .agg(min_by(col("cid"), struct(col("dist"), col("cid"))).as("cid"),
-        first(col("v")).as("v"), first(col("xx")).as("xx"))
-
   /** Assignment via the native [[graft.expressions.NearestCentroid]]
     * argmin: the K centroids collapse to ONE broadcast row carrying
     * the centroid array, each vector row scans it in a generated-code
     * loop, and exactly one row per vector leaves the stage — no n·K
     * joined-row traffic, which is what makes K ∝ corpus (the
     * production SemDeDup/ivfflat operating point) affordable.
-    * Bit-identical to [[assignDocRelational]] by the expression's
-    * parity contract. */
+    * Bit-identical to the relational broadcast-join + min_by shape by
+    * the expression's parity contract (NearestCentroidSpec). */
   private[graft] def assignDoc(vecs: DataFrame, cents: DataFrame): DataFrame = {
     val centsRow = cents
       .agg(collect_list(struct(col("cid"), col("cv"), col("cc"))).as("cents"))
@@ -243,23 +231,6 @@ object KMeans {
       .select(kc :+
         transform(col("s"), x => round(x / col("n"), 9)).as("cv") :+
         col("n"): _*)
-      .withColumn("cc", VectorOps.dot(col("cv"), col("cv")))
-  }
-
-  /** The pre-r15 posexplode formulation of [[updateDocBy]] — parity
-    * REFERENCE for VecDecimalSumSpec's bit-equality gate. */
-  private[graft] def updateDocByExplode(assigned: DataFrame,
-      keys: Seq[String]): DataFrame = {
-    val kc = keys.map(col)
-    assigned.select(kc :+ posexplode(col("v")).as(Seq("i", "x")): _*)
-      .groupBy(kc :+ col("i"): _*)
-      .agg(round(sum(col("x").cast("decimal(28,12)")).cast("double")
-        / count(lit(1)), 9).as("m"),
-        count(lit(1)).as("nn"))
-      .groupBy(kc: _*)
-      .agg(transform(array_sort(collect_list(struct(col("i"), col("m")))),
-        s => s.getField("m")).as("cv"),
-        max(col("nn")).as("n"))
       .withColumn("cc", VectorOps.dot(col("cv"), col("cv")))
   }
 

@@ -44,24 +44,17 @@ object MinHashAudit {
 
   /** q217: per-Jaccard-band estimator-error census, contract
     * hard-asserted. */
-  def estimatorAudit(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs = Dedup.shingledNear(spark, sfDir)
+  def estimatorAudit(spark: SparkSession, sfDir: String): DataFrame =
     // cache the SIGNED relation, not just the shingles: the inverted
     // index and both pair sides consume it, and the 16-permutation
     // transform over every shingle array is the expensive part —
-    // without this boundary the signature pass runs three times
-    val signed = Dedup.signedOf(docs).cache()
-    try estimatorAuditOf(signed)
-    finally {
-      // the checkpointed census is the only thing consumed after this
-      // point — drop both pinned copies of the per-doc shingle arrays
-      // (the widest relation in the pipeline) instead of holding them
-      // for the session
-      signed.unpersist()
-      docs.unpersist()
-      ()
+    // without this boundary the signature pass runs three times. The
+    // body pins the census, the only thing read after it, so both
+    // copies of the per-doc shingle arrays (the widest relation in the
+    // pipeline) are dropped on the way out.
+    Materialize.cached(Dedup.shingled(spark, sfDir)) { docs =>
+      Materialize.cached(Dedup.signedOf(docs))(estimatorAuditOf)
     }
-  }
 
   private def estimatorAuditOf(signed: DataFrame): DataFrame = {
     val cand = Dedup.candOf(Dedup.invOf(signed))

@@ -85,20 +85,6 @@ object PQ {
         transform(col("s"), x => round(x / col("n"), 9)).as("cv"))
       .withColumn("cc", VectorOps.dot(col("cv"), col("cv")))
 
-  /** The pre-r15 posexplode formulation of [[recenter]] — parity
-    * REFERENCE for VecDecimalSumSpec's bit-equality gate. */
-  private[graft] def recenterExplode(assigned: DataFrame): DataFrame =
-    assigned
-      .select(col("m"), col("cid"), posexplode(col("sv")))
-      .toDF("m", "cid", "i", "x")
-      .groupBy(col("m"), col("cid"), col("i"))
-      .agg(round(sum(col("x").cast("decimal(28,12)")).cast("double")
-        / count(lit(1)), 9).as("mm"))
-      .groupBy(col("m"), col("cid"))
-      .agg(transform(array_sort(collect_list(struct(col("i"), col("mm")))),
-        s => s.getField("mm")).as("cv"))
-      .withColumn("cc", VectorOps.dot(col("cv"), col("cv")))
-
   /** q67: PQ-ANN — train, encode, ADC-score against query vec_id=0,
     * top-10 by approximate distance. */
   def pqAnn(spark: SparkSession, sfDir: String): DataFrame = {

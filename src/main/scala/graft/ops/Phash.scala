@@ -144,22 +144,12 @@ object Phash {
     val groups = hashes.groupBy(col("ph"))
       .agg(count(lit(1)).as("sz"))
       .cache() // both sides of the band self-join
-    val banded = groups.select(col("ph"), col("sz"),
-      explode(array((0 until Bands).map { b =>
-        struct(lit(b).as("band"),
-          shiftright(col("ph"), 8 * b).bitwiseAND(lit(255L)).as("key"))
-      }: _*)).as("bk"))
-      .select(col("ph"), col("sz"),
-        col("bk.band").as("band"), col("bk.key").as("key"))
-    val cross = banded.as("a").join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key")
-          && col("a.ph") < col("b.ph"))
-      .select(col("a.ph").as("pha"), col("b.ph").as("phb"),
-        col("a.sz").as("sza"), col("b.sz").as("szb"))
+    val cross = Blocking.pairs(Blocking.byteBands(groups, "ph", Bands),
+        "ph", "band", "key")
       .distinct() // a group pair can match in several bands
-      .withColumn("hamming", bit_count(col("pha").bitwiseXOR(col("phb"))))
+      .withColumn("hamming", bit_count(col("a_id").bitwiseXOR(col("b_id"))))
       .filter(col("hamming") <= MaxHamming)
-      .select(col("hamming"), (col("sza") * col("szb")).as("n"))
+      .select(col("hamming"), (col("a_sz") * col("b_sz")).as("n"))
     val within = groups.filter(col("sz") > 1)
       .select(lit(0).as("hamming"),
         ((col("sz") * (col("sz") - 1)) / 2).cast("long").as("n"))

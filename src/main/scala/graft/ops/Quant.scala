@@ -160,19 +160,13 @@ object Quant {
     * engine's md5 hash rule (`hash60("jl{j}_{i}") % 2` — the q27
     * hyperplane derivation with a distinct salt), rendered as
     * identical literals into both plans. */
-  lazy val jlSigns: Seq[Seq[Double]] = {
-    val md = java.security.MessageDigest.getInstance("MD5")
+  lazy val jlSigns: Seq[Seq[Double]] =
     (0 until JlK).map { j =>
       (0 until JlD).map { i =>
-        val d = md.digest(s"jl${j}_$i".getBytes("UTF-8"))
-        var h = 0L
-        var k = 0
-        while (k < 7) { h = (h << 8) | (d(k) & 0xffL); k += 1 }
-        h = (h << 4) | ((d(7) & 0xffL) >> 4)
-        if (h % 2 == 0) 1.0 else -1.0
+        if (graft.expressions.HashFeaturize.hash60(s"jl${j}_$i") % 2 == 0) 1.0
+        else -1.0
       }
     }
-  }
 
   /** q115: Johnson–Lindenstrauss random projection (Achlioptas 2003
     * database-friendly ±1 variant) of the embeddings to [[JlK]]

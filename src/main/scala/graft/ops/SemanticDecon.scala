@@ -48,11 +48,8 @@ object SemanticDecon {
     * corpus size. */
   private[graft] def censusCandPairsBipartite(train: DataFrame,
       eval: DataFrame, planes: Int, bits: Int): Long = {
-    import graft.expressions.HyperplaneBands
-    def counts(df: DataFrame, as: String) = df
-      .select(posexplode(HyperplaneBands.bands(col("v"), planes, bits)))
-      .toDF("band", "key")
-      .groupBy(col("band"), col("key")).agg(count(lit(1)).as(as))
+    def counts(df: DataFrame, as: String) =
+      Similarity.buckets(df, planes, bits).withColumnRenamed("c", as)
     counts(train, "ca").join(counts(eval, "cb"), Seq("band", "key"))
       .agg(coalesce(sum(col("ca") * col("cb")), lit(0L)).cast("long"))
       .head().getLong(0)

@@ -197,16 +197,29 @@ object Similarity {
     * band join will perform. One narrow aggregation over (band, key)
     * keys; vector payloads never leave the scan. */
   private[graft] def censusCandPairs(corpus: DataFrame,
-      planes: Int, bits: Int): Long = {
-    import graft.expressions.HyperplaneBands
-    corpus
-      .select(posexplode(HyperplaneBands.bands(col("v"), planes, bits)))
-      .toDF("band", "key")
-      .groupBy(col("band"), col("key")).agg(count(lit(1)).as("c"))
+      planes: Int, bits: Int): Long =
+    buckets(corpus, planes, bits)
       .agg(coalesce(sum(col("c") * (col("c") - 1) / 2), lit(0.0))
         .cast("long"))
       .head().getLong(0)
+
+  /** The `keep` columns of `df` with one row per band of its vector
+    * `v`'s hyperplane signature at (planes, bits): `band` (0-based)
+    * and its packed sign-bit `key`. The one place a vector is banded:
+    * the band join, both density censuses and the probe read it. */
+  private[graft] def bandRows(df: DataFrame, planes: Int, bits: Int,
+      keep: String*): DataFrame = {
+    import graft.expressions.HyperplaneBands
+    df.select(keep.map(col) :+
+        posexplode(HyperplaneBands.bands(col("v"), planes, bits)): _*)
+      .toDF(keep ++ Seq("band", "key"): _*)
   }
+
+  /** Rows per (band, key) bucket of [[bandRows]], as `c`. */
+  private[graft] def buckets(df: DataFrame, planes: Int,
+      bits: Int): DataFrame =
+    bandRows(df, planes, bits)
+      .groupBy(col("band"), col("key")).agg(count(lit(1)).as("c"))
 
   /** The one ladder walker behind every LSH density self-guard
     * (q27 self-join, q228 bipartite — the policy, the widen logging,
@@ -288,12 +301,9 @@ object Similarity {
   private[graft] def bandJoinPairs(left: DataFrame,
       right: Option[DataFrame], nPlanes: Int, bandBits: Int,
       nRows: Option[Long] = None): DataFrame = {
-    import graft.expressions.HyperplaneBands
     val nBands = nPlanes / bandBits
-    def banded(df: DataFrame): DataFrame = df
-      .select(col("vec_id"), col("v"), col("nrm"), posexplode(
-        HyperplaneBands.bands(col("v"), nPlanes, bandBits)))
-      .toDF("vec_id", "v", "nrm", "band", "key")
+    def banded(df: DataFrame) =
+      bandRows(df, nPlanes, bandBits, "vec_id", "v", "nrm")
     // Hash-build partition sizing (r12, found by the 30× probe): the
     // SHUFFLE_HASH build below holds one partition of (corpus ×
     // bands) 8 KB-vector rows IN MEMORY, and a HashedRelation build
@@ -420,19 +430,13 @@ object Similarity {
     * the census the guard decides from, the gate fails loudly. Also
     * the capacity-planning readout a production run logs: per-band
     * bucket occupancy IS the skew/volume forecast for the band join. */
-  def lshDensityCensus(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.expressions.HyperplaneBands
-    nearDupCorpus(spark, sfDir)
-      .select(posexplode(
-        HyperplaneBands.bands(col("v"), NHyperplanes, BandBits)))
-      .toDF("band", "key")
-      .groupBy(col("band"), col("key")).agg(count(lit(1)).as("c"))
+  def lshDensityCensus(spark: SparkSession, sfDir: String): DataFrame =
+    buckets(nearDupCorpus(spark, sfDir), NHyperplanes, BandBits)
       .groupBy(col("band").cast("long").as("band"))
       .agg(count(lit(1)).as("n_buckets"),
         max(col("c")).as("max_bucket"),
         sum(col("c") * (col("c") - 1) / 2).cast("long").as("cand_pairs"))
       .orderBy(col("band"))
-  }
 
   val lshDensityCensusSql: String =
     s"""WITH $lshBandsCtes,

@@ -85,12 +85,10 @@ object Stats {
     val names = base.unionByName(typos).distinct()
       .withColumn("blk", concat(substring(col("p_name"), 1, 1),
         (length(col("p_name")) / 3).cast("int")))
-    names.as("a").join(names.as("b"),
-        col("a.blk") === col("b.blk")
-          && col("a.p_name") < col("b.p_name"))
-      .withColumn("dist", levenshtein(col("a.p_name"), col("b.p_name")))
+    Blocking.pairs(names, "p_name", "blk")
+      .withColumn("dist", levenshtein(col("a_id"), col("b_id")))
       .filter(col("dist") <= 2)
-      .select(col("a.p_name").as("name_a"), col("b.p_name").as("name_b"),
+      .select(col("a_id").as("name_a"), col("b_id").as("name_b"),
         col("dist").cast("long").as("dist"))
       .orderBy(col("name_a"), col("name_b"))
   }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.expressions.Tokenizer
+import graft.expressions.{HashFeaturize, Tokenizer}
 import graft.ops.Dedup
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -19,7 +19,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * The signature math (tokenizer, 3-shingles, md5-based 60-bit
   * hashes, LCG permutation coefficients, 4×4 banding) is the SAME
   * formulation as the batch q24 — pinned by a spec that recomputes
-  * batch band keys per document and compares. Arrival order decides
+  * batch band keys per document and compares. The 60-bit md5 hash is
+  * the engine's one JVM copy ([[HashFeaturize.hash60]]); the shingler
+  * and signature stay Scala mirrors of the SQL ones until a native
+  * signature kernel serves both. Arrival order decides
   * which duplicate becomes canonical (min-id within what has been
   * seen), which is the inherent streaming-vs-retrospective gap; the
   * batch job remains the nightly ground truth.
@@ -45,14 +48,6 @@ object LshDedup {
     Tokenizer.tokenStrings(UTF8String.fromString(text), Tokenizer.useICU)
       .toSeq
 
-  /** Scala mirror of `TextOps.hash60` (first 15 md5 hex digits). */
-  def hash60(s: String): Long = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8"))
-    val hex = d.map(b => f"$b%02x").mkString.substring(0, 15)
-    java.lang.Long.parseLong(hex, 16)
-  }
-
   /** Scala mirror of `TextOps.shingleHashesFromTokens` (distinct
     * 3-gram hashes; whole text when shorter). */
   def shingleHashes(text: String): Seq[Long] = {
@@ -60,7 +55,7 @@ object LshDedup {
     val shingles =
       if (t.length < 3) Seq(t.mkString(" "))
       else t.sliding(3).map(_.mkString(" ")).toSeq
-    shingles.map(hash60).distinct
+    shingles.map(s => HashFeaturize.hash60(s)).distinct
   }
 
   /** Band keys in the exact q24 formulation: minhash under the shared

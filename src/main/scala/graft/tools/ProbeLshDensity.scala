@@ -18,13 +18,9 @@ object ProbeLshDensity {
       else graft.ops.Similarity.NHyperplanes
     val spark = graft.GraftSession.builder("32").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    import graft.expressions.HyperplaneBands
     val corpus = graft.ops.Similarity.nearDupCorpus(spark, sfDir)
     val n = corpus.count()
-    val buckets = corpus
-      .select(posexplode(HyperplaneBands.bands(col("v"), planes, bits)))
-      .toDF("band", "key")
-      .groupBy(col("band"), col("key")).agg(count(lit(1)).as("c"))
+    val buckets = graft.ops.Similarity.buckets(corpus, planes, bits)
     val stats = buckets.agg(
       count(lit(1)).as("n_buckets"),
       max(col("c")).as("max_bucket"),

@@ -7,6 +7,13 @@ import org.apache.spark.sql.functions._
 class BpeSpec extends SparkSpec {
   import spark.implicits._
 
+  /** q96's report off the sequential reference loop, for the
+    * batched ≡ sequential pin. */
+  private def bpeMergesSequential() =
+    Bpe.mergeLoopSequential(spark, sfDir)._1
+      .toDF("round", "merge", "pair_count", "corpus_tokens")
+      .orderBy(col("round"))
+
   test("replace fuses left-to-right non-overlapping — the semantics the oracle shares") {
     // chain ' a a a ': one fuse per pass, remainder deferred to later
     // rounds (DuckDB's replace() does exactly the same — probed)
@@ -54,7 +61,7 @@ class BpeSpec extends SparkSpec {
     // must learn the SAME merges, in the same order with the same
     // counts AND the same post-merge token trajectory, as the
     // spec-only strictly-sequential reference loop
-    val seq = Bpe.bpeMergesSequential(spark, sfDir).orderBy($"round")
+    val seq = bpeMergesSequential().orderBy($"round")
       .collect()
       .map(r => (r.getAs[Int]("round"), r.getAs[String]("merge"),
         r.getAs[Long]("pair_count"), r.getAs[Long]("corpus_tokens")))

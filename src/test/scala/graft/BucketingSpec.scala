@@ -6,6 +6,15 @@ import graft.ops.Bucketing
   * identical answers to the shuffled control. */
 class BucketingSpec extends SparkSpec {
 
+  /** Control: the same join off plain parquet (exchanges both sides). */
+  private def plainJoined() = {
+    import org.apache.spark.sql.functions.col
+    Tables.documents(spark, sfDir).select(col("doc_id"), col("source"))
+      .join(Tables.embeddings(spark, sfDir)
+        .select(col("vec_id").as("doc_id"), col("embedding")),
+        Seq("doc_id"))
+  }
+
   test("bucketed join plans no Exchange; plain parquet control shuffles") {
     Bucketing.writeBucketed(spark, sfDir,
       java.nio.file.Files.createTempDirectory("bucketed").toString)
@@ -21,7 +30,7 @@ class BucketingSpec extends SparkSpec {
       assert(!bp.contains("Exchange"),
         s"bucketed join still exchanges:\n$bp")
       assert(bp.contains("SortMergeJoin"), s"not a bucketed SMJ:\n$bp")
-      val plain = Bucketing.plainJoined(spark, sfDir)
+      val plain = plainJoined()
       plain.collect()
       val pp = plain.queryExecution.executedPlan.toString
       assert(pp.contains("Exchange"),

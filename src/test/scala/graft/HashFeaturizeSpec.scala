@@ -10,6 +10,22 @@ import org.scalacheck.rng.Seed
 class HashFeaturizeSpec extends SparkSpec {
   import spark.implicits._
 
+  /** The HOF formulation of `Embeddings.featurize`, the portable
+    * reference implementation. It unrolls one `aggregate` per output
+    * dimension (a dims× duplicated subtree), so it is ~3 orders of
+    * magnitude slower than the native expression at dims=64. */
+  private def featurizeHof(text: org.apache.spark.sql.Column,
+      dims: Int = Embeddings.Dims) = {
+    val hashes = transform(graft.functions.TextOps.tokens(text),
+      t => graft.functions.TextOps.hash60(t))
+    val raw = transform(sequence(lit(0), lit(dims - 1)), i =>
+      aggregate(hashes, lit(0.0), (acc, h) =>
+        acc + when(pmod(h, lit(dims)) === i,
+          when(pmod(shiftright(h, 6), lit(2)) === 0, lit(1.0))
+            .otherwise(lit(-1.0))).otherwise(lit(0.0))))
+    VectorOps.l2Normalize(raw)
+  }
+
   test("native featurizer is bit-identical to the HOF formulation") {
     // random word soups incl. casing, punctuation, digits, unicode
     val word = Gen.oneOf(
@@ -22,9 +38,21 @@ class HashFeaturizeSpec extends SparkSpec {
     val df = texts.toDF("t")
     val rows = df.select(
         Embeddings.featurize($"t").as("n"),
-        Embeddings.featurizeHof($"t").as("h"))
+        featurizeHof($"t").as("h"))
       .as[(Seq[Double], Seq[Double])].collect()
     rows.foreach { case (n, h) => assert(n === h) }
+  }
+
+  test("JVM hash60 equals TextOps.hash60 on seeded strings") {
+    def str(lo: Char, hi: Char) = Gen.listOf(Gen.choose(lo, hi)).map(_.mkString)
+    val gen = Gen.oneOf(Gen.alphaNumStr, str(' ', '~'), str('\u00a0', '\ud7ff'),
+      Gen.listOfN(2000, Gen.alphaChar).map(_.mkString))
+    val texts = (1 to 40).flatMap(i =>
+      gen.apply(Gen.Parameters.default, Seed(i.toLong))) ++
+      Seq("", " ", "café", "日本語のテキスト", "\uD83D\uDE00 emoji", "x" * 100000)
+    val engine = texts.toDF("t")
+      .select(graft.functions.TextOps.hash60($"t")).as[Long].collect()
+    assert(texts.map(s => HashFeaturize.hash60(s)) === engine.toSeq)
   }
 
   test("deterministic, unit norm (when non-empty), fixed dims") {

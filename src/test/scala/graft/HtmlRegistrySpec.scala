@@ -10,6 +10,12 @@ import org.apache.spark.sql.functions._
 class HtmlRegistrySpec extends SparkSpec {
   import spark.implicits._
 
+  /** Parse a persisted structured_data blob back through the
+    * registry's StructType (the schema-on-read half of P10). */
+  private def parseStructured(json: org.apache.spark.sql.Column,
+      schemaName: String) =
+    from_json(json, Html.extractionSchemas(schemaName))
+
   test("registry holds the reference's two named schemas") {
     assert(Html.extractionSchemas.keySet === Set("ecommerce", "blog"))
     assert(Html.extractionSchemas("blog").fieldNames.contains("post_title"))
@@ -44,7 +50,7 @@ class HtmlRegistrySpec extends SparkSpec {
     val df = Seq("lavender blue thing PROMO brand B#7").toDF("content")
     val parsed = df
       .select(Html.extractBySchema("ecommerce", $"content").as("j"))
-      .select(Html.parseStructured($"j", "ecommerce").as("s"))
+      .select(parseStructured($"j", "ecommerce").as("s"))
       .select($"s.product", $"s.category")
       .collect().head
     assert(parsed.getString(0) === "lavender blue")

@@ -1,12 +1,25 @@
 package graft
 
 import graft.expressions.NearestCentroid
+import graft.functions.VectorOps
 import graft.ops.KMeans
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Parity contract of the native nearest_centroid argmin against the
   * relational crossJoin+min_by reference shape. */
 class NearestCentroidSpec extends SparkSpec {
+
+  /** Relational assignment, the parity reference shape: one row per
+    * (vector, centroid) through a broadcast join + min_by, on the
+    * squared distance `KMeans` uses. */
+  private def assignDocRelational(vecs: DataFrame, cents: DataFrame) =
+    vecs.crossJoin(broadcast(cents))
+      .withColumn("dist", round(col("xx")
+        - lit(2.0) * VectorOps.dot(col("v"), col("cv")) + col("cc"), 9))
+      .groupBy(col("vec_id"))
+      .agg(min_by(col("cid"), struct(col("dist"), col("cid"))).as("cid"),
+        first(col("v")).as("v"), first(col("xx")).as("xx"))
 
   test("native assignment is bit-identical to the relational shape") {
     val vecs = KMeans.docVectors(spark, sfDir)
@@ -15,7 +28,7 @@ class NearestCentroidSpec extends SparkSpec {
     val native = assignedNative
       .select(col("vec_id"), col("cid")).collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val relational = KMeans.assignDocRelational(vecs, model)
+    val relational = assignDocRelational(vecs, model)
       .select(col("vec_id"), col("cid")).collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(native.size == relational.size)

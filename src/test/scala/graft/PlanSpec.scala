@@ -588,7 +588,7 @@ class PlanSpec extends SparkSpec {
     val df = ops.MinHashAudit.estimatorAudit(spark, sfDir)
     // the declared query checkpoints the census (one execution
     // serves contract + answer) — pin the pre-checkpoint pipeline
-    val docs = ops.Dedup.shingledNear(spark, sfDir)
+    val docs = ops.Dedup.shingled(spark, sfDir)
     val signed = ops.Dedup.signedOf(docs)
     val cand = ops.Dedup.candOf(ops.Dedup.invOf(signed))
     val p = plan(cand)

@@ -8,8 +8,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * boxes a primitive array result, there is one tokenizer, one
   * place each pins (ops/Materialize) and scopes session confs
   * (GraftSession.withConfs), one binding of Spark's private entry
-  * points (expressions/ColumnBridge), and extensions enter only
-  * through the session (GraftExtensions). */
+  * points (expressions/ColumnBridge), extensions enter only
+  * through the session (GraftExtensions), and one blocked self-join
+  * (ops/Blocking), one vector banding (ops/Similarity) and one JVM
+  * hash60 (expressions/HashFeaturize) serve every near-dup query. */
 class ToolsSpec extends AnyFunSuite {
 
   private def scalaFiles(root: String): Seq[java.io.File] = {
@@ -83,6 +85,24 @@ class ToolsSpec extends AnyFunSuite {
       "pin a loop's rounds with Materialize.advance or Materialize.Sizing")
     assert(holders("SmallPairs").isEmpty && holders("SmallGraphNodes").isEmpty,
       "size a loop's rounds with Materialize.SmallRows")
+  }
+
+  test("only ops/Blocking.scala self-joins on a.id < b.id") {
+    val ordered = """col\(s?"a\.[^"]*"\) < col\(s?"b\.""".r
+    val copies = sources.filter(f => ordered.findFirstIn(read(f)).isDefined)
+      .map(_.getPath.stripPrefix("src/main/scala/graft/")).toSet
+    assert(copies === Set("ops/Blocking.scala"),
+      "take blocked candidate pairs from Blocking.pairs")
+  }
+
+  test("only ops/Similarity.scala bands a vector") {
+    assert(holders("HyperplaneBands.bands(") === Set("ops/Similarity.scala"),
+      "band vectors with Similarity.bandRows or Similarity.buckets")
+  }
+
+  test("only expressions/HashFeaturize.scala assembles hash60 on the JVM") {
+    assert(holders("0xffL) >> 4") === Set("expressions/HashFeaturize.scala"),
+      "hash on the JVM with HashFeaturize.hash60")
   }
 
   test("only GraftSession.scala unsets a session conf") {

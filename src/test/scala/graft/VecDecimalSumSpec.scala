@@ -1,5 +1,6 @@
 package graft
 
+import graft.functions.VectorOps
 import graft.ops.{KMeans, PQ}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -13,6 +14,37 @@ import org.scalatest.funsuite.AnyFunSuite
 class VecDecimalSumSpec extends SparkSpec {
 
   private def bits(d: Double): Long = java.lang.Double.doubleToRawLongBits(d)
+
+  /** The pre-r15 posexplode formulation of `KMeans.updateDocBy`: the
+    * parity reference for the bit-equality gate. */
+  private def updateDocByExplode(assigned: DataFrame,
+      keys: Seq[String]): DataFrame = {
+    val kc = keys.map(col)
+    assigned.select(kc :+ posexplode(col("v")).as(Seq("i", "x")): _*)
+      .groupBy(kc :+ col("i"): _*)
+      .agg(round(sum(col("x").cast("decimal(28,12)")).cast("double")
+        / count(lit(1)), 9).as("m"),
+        count(lit(1)).as("nn"))
+      .groupBy(kc: _*)
+      .agg(transform(array_sort(collect_list(struct(col("i"), col("m")))),
+        s => s.getField("m")).as("cv"),
+        max(col("nn")).as("n"))
+      .withColumn("cc", VectorOps.dot(col("cv"), col("cv")))
+  }
+
+  /** The pre-r15 posexplode formulation of `PQ.recenter`: the parity
+    * reference for the bit-equality gate. */
+  private def recenterExplode(assigned: DataFrame): DataFrame =
+    assigned
+      .select(col("m"), col("cid"), posexplode(col("sv")))
+      .toDF("m", "cid", "i", "x")
+      .groupBy(col("m"), col("cid"), col("i"))
+      .agg(round(sum(col("x").cast("decimal(28,12)")).cast("double")
+        / count(lit(1)), 9).as("mm"))
+      .groupBy(col("m"), col("cid"))
+      .agg(transform(array_sort(collect_list(struct(col("i"), col("mm")))),
+        s => s.getField("mm")).as("cv"))
+      .withColumn("cc", VectorOps.dot(col("cv"), col("cv")))
 
   /** Collect (key → (cv bits, n)) maps and compare exactly. */
   private def assertSame(fast: DataFrame, ref: DataFrame,
@@ -41,7 +73,7 @@ class VecDecimalSumSpec extends SparkSpec {
       col("v")).localCheckpoint()
     assertSame(
       KMeans.updateDocBy(assigned, Seq("cid")),
-      KMeans.updateDocByExplode(assigned, Seq("cid")), Seq("cid"))
+      updateDocByExplode(assigned, Seq("cid")), Seq("cid"))
   }
 
   test("updateDocBy ≡ explode shape on adversarial values") {
@@ -61,7 +93,7 @@ class VecDecimalSumSpec extends SparkSpec {
     val assigned = rows.toDF("cid", "v").localCheckpoint()
     assertSame(
       KMeans.updateDocBy(assigned, Seq("cid")),
-      KMeans.updateDocByExplode(assigned, Seq("cid")), Seq("cid"))
+      updateDocByExplode(assigned, Seq("cid")), Seq("cid"))
   }
 
   test("both shapes fail loudly past decimal(28,12) precision (ANSI)") {
@@ -71,7 +103,7 @@ class VecDecimalSumSpec extends SparkSpec {
       KMeans.updateDocBy(bad, Seq("cid")).collect()
     }
     intercept[Throwable] {
-      KMeans.updateDocByExplode(bad, Seq("cid")).collect()
+      updateDocByExplode(bad, Seq("cid")).collect()
     }
   }
 
@@ -90,7 +122,7 @@ class VecDecimalSumSpec extends SparkSpec {
     val assigned = rows.toDF("cid", "v").localCheckpoint()
     assertSame(
       KMeans.updateDocBy(assigned, Seq("cid")),
-      KMeans.updateDocByExplode(assigned, Seq("cid")), Seq("cid"))
+      updateDocByExplode(assigned, Seq("cid")), Seq("cid"))
   }
 
   test("ragged vector widths fail loudly (declared contract, r16)") {
@@ -117,7 +149,7 @@ class VecDecimalSumSpec extends SparkSpec {
     val fast = PQ.recenter(assigned).collect()
       .map(r => (r.getInt(0), r.getInt(1)) ->
         (r.getSeq[Double](2).map(bits), bits(r.getDouble(3)))).toMap
-    val ref = PQ.recenterExplode(assigned).collect()
+    val ref = recenterExplode(assigned).collect()
       .map(r => (r.getInt(0), r.getInt(1)) ->
         (r.getSeq[Double](2).map(bits), bits(r.getDouble(3)))).toMap
     assert(fast.keySet == ref.keySet)

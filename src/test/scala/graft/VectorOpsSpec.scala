@@ -15,6 +15,11 @@ class VectorOpsSpec extends SparkSpec {
         .foreach(body)
     }
 
+  /** The reference's full embedding post-processing chain:
+    * normalize THEN truncate/pad (`tasks.py:86-88`, quirk Q1). */
+  private def normalizeThenPad(v: org.apache.spark.sql.Column, dims: Int) =
+    VectorOps.truncateOrPad(VectorOps.l2Normalize(v), dims)
+
   private def vec(xs: Seq[Double]) =
     Seq(Tuple1(xs)).toDF("v")
 
@@ -51,7 +56,7 @@ class VectorOpsSpec extends SparkSpec {
   test("quirk Q1: normalize-then-truncate is NOT unit norm (faithful)") {
     val v = (1 to 8).map(_.toDouble)
     val n = vec(v)
-      .select(VectorOps.l2Norm(VectorOps.normalizeThenPad($"v", 4)))
+      .select(VectorOps.l2Norm(normalizeThenPad($"v", 4)))
       .as[Double].head()
     assert(n < 1.0) // truncation after normalize drops mass
   }
